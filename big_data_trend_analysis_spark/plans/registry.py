@@ -32,11 +32,11 @@ invariant in the hash-checked set. (``sample_mixture`` left this list
 in round 10: its bucket is now the portable md5 form, so its oracle
 replays membership exactly.)
 
-``QUERIES`` insertion order is deliberate: the driver's per-round
-correctness report covers the first 50 entries, so entries without a
-green driver row yet (or changed since their last green row) are
-front-loaded; long-stable hash-verified queries rotate to the back,
-where their round-1 green rows stand as the record.
+Every ``QUERIES`` call runs its body on a child session of the
+caller's (``_in_child_sessions``): the body may set confs, register
+views and UDFs, and start streams without touching the caller's
+session, and concurrent callers on one session cannot see each
+other's settings.
 """
 
 from __future__ import annotations
@@ -99,12 +99,8 @@ def _q(op, *tables: str) -> QueryFn:
     """Wrap an operator: load its input tables, apply, return the plan."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        tune_session(spark)
         return op(*[load_table(spark, sf_dir, t) for t in tables])
 
-    # Introspection hook for tools/green_ledger.py: the rotation-policy
-    # fingerprint hashes the *operator* source, not this tiny closure.
-    run.__query_impl__ = (op, tables)
     return run
 
 
@@ -116,7 +112,6 @@ def _sentiment_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     compound = sentiment_compound(F.col("text"))
     return docs.select(
@@ -126,7 +121,7 @@ def _sentiment_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Shuffle partitions while a live-streaming drain runs. Streaming
+#: Shuffle partitions of a live-streaming drain's session. Streaming
 #: state cost scales with partition count, not data: every micro-batch
 #: commits one store (FOUR for a stream-stream join) per partition, so
 #: 32 partitions pay 100s of store commits to shuffle KBs of state.
@@ -136,22 +131,6 @@ def _sentiment_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: fixture state (≤150 keys) across cores. A cluster deployment sizes
 #: this by key cardinality instead.
 STREAM_SHUFFLE_PARTITIONS = "4"
-
-
-class _stream_partitions:
-    """Temporarily set shuffle partitions for a streaming drain."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.saved = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS
-        )
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.saved)
 
 
 def _stream_decay_trend_live(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -173,14 +152,13 @@ def _stream_decay_trend_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_from_uri,
     )
 
-    tune_session(spark)
     name = f"decay_live_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
     # kafka://host:port/topic when the deployment has a broker (+
     # spark-sql-kafka jar); unset = the container's file-replay twin.
     source = os.environ.get(EVENTS_SOURCE_ENV)
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-      with _stream_partitions(spark):
         query = (
             decay_trend_stream(stream_events_from_uri(spark, source, sf_dir))
             .writeStream.format("memory")
@@ -216,11 +194,10 @@ def _stream_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_trend_analysis_spark.streaming.jobs import dedup_events_stream
     from big_data_trend_analysis_spark.streaming.sources import stream_events
 
-    tune_session(spark)
     name = f"dedup_live_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-      with _stream_partitions(spark):
         from pyspark.sql import functions as F
 
         keyed = stream_events(spark, sf_dir).select(
@@ -278,11 +255,10 @@ def _stream_dedup_within_wm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_batched,
     )
 
-    tune_session(spark)
     name = f"dedup_wm_live_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-      with _stream_partitions(spark):
         deduped = dedup_within_watermark_stream(
             stream_events_batched(spark, sf_dir).select(
                 "user_id", "event_type", "ts"
@@ -351,11 +327,10 @@ def _stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_batched,
     )
 
-    tune_session(spark)
     name = f"late_audit_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-      with _stream_partitions(spark):
         agg = (
             stream_events_batched(spark, sf_dir)
             .withWatermark("ts", "3 days")
@@ -430,11 +405,10 @@ def _stream_enrich_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_trend_analysis_spark.streaming.jobs import enriched_window_stream
     from big_data_trend_analysis_spark.streaming.sources import stream_events
 
-    tune_session(spark)
     name = f"enrich_live_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-      with _stream_partitions(spark):
         dim = spark.createDataFrame(
             list(EVENT_TYPE_WEIGHTS), "event_type string, weight double"
         )
@@ -479,11 +453,10 @@ def _stream_sink_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from big_data_trend_analysis_spark.streaming.sources import stream_events
 
-    tune_session(spark)
     ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
     sink_dir = tempfile.mkdtemp(prefix="bdta_sink_")
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-      with _stream_partitions(spark):
         query = start_foreach_batch(
             stream_events(spark, sf_dir).select(
                 "event_id", "ts", "user_id", "event_type", "value"
@@ -531,11 +504,10 @@ def _stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_trend_analysis_spark.streaming.jobs import session_counts_stream
     from big_data_trend_analysis_spark.streaming.sources import stream_events
 
-    tune_session(spark)
     name = f"session_live_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-      with _stream_partitions(spark):
         query = (
             session_counts_stream(stream_events(spark, sf_dir))
             .writeStream.format("memory")
@@ -595,11 +567,10 @@ def _run_stream_join_drain(
     from big_data_trend_analysis_spark.streaming.jobs import purchases_after_signup
     from big_data_trend_analysis_spark.streaming.sources import stream_events
 
-    tune_session(spark)
     name = f"{prefix}_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-      with _stream_partitions(spark):
         query = (
             purchases_after_signup(
                 stream_events(spark, sf_dir),
@@ -642,11 +613,10 @@ def _stream_cms_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_trend_analysis_spark.streaming.jobs import windowed_cms_stream
     from big_data_trend_analysis_spark.streaming.sources import stream_events
 
-    tune_session(spark)
     name = f"cms_live_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-      with _stream_partitions(spark):
         query = (
             windowed_cms_stream(stream_events(spark, sf_dir), eps=0.01)
             .writeStream.format("memory")
@@ -695,7 +665,6 @@ def _sql_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan as the DataFrame API — the shipdate predicate reaches the
     parquet scan as a PushedFilter through the SQL text path too.
     """
-    tune_session(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
     return spark.sql(_SQL_Q1.format(table="lineitem_v"))
 
@@ -729,7 +698,6 @@ def _sql_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed to their scans and the top-10 planned as
     TakeOrderedAndProject — never a full sort of the join output.
     """
-    tune_session(spark)
     for t in ("customer", "orders", "lineitem"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
@@ -770,7 +738,6 @@ def _sql_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     and broadcast it onto orders/customer rather than materializing
     the full join first. Top-100 plans as TakeOrderedAndProject.
     """
-    tune_session(spark)
     for t in ("customer", "orders", "lineitem"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
@@ -815,7 +782,6 @@ def _sql_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts onto the lineitem probe; the date range pushes to the
     orders scan. The canonical "did join reordering work" query.
     """
-    tune_session(spark)
     for t in ("region", "nation", "customer", "orders", "lineitem", "supplier"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
@@ -895,7 +861,6 @@ def _partitioned_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_date_partitioned,
     )
 
-    tune_session(spark)
     events = load_table(spark, sf_dir, "events")
     path = f"/tmp/bdta_lakehouse_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[path])
@@ -933,7 +898,6 @@ def _bucketed_write_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
 
-    tune_session(spark)
     suffix = _gate_suffix(spark, sf_dir)
     t_o, t_c = f"bdta_bkt_orders_{suffix}", f"bdta_bkt_customer_{suffix}"
     # EXTERNAL tables under session-unique /tmp paths: the location is
@@ -976,7 +940,6 @@ def _multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
 
-    tune_session(spark)
     cols = ("event_id", "event_type", "value")
     # Deterministic 1-in-5 slice: the round-trip property is identical
     # at any volume, and the smaller text write keeps the bench's
@@ -1050,7 +1013,6 @@ def _sql_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, and the top-20 plans as TakeOrderedAndProject with a
     c_custkey tie-break for determinism.
     """
-    tune_session(spark)
     for t in ("customer", "orders", "lineitem", "nation"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
@@ -1090,7 +1052,6 @@ def _sql_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     range in the lineitem scan's PushedFilters), output bounded by
     |linestatus|.
     """
-    tune_session(spark)
     for t in ("orders", "lineitem"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(_SQL_Q12.format(orders="orders_v", lineitem="lineitem_v"))
@@ -1121,7 +1082,6 @@ def _sql_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     and both sums run in exact decimal so the single output row is
     order-independent to the digit.
     """
-    tune_session(spark)
     for t in ("lineitem", "part"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(_SQL_Q14.format(lineitem="lineitem_v", part="part_v"))
@@ -1158,7 +1118,6 @@ def _sql_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     set-membership question the reference answers with driver-side
     sketches (``cms_stream.py:42-47``), here as a relational semi-join.
     """
-    tune_session(spark)
     for t in ("orders", "lineitem"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(_SQL_Q4.format(orders="orders_v", lineitem="lineitem_v"))
@@ -1190,7 +1149,6 @@ def _sql_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations: per-customer counts (shuffle on custkey), then the
     O(|distinct counts|) histogram.
     """
-    tune_session(spark)
     for t in ("customer", "orders"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(_SQL_Q13.format(customer="customer_v", orders="orders_v"))
@@ -1222,7 +1180,6 @@ def _sql_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     The brand predicate broadcasts through the part join; the final
     result is a single exact-decimal scalar.
     """
-    tune_session(spark)
     for t in ("lineitem", "part"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(_SQL_Q17.format(lineitem="lineitem_v", part="part_v"))
@@ -1255,7 +1212,6 @@ def _sql_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plan_properties.py). The residual mixed-side
     disjunction evaluates post-join on the pre-pruned rows.
     """
-    tune_session(spark)
     for t in ("lineitem", "part"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(_SQL_Q19.format(lineitem="lineitem_v", part="part_v"))
@@ -1294,7 +1250,6 @@ def _sql_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi/anti/outer/correlated join-archetype set (Q4/Q13/Q17/Q22)
     VERDICT r6 named as the remaining relational gap.
     """
-    tune_session(spark)
     for t in ("customer", "orders"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(_SQL_Q22.format(customer="customer_v", orders="orders_v"))
@@ -1321,7 +1276,6 @@ def _sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes to three columns, and the exact-decimal sum folds map-side
     to one row per task.
     """
-    tune_session(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
     return spark.sql(_SQL_Q6.format(lineitem="lineitem_v"))
 
@@ -1363,7 +1317,6 @@ def _sql_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier/customer broadcast; lineitem⋈orders is the only big join,
     and the output is bounded by pairs × years.
     """
-    tune_session(spark)
     for t in ("supplier", "lineitem", "orders", "customer", "nation"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
@@ -1417,7 +1370,6 @@ def _sql_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     market-share division is exact-decimal-over-exact-decimal per
     year, so the ratio is order-independent.
     """
-    tune_session(spark)
     for t in ("part", "lineitem", "supplier", "orders", "customer", "nation", "region"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
@@ -1465,7 +1417,6 @@ def _sql_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the fixture schema (the remaining five — Q2/Q9/Q11/Q16/Q20 —
     all need the absent partsupp table).
     """
-    tune_session(spark)
     for t in ("lineitem", "supplier"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(_SQL_Q15.format(lineitem="lineitem_v", supplier="supplier_v"))
@@ -1522,7 +1473,6 @@ def _sql_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape (semi + anti over lineitem) is pinned in
     tests/test_plan_properties.py.
     """
-    tune_session(spark)
     for t in ("supplier", "lineitem", "orders", "nation"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
@@ -1554,7 +1504,6 @@ def _jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
 
-    tune_session(spark)
     # Keep Derby's log out of the (arbitrary) driver CWD.
     spark._jvm.java.lang.System.setProperty(
         "derby.stream.error.file", "/tmp/bdta_derby.log"
@@ -1610,7 +1559,6 @@ def _schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
     from big_data_trend_analysis_spark.sources.tables import read_merged_schema
 
-    tune_session(spark)
     events = load_table(spark, sf_dir, "events")
     path = f"/tmp/bdta_evolve_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[path])
@@ -1654,7 +1602,6 @@ def _file_skipping_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_date_partitioned,
     )
 
-    tune_session(spark)
     path = f"/tmp/bdta_skipchk_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[path])
     events = load_table(spark, sf_dir, "events")
@@ -1712,7 +1659,6 @@ def _zorder_skipping_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.sources.lakehouse import write_zordered
 
-    tune_session(spark)
     path = f"/tmp/bdta_zorderchk_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[path])
     events = load_table(spark, sf_dir, "events").select(
@@ -1791,7 +1737,6 @@ def _merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_date_partitioned,
     )
 
-    tune_session(spark)
     path = f"/tmp/bdta_merge_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[path])
     shutil.rmtree(path, ignore_errors=True)
@@ -1856,16 +1801,8 @@ def _merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition("p_date")
         .localCheckpoint()
     )
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prior = spark.conf.get(mode_key, None)
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        rewrite.write.mode("overwrite").partitionBy("p_date").parquet(path)
-    finally:
-        if prior is None:
-            spark.conf.unset(mode_key)
-        else:
-            spark.conf.set(mode_key, prior)
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    rewrite.write.mode("overwrite").partitionBy("p_date").parquet(path)
     written_rows = rewrite.select("p_date").distinct().collect()
     if len(written_rows) > _PARTITION_LIST_MAX:
         raise ValueError(
@@ -1929,7 +1866,6 @@ def _txn_log_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    tune_session(spark)
     root = f"/tmp/bdta_txnlog_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[root])
     shutil.rmtree(root, ignore_errors=True)
@@ -2022,7 +1958,6 @@ def _txn_log_vacuum_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
 
-    tune_session(spark)
     root = f"/tmp/bdta_txnvac_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[root])
     log = _txnlog_three_commits(spark, sf_dir, root)
@@ -2088,7 +2023,6 @@ def _txnlog_cdf_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
 
-    tune_session(spark)
     root = f"/tmp/bdta_txncdf_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[root])
     log = _txnlog_three_commits(spark, sf_dir, root)
@@ -2131,7 +2065,6 @@ def _txnlog_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    tune_session(spark)
     root = f"/tmp/bdta_txnsch_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[root])
     shutil.rmtree(root, ignore_errors=True)
@@ -2205,7 +2138,6 @@ def _txnlog_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    tune_session(spark)
     root = f"/tmp/bdta_txncc_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[root])
     shutil.rmtree(root, ignore_errors=True)
@@ -2306,7 +2238,6 @@ def _txnlog_partition_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    tune_session(spark)
     root = f"/tmp/bdta_txnpe_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[root])
     shutil.rmtree(root, ignore_errors=True)
@@ -2385,7 +2316,6 @@ def _txnlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    tune_session(spark)
     root = f"/tmp/bdta_txntt_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[root])
     shutil.rmtree(root, ignore_errors=True)
@@ -2489,14 +2419,13 @@ def _stream_cdc_apply_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_batched,
     )
 
-    tune_session(spark)
     state_path = f"/tmp/bdta_cdcstate_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[state_path])
     shutil.rmtree(state_path, ignore_errors=True)
     ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
     applied: list[int] = []
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-      with _stream_partitions(spark):
         changes = changes_from_events(stream_events_batched(spark, sf_dir))
         query = (
             changes.writeStream.foreachBatch(
@@ -2547,7 +2476,6 @@ def _python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_synthetic_source,
     )
 
-    tune_session(spark)
     register_synthetic_source(spark)
     df = (
         spark.read.format("bdta_synthetic")
@@ -2580,7 +2508,6 @@ def _udtf_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.functions import udtf
 
-    tune_session(spark)
 
     @udtf(returnType="pos int, gram string")
     class _Bigrams:
@@ -2613,11 +2540,10 @@ def _runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``bloom_filter_agg`` subquery over its join keys and pushes
     ``might_contain`` onto the probe side's SCAN, so most probe rows
     die before the shuffle instead of after it. Broadcast is disabled
-    and the thresholds opened inside a scoped conf block (broadcast
+    and the thresholds opened on the query's session (broadcast
     joins already kill the probe cost; the demonstration is for the
     shuffle-join regime where neither side broadcasts), the join
-    evaluates eagerly under those confs — restoring them BEFORE a lazy
-    return would silently un-plan the rewrite — and the physical plan
+    evaluates eagerly under those confs, and the physical plan
     is checked for ``might_contain`` on the spot: the returned
     ``bloom_planned`` column records the proof, and the oracle pins it
     TRUE. Result rows are the bounded per-returnflag aggregate.
@@ -2626,53 +2552,39 @@ def _runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
 
-    tune_session(spark)
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "10GB",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
     }
-    prior = {}
-    for k in confs:
-        try:
-            prior[k] = spark.conf.get(k)
-        except Exception:
-            prior[k] = None
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_returnflag", "l_extendedprice"
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_returnflag", "l_extendedprice"
+    )
+    urgent = (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderpriority") == "1-URGENT")
+        .select("o_orderkey")
+    )
+    agg = (
+        li.join(urgent, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("l_returnflag")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            exact_sum("l_extendedprice").alias("sum_price"),
         )
-        urgent = (
-            load_table(spark, sf_dir, "orders")
-            .filter(F.col("o_orderpriority") == "1-URGENT")
-            .select("o_orderkey")
+    )
+    plan = agg._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
         )
-        agg = (
-            li.join(urgent, F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy("l_returnflag")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                exact_sum("l_extendedprice").alias("sum_price"),
-            )
-        )
-        plan = agg._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        bloom_planned = "might_contain" in plan
-        rows = [
-            (r.l_returnflag, r.n_rows, r.sum_price, bloom_planned)
-            for r in agg.collect()
-        ]
-    finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    )
+    bloom_planned = "might_contain" in plan
+    rows = [
+        (r.l_returnflag, r.n_rows, r.sum_price, bloom_planned)
+        for r in agg.collect()
+    ]
     return spark.createDataFrame(
         rows,
         "l_returnflag string, n_rows long, sum_price double, bloom_planned boolean",
@@ -2699,7 +2611,6 @@ def _cbo_reorder_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     import re
     import shutil
 
-    tune_session(spark)
     sfx = _gate_suffix(spark, sf_dir)
     tbls = {t: f"bdta_cbo_{t}_{sfx}" for t in ("orders", "customer", "nation")}
     _cleanup_at_exit(
@@ -2733,31 +2644,15 @@ def _cbo_reorder_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                 seen.append(m)
         return seen
 
-    confs = {
-        "spark.sql.cbo.enabled": None,
-        "spark.sql.cbo.joinReorder.enabled": None,
-    }
-    prior = {}
-    for k in confs:
-        try:
-            prior[k] = spark.conf.get(k)
-        except Exception:
-            prior[k] = None
-    try:
-        for k in confs:
-            spark.conf.set(k, "false")
-        baseline = join_order(spark.sql(q))
-        for k in confs:
-            spark.conf.set(k, "true")
-        df = spark.sql(q)
-        cbo_order = join_order(df)
-        rows = [(r.n_name, r.n_orders, r.sum_price) for r in df.collect()]
-    finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    cbo_keys = ("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
+    for k in cbo_keys:
+        spark.conf.set(k, "false")
+    baseline = join_order(spark.sql(q))
+    for k in cbo_keys:
+        spark.conf.set(k, "true")
+    df = spark.sql(q)
+    cbo_order = join_order(df)
+    rows = [(r.n_name, r.n_orders, r.sum_price) for r in df.collect()]
     cbo_reordered = cbo_order != baseline and cbo_order[-1] == "orders"
     return spark.createDataFrame(
         [(*r, cbo_reordered) for r in rows],
@@ -2772,8 +2667,8 @@ def _aqe_skew_join_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A 95%-hot key is derived from events (`k = 0` unless
     ``event_id % 20 == 0``) with a uuid pad so the hot shuffle
-    partition is real megabytes, and the join runs inside a scoped
-    conf block that forces the shuffle-join regime (broadcast off)
+    partition is real megabytes, and the join runs under session
+    confs that force the shuffle-join regime (broadcast off)
     with skew thresholds scaled to fixture bytes. The input is
     repartitioned to 16 map tasks first — AQE's skew split reads
     PartialReducerPartitionSpec map-index ranges, so a single-mapper
@@ -2789,7 +2684,6 @@ def _aqe_skew_join_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    tune_session(spark)
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -2802,44 +2696,31 @@ def _aqe_skew_join_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         # test from that cost heuristic
         "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
     }
-    prior = {}
-    for k in confs:
-        try:
-            prior[k] = spark.conf.get(k)
-        except Exception:
-            prior[k] = None
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        left = (
-            load_table(spark, sf_dir, "events")
-            .repartition(16)
-            .selectExpr(
-                "CASE WHEN event_id % 20 = 0 THEN user_id % 32 "
-                "ELSE CAST(0 AS BIGINT) END AS k",
-                "uuid() AS pad",
-            )
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    left = (
+        load_table(spark, sf_dir, "events")
+        .repartition(16)
+        .selectExpr(
+            "CASE WHEN event_id % 20 = 0 THEN user_id % 32 "
+            "ELSE CAST(0 AS BIGINT) END AS k",
+            "uuid() AS pad",
         )
-        right = spark.range(32).selectExpr("id AS k", "id * 2 AS weight")
-        agg = (
-            left.join(right, "k")
-            .groupBy("k", "weight")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.length("pad")).alias("sum_pad_len"),
-            )
+    )
+    right = spark.range(32).selectExpr("id AS k", "id * 2 AS weight")
+    agg = (
+        left.join(right, "k")
+        .groupBy("k", "weight")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.length("pad")).alias("sum_pad_len"),
         )
-        out = [
-            (r.k, r.weight, r.n_rows, r.sum_pad_len) for r in agg.collect()
-        ]
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        skew_split = "skew=true" in plan
-    finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    )
+    out = [
+        (r.k, r.weight, r.n_rows, r.sum_pad_len) for r in agg.collect()
+    ]
+    plan = agg._jdf.queryExecution().executedPlan().toString()
+    skew_split = "skew=true" in plan
     return spark.createDataFrame(
         [(*r, skew_split) for r in out],
         "k long, weight long, n_rows long, sum_pad_len long, "
@@ -2869,7 +2750,6 @@ def _mor_read_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
 
-    tune_session(spark)
     path = f"/tmp/bdta_mor_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[path])
     shutil.rmtree(path, ignore_errors=True)
@@ -2930,7 +2810,6 @@ def _compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
 
-    tune_session(spark)
     path = f"/tmp/bdta_compact_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[path])
     shutil.rmtree(path, ignore_errors=True)
@@ -2994,11 +2873,10 @@ def _stateful_decay_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokens_from_text_stream,
     )
 
-    tune_session(spark)
     name = f"stateful_live_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-      with _stream_partitions(spark):
         query = (
             decayed_token_scores(
                 tokens_from_text_stream(stream_documents_batched(spark, sf_dir))
@@ -3069,17 +2947,14 @@ def _stateful_decay_live_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     except ImportError:
         scores = decayed_token_scores
 
-    tune_session(spark)
     name = f"stateful_v2_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_key, None)
     spark.conf.set(
-        provider_key,
+        "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-      with _stream_partitions(spark):
         query = (
             scores(
                 tokens_from_text_stream(stream_documents_batched(spark, sf_dir))
@@ -3094,10 +2969,6 @@ def _stateful_decay_live_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         query.awaitTermination(300)
         query.stop()
     finally:
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
         shutil.rmtree(ckpt, ignore_errors=True)
     return (
         spark.table(name)
@@ -3132,11 +3003,10 @@ def _running_counts_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_documents_batched,
     )
 
-    tune_session(spark)
     name = f"tokcounts_live_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-      with _stream_partitions(spark):
         query = (
             running_keyword_counts(stream_documents_batched(spark, sf_dir))
             .writeStream.format("memory")
@@ -3175,11 +3045,10 @@ def _stream_topk_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_batched,
     )
 
-    tune_session(spark)
     name = f"trending_live_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-      with _stream_partitions(spark):
         query = (
             trending_topk_counts(stream_events_batched(spark, sf_dir))
             .writeStream.format("memory")
@@ -3242,7 +3111,6 @@ def _stream_restart_recovery_live(spark: SparkSession, sf_dir: str) -> DataFrame
         _split_events_dir,
     )
 
-    tune_session(spark)
     split_dir = _split_events_dir(sf_dir, EVENT_STREAM_BATCHES)
     work = tempfile.mkdtemp(prefix="bdta_restart_")
     ckpt = os.path.join(work, "ckpt")
@@ -3285,8 +3153,8 @@ def _stream_restart_recovery_live(spark: SparkSession, sf_dir: str) -> DataFrame
         q.stop()
         return qid, rid, batches
 
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-      with _stream_partitions(spark):
         shutil.copy(os.path.join(split_dir, "batch0.parquet"), src)
         qid1, rid1, _ = _drain(f"restart_p1_{uuid.uuid4().hex[:12]}")
         for b in range(1, EVENT_STREAM_BATCHES):
@@ -3334,7 +3202,6 @@ def _isotonic_daily_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         isotonic_daily_fit,
     )
 
-    tune_session(spark)
     events = load_table(spark, sf_dir, "events")
     return isotonic_daily_fit(events).select(
         "event_type", "day", "y", "fit"
@@ -3376,42 +3243,41 @@ def _stream_rate_limited_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         _split_events_dir,
     )
 
-    tune_session(spark)
     split_dir = _split_events_dir(sf_dir, EVENT_STREAM_BATCHES)
     ddl = (
         "event_id long, ts timestamp, user_id long, "
         "event_type string, value double, props string"
     )
     name = f"rate_limited_{uuid.uuid4().hex[:12]}"
-    with _stream_partitions(spark):
-        ev = (
-            spark.readStream.schema(ddl)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "batch*.parquet")
-            .parquet(split_dir)
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
+    ev = (
+        spark.readStream.schema(ddl)
+        .option("maxFilesPerTrigger", "1")
+        .option("pathGlobFilter", "batch*.parquet")
+        .parquet(split_dir)
+    )
+    q = (
+        ev.groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    progress = [
+        (
+            int(p["batchId"] if isinstance(p, dict) else p.batchId),
+            int(
+                p["numInputRows"]
+                if isinstance(p, dict)
+                else p.numInputRows
+            ),
         )
-        q = (
-            ev.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        progress = [
-            (
-                int(p["batchId"] if isinstance(p, dict) else p.batchId),
-                int(
-                    p["numInputRows"]
-                    if isinstance(p, dict)
-                    else p.numInputRows
-                ),
-            )
-            for p in q.recentProgress
-        ]
-        q.stop()
+        for p in q.recentProgress
+    ]
+    q.stop()
     data_batches = sorted(n for _, n in progress if n > 0)
     ledger = spark.createDataFrame(
         [
@@ -3454,7 +3320,6 @@ def _dpp_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    tune_session(spark)
     root = f"/tmp/bdta_dpp_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[root])
     shutil.rmtree(root, ignore_errors=True)
@@ -3506,7 +3371,6 @@ def _recursive_cte_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE has the same UNION ALL semantics), so this is the
     rare gate whose Spark and oracle texts coincide.
     """
-    tune_session(spark)
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events_rcte_v")
     return spark.sql(_SQL_RCTE.format(events="events_rcte_v"))
 
@@ -3546,7 +3410,6 @@ def _sql_udf_tvf_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic stays in exact decimals so the oracle — the same
     bodies inlined by hand — matches bit-for-bit.
     """
-    tune_session(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_fn_v")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION bdta_disc_price(p DOUBLE, d DOUBLE) "
@@ -3588,7 +3451,6 @@ def _url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.functions.text import url_normalize
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     urls = docs.select(
         "doc_id",
@@ -3626,7 +3488,6 @@ def _boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     seeded = docs.select(
         "doc_id",
@@ -3657,7 +3518,6 @@ def _containment_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.operators import dedup
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     quotes = docs.filter(F.col("doc_id") % 5 == 0).select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"),
@@ -3686,7 +3546,6 @@ def _incremental_dedup_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.operators import dedup
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     archive = docs.filter(F.col("doc_id") % 5 != 0)
     exact_plants = archive.filter(F.col("doc_id") % 7 == 1).select(
@@ -3719,7 +3578,6 @@ def _mask_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.functions.text import mask_pii
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     seeded = docs.select(
         "doc_id",
@@ -3745,7 +3603,6 @@ def _lang_id_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.functions.text import lang_id_multi
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return docs.select("doc_id", lang_id_multi(F.col("text")).alias("lang_pred"))
 
@@ -3755,7 +3612,6 @@ def _split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked (the md5-bucket expression is engine-portable, so the
     oracle recomputes the EXACT membership — the audit a frozen eval
     set needs). Shuffle-free: one row-local expression."""
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return textstats.split_train_val_test(docs).select("doc_id", "split")
 
@@ -3766,7 +3622,6 @@ def _kll_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes (estimation-mode accuracy is gated separately by
     ``kll_rollup_check``). Per-group sketches merge to the __total__
     row without re-scanning — the mergeability contract itself."""
-    tune_session(spark)
     return aggregates.kll_quantile_rollup(
         load_table(spark, sf_dir, "lineitem"), k=65535
     )
@@ -3840,7 +3695,6 @@ def _sql_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from big_data_trend_analysis_spark.operators.dedup import _materialize
 
-    tune_session(spark)
     for t in ("lineitem", "part", "supplier", "nation", "region"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     _materialize(
@@ -3893,7 +3747,6 @@ def _sql_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     profit expression folds in exact DECIMAL before one cast to
     double per (nation, year) group.
     """
-    tune_session(spark)
     for t in ("lineitem", "orders", "part", "supplier", "nation"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
@@ -3955,7 +3808,6 @@ def _sql_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from big_data_trend_analysis_spark.operators.dedup import _materialize
 
-    tune_session(spark)
     for t in ("lineitem", "supplier", "nation"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     _materialize(
@@ -3999,7 +3851,6 @@ def _sql_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     partially map-side. The size IN-list and brand/type exclusions
     push to the part scan.
     """
-    tune_session(spark)
     for t in ("lineitem", "part", "supplier"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
@@ -4053,7 +3904,6 @@ def _sql_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     stock-vs-shipments compare is decimal·2 vs decimal — exact.
     Completes the 22/22 TPC-H archetype sweep.
     """
-    tune_session(spark)
     for t in ("lineitem", "part", "supplier", "nation", "region"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
@@ -4086,7 +3936,6 @@ def _window_group_limit_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as _W
 
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     w = _W.partitionBy("l_returnflag").orderBy(
         F.col("l_extendedprice").desc(),
@@ -4130,7 +3979,6 @@ def _nested_prune_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    tune_session(spark)
     root = f"/tmp/bdta_nested_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[root])
     shutil.rmtree(root, ignore_errors=True)
@@ -4179,39 +4027,25 @@ def _aqe_coalesce_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    tune_session(spark)
     confs = {
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64MB",
     }
-    prior = {}
-    for k in confs:
-        try:
-            prior[k] = spark.conf.get(k)
-        except Exception:
-            prior[k] = None
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        agg = (
-            load_table(spark, sf_dir, "events")
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("event_id").alias("sum_id"),
-            )
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    agg = (
+        load_table(spark, sf_dir, "events")
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("event_id").alias("sum_id"),
         )
-        rows = [(r.event_type, r.n_rows, r.sum_id) for r in agg.collect()]
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        plan_marker = "coalesced" in plan
-        n_parts = agg.rdd.getNumPartitions()
-    finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    )
+    rows = [(r.event_type, r.n_rows, r.sum_id) for r in agg.collect()]
+    plan = agg._jdf.queryExecution().executedPlan().toString()
+    plan_marker = "coalesced" in plan
+    n_parts = agg.rdd.getNumPartitions()
     return spark.createDataFrame(
         [(*r, plan_marker, n_parts) for r in rows],
         "event_type string, n_rows long, sum_id long, "
@@ -4242,7 +4076,6 @@ def _txnlog_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    tune_session(spark)
     root = f"/tmp/bdta_txnrestore_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[root])
     shutil.rmtree(root, ignore_errors=True)
@@ -4323,7 +4156,6 @@ def _txnlog_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    tune_session(spark)
     root = f"/tmp/bdta_txncompact_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[root])
     shutil.rmtree(root, ignore_errors=True)
@@ -4388,43 +4220,29 @@ def _aqe_join_switch_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    tune_session(spark)
     confs = {
         # static broadcast off; AQE's runtime threshold stays on
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "10MB",
     }
-    prior = {}
-    for k in confs:
-        try:
-            prior[k] = spark.conf.get(k)
-        except Exception:
-            prior[k] = None
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        events = load_table(spark, sf_dir, "events")
-        signups = (
-            events.filter(F.col("event_type") == "signup")
-            .select("user_id")
-            .distinct()
-        )
-        purchases = events.filter(F.col("event_type") == "purchase")
-        agg = purchases.join(signups, "user_id").agg(
-            F.countDistinct("user_id").alias("n_users"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("event_id").alias("sum_id"),
-        )
-        rows = [(r.n_users, r.n_rows, r.sum_id) for r in agg.collect()]
-        qe = agg._jdf.queryExecution()
-        initial_smj = "SortMergeJoin" in qe.sparkPlan().toString()
-        runtime_bhj = "BroadcastHashJoin" in qe.executedPlan().toString()
-    finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    events = load_table(spark, sf_dir, "events")
+    signups = (
+        events.filter(F.col("event_type") == "signup")
+        .select("user_id")
+        .distinct()
+    )
+    purchases = events.filter(F.col("event_type") == "purchase")
+    agg = purchases.join(signups, "user_id").agg(
+        F.countDistinct("user_id").alias("n_users"),
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum("event_id").alias("sum_id"),
+    )
+    rows = [(r.n_users, r.n_rows, r.sum_id) for r in agg.collect()]
+    qe = agg._jdf.queryExecution()
+    initial_smj = "SortMergeJoin" in qe.sparkPlan().toString()
+    runtime_bhj = "BroadcastHashJoin" in qe.executedPlan().toString()
     return spark.createDataFrame(
         [(*r, initial_smj, runtime_bhj) for r in rows],
         "n_users long, n_rows long, sum_id long, "
@@ -4453,67 +4271,53 @@ def _shuffle_reuse_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    tune_session(spark)
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
         "spark.sql.exchange.reuse": "true",
     }
-    prior = {}
-    for k in confs:
-        try:
-            prior[k] = spark.conf.get(k)
-        except Exception:
-            prior[k] = None
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        agg = (
-            load_table(spark, sf_dir, "events")
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("event_id").alias("sum_id"),
-            )
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    agg = (
+        load_table(spark, sf_dir, "events")
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("event_id").alias("sum_id"),
         )
-        # BOTH sides must consume the full aggregate output: prune one
-        # column from either side and Catalyst rewrites that subtree's
-        # aggregate, the canonicalized Exchanges stop matching, and
-        # the reuse disappears (column pruning beats exchange reuse in
-        # rule order) — so the probe doubles every measure.
-        joined = (
-            agg.alias("a")
-            .join(agg.alias("b"), "event_type")
-            .select(
-                "event_type",
-                F.col("a.n_rows").alias("n_rows"),
-                F.col("a.sum_id").alias("sum_id"),
-                (F.col("a.n_rows") + F.col("b.n_rows")).alias(
-                    "n_rows_doubled"
-                ),
-                (F.col("a.sum_id") + F.col("b.sum_id")).alias(
-                    "sum_id_doubled"
-                ),
-            )
+    )
+    # BOTH sides must consume the full aggregate output: prune one
+    # column from either side and Catalyst rewrites that subtree's
+    # aggregate, the canonicalized Exchanges stop matching, and
+    # the reuse disappears (column pruning beats exchange reuse in
+    # rule order) — so the probe doubles every measure.
+    joined = (
+        agg.alias("a")
+        .join(agg.alias("b"), "event_type")
+        .select(
+            "event_type",
+            F.col("a.n_rows").alias("n_rows"),
+            F.col("a.sum_id").alias("sum_id"),
+            (F.col("a.n_rows") + F.col("b.n_rows")).alias(
+                "n_rows_doubled"
+            ),
+            (F.col("a.sum_id") + F.col("b.sum_id")).alias(
+                "sum_id_doubled"
+            ),
         )
-        rows = [
-            (
-                r.event_type,
-                r.n_rows,
-                r.sum_id,
-                r.n_rows_doubled,
-                r.sum_id_doubled,
-            )
-            for r in joined.collect()
-        ]
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        reused = ("ReusedExchange" in plan) or ("ReusedQueryStage" in plan)
-    finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    )
+    rows = [
+        (
+            r.event_type,
+            r.n_rows,
+            r.sum_id,
+            r.n_rows_doubled,
+            r.sum_id_doubled,
+        )
+        for r in joined.collect()
+    ]
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    reused = ("ReusedExchange" in plan) or ("ReusedQueryStage" in plan)
     return spark.createDataFrame(
         [(*r, reused) for r in rows],
         "event_type string, n_rows long, sum_id long, "
@@ -4545,7 +4349,6 @@ def _txnlog_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    tune_session(spark)
     root = f"/tmp/bdta_txnstats_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[root])
     shutil.rmtree(root, ignore_errors=True)
@@ -4612,7 +4415,6 @@ def _txnlog_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    tune_session(spark)
     root = f"/tmp/bdta_txnbloom_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[root])
     shutil.rmtree(root, ignore_errors=True)
@@ -4678,7 +4480,6 @@ def _txnlog_history_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    tune_session(spark)
     root = f"/tmp/bdta_txnhist_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[root])
     shutil.rmtree(root, ignore_errors=True)
@@ -4708,153 +4509,67 @@ def _txnlog_history_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return log.history(spark)
 
 
-QUERIES: dict[str, QueryFn] = {
-    # ---- window (first 50): the driver's correctness gate reads these ----
-    # Ordering is enforced by tests/test_rotation_policy.py against
-    # tools/green_ledger.json: every entry that is new or changed since
-    # its last green driver row MUST sit inside the window.
-    # NEW in round 12 (first batch): the per-series AR-order
-    # diagnostic (pacf_daily keyed by event_type — ROADMAP frontier
-    # #2) and the general-df2 F-quantile upgrade: brown_forsythe_test
-    # now gates on F(k-1, N-k) via functions.stats.f_crit_95 (exact
-    # t^2 identity at df1=1, exact closed form at df1=2, Paulson
-    # Wilson-Hilferty inversion at df1>=3) instead of the df2->inf
-    # convention; pacf_daily re-enters for the shared
-    # _durbin_levinson_acf extraction.
+def _in_child_sessions(bodies: dict[str, QueryFn]) -> dict[str, QueryFn]:
+    """Make each query body run on a new child session of the caller's.
+
+    ``spark.newSession()`` shares the SparkContext and the table cache
+    but has its own SQLConf, temp views and UDF registry, so the confs,
+    views, UDFs and memory-sink tables a body creates stay on the child:
+    the caller's session, and any query running beside it on the same
+    session, never see them. ``tune_session`` is looked up at call time,
+    so a patched module attribute takes effect.
+    """
+
+    def isolate(body: QueryFn) -> QueryFn:
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return body(tune_session(spark.newSession()), sf_dir)
+
+        return run
+
+    return {name: isolate(body) for name, body in bodies.items()}
+
+
+QUERIES: dict[str, QueryFn] = _in_child_sessions({
     "pacf_by_type": _q(drift.pacf_by_type, "events"),
-    # NEW in round 12 (first batch): monthly-cohort cumulative LTV
-    # curves — the revenue companion to retention_cohort (ROADMAP
-    # frontier "windowed cohort LTV curves"); decimal-exact money
-    # folds, customer-keyed co-partitioned join, months^2 cell window.
     "cohort_ltv_curves": _q(temporal.cohort_ltv_curves, "orders"),
-    # NEW in round 12 (first batch): time-bounded k-step funnel —
-    # each transition must land strictly after the previous step and
-    # within the gap budget (greedy earliest-transition convention);
-    # k-1 user-keyed co-partitioned joins, 1-row output.
     "funnel_k_step": _q(temporal.funnel_k_step, "events"),
-    # NEW in round 12 (first batch): pre-test power planning — MDE at
-    # current traffic + required n per arm for a 5% lift (the question
-    # asked BEFORE ab_test_welch answers anything); one moment
-    # aggregation per type, shared z literals.
     "ab_power_mde": _q(drift.ab_power_mde, "events"),
-    # NEW in round 12 (first batch): the corpus-law readouts — Zipf
-    # rank-frequency slope (df-pruned head fit) and Heaps vocabulary
-    # growth (the range_cumsum prefix curve) — the corpus-health
-    # companions to the dedup family's per-doc signals.
     "zipf_fit_slope": _q(textstats.zipf_fit_slope, "documents"),
     "heaps_law_fit": _q(textstats.heaps_law_fit, "documents"),
-    # NEW in round 12 (first batch): the Wilson score interval (the
-    # production proportion CI) and the Wald SPRT always-valid
-    # monitor over the daily purchase share (the "can we stop yet?"
-    # companion to the fixed-horizon tests).
     "wilson_ci_proportion": _q(drift.wilson_ci_proportion, "events"),
     "sprt_monitor": _q(drift.sprt_monitor, "events"),
-    # NEW in round 12 (second batch): Adamic-Adar link prediction on
-    # the brand co-purchase graph (the "which edge appears next?"
-    # archetype completing pagerank/triangles/components) and NDCG@10
-    # retrieval evaluation over the sim_search ranking (the embedding-
-    # vs-ground-truth eval beside ann_recall_check's ANN-vs-exact).
     "adamic_adar_linkpred": _q(
         graph.adamic_adar_linkpred, "lineitem", "part"
     ),
     "ndcg_at_k": _q(similarity.ndcg_at_k, "embeddings"),
-    # NEW in round 12 (second batch): the behavioral chain's
-    # steady-state (power iteration over event_transitions' matrix —
-    # the pagerank fixed-iteration convention, π state through the
-    # pacf applyInPandas device).
     "markov_steady_state": _q(temporal.markov_steady_state, "events"),
-    # NEW in round 12 (second batch): theta-method forecasting (the
-    # M3-competition winner) — OLS trend + theta-line SES + the
-    # half-half combination, per type; the croston recursion device.
     "theta_method_forecast": _q(temporal.theta_method_forecast, "events"),
-    # NEW in round 12 (third batch): Dunn's post-hoc pairwise rank
-    # test with BH-FDR — WHICH groups differ after kruskal_wallis
-    # says some do; the KW rank machinery verbatim, pairwise z on the
-    # types^2 relation.
     "dunn_posthoc": _q(drift.dunn_posthoc, "events"),
-    # NEW in round 12 (third batch): bloom-filter file skipping — the
-    # equality-probe companion to txnlog_stats_skipping's zone maps
-    # (sources/bloom sidecar index; ninth optimizer/layout proof).
     "txnlog_bloom_skipping": _txnlog_bloom_skipping,
-    # NEW in round 12 (fourth batch): the blocked/ordered/robust rank
-    # quartet completing the k-group family — Friedman's within-block
-    # ranks (weekday blocks neutralize the seasonality kruskal_wallis
-    # pools in), Mood's median test (the 0/1 reduction that survives
-    # tails KW's rank variance can't), Cochran-Armitage (ONE df spent
-    # on the linear-in-weekday alternative), and Mann-Kendall (the
-    # significance gate over theil_sen/kendall_tau's S statistic).
     "friedman_test": _q(drift.friedman_test, "events"),
     "mood_median_test": _q(drift.mood_median_test, "events"),
     "cochran_armitage_trend": _q(drift.cochran_armitage_trend, "events"),
     "mann_kendall_trend": _q(trend.mann_kendall_trend, "events"),
-    # NEW in round 12 (sixth batch): the log-rank survival-curve
-    # comparison (the significance companion survival_km lacked),
-    # the aggregated-variance Hurst exponent (long-memory diagnostic
-    # over the daily series), the weekend odds ratio with the Woolf
-    # CI (effect size where chi_square only tests), and a multinomial
-    # naive-Bayes language classifier trained AND evaluated in one
-    # declarative plan (md5 split, Laplace counts, decimal-folded
-    # log-likelihoods, doc-keyed argmax, confusion + accuracy).
     "log_rank_test": _q(temporal.log_rank_test, "events"),
     "hurst_exponent": _q(trend.hurst_exponent, "events"),
     "odds_ratio_ci": _q(drift.odds_ratio_ci, "events"),
     "naive_bayes_lang": _q(textstats.naive_bayes_lang, "documents"),
-    # NEW in round 12 (fifth batch): fixed-iteration min-label
-    # connected components on the part co-purchase graph (the
-    # partition readout completing pagerank/triangles/adamic-adar;
-    # oracle = the <= d-hop reachability CTE), the Wald-Wolfowitz
-    # runs test (the randomness gate under the trend family), the
-    # customer-revenue Lorenz/Gini concentration (exact rank sums
-    # from range_cumsum tied blocks), and lag-1 Granger causality
-    # (nested-OLS F on exact integer moments, f_crit_95 gate).
     "connected_components": _q(graph.connected_components, "lineitem"),
     "runs_test": _q(trend.runs_test, "events"),
     "lorenz_gini": _q(aggregates.lorenz_gini, "orders"),
     "granger_check": _q(drift.granger_check, "events"),
-    # NEW in round 12 (fourth batch): Efraimidis-Spirakis weighted
-    # sampling without replacement (log-domain keys over the portable
-    # md5 bucket — the length-weighted curation sampler beside
-    # sample_mixture's per-stratum rates), blocked fuzzy entity
-    # matching (block key -> candidates -> exact levenshtein verify,
-    # the two-phase ER shape beside fuzzy_token_join's SymSpell), and
-    # exchange reuse (optimizer proof #10: one fact shuffle for a
-    # twice-referenced grouped relation).
     "weighted_sample_aes": _q(textstats.weighted_sample_aes, "documents"),
     "levenshtein_blocking": _q(dedup.levenshtein_blocking, "part"),
     "shuffle_reuse_check": _shuffle_reuse_check,
-    # NEW in round 12 (fourth batch): MRR + MAP@10 over the sim_search
-    # ranking — with ndcg_at_k the full IR eval triple (first hit /
-    # precision profile / graded list) on the embeddings fixture.
     "mrr_map_at_k": _q(similarity.mrr_map_at_k, "embeddings"),
-    # NEW in round 12 (fourth batch): rolling-origin MASE/sMAPE
-    # backtest of the naive / seasonal-naive benchmarks — the
-    # evaluation layer over the forecast family (every |error| an
-    # exact BIGINT, both MAEs ratios of integer sums).
     "forecast_backtest_mase": _q(
         temporal.forecast_backtest_mase, "events"
     ),
-    # Round-12 re-rows (window): every drift-module consumer of the
-    # promoted functions/stats.phi_upper_tail (the _phi_upper_tail
-    # delegation changed their transitive fingerprints) plus pacf's
-    # drift-side ACF relation — the ledger flags them stale, so they
-    # re-enter the driver window.
     "brown_forsythe_test": _q(drift.brown_forsythe_test, "events"),
     "pacf_daily": _q(drift.pacf_daily, "events"),
     "mann_whitney_u": _q(drift.mann_whitney_u, "events"),
-    # CHANGED in round 11 (ADVICE r10 / VERDICT directives):
-    # ab_test_welch gates on the Welch-df t quantile (t_crit_975) and
-    # emits t_crit; ks_test_check shares the new range-partitioned
-    # cumsum + NULL guard with mann_whitney_u (both re-enter);
-    # holt_linear_forecast folded onto temporal._daily_counts.
     "ab_test_welch": _q(drift.ab_test_welch, "lineitem"),
     "ks_test_check": _q(drift.ks_test_check, "events"),
-    # NEW in round 11 (second batch): the experimentation/statistics
-    # completions (Kruskal-Wallis k-group ranks, two-proportion z,
-    # Spearman co-movement, Page-Hinkley online drift, deterministic
-    # randomization test, CUPED variance reduction), the
-    # gaps-and-islands engagement archetype, and four LLM-curation
-    # additions (Gopher rules, Falcon-style paragraph dedup, CCNet
-    # perplexity buckets, DSIR importance weights).
     "kruskal_wallis": _q(drift.kruskal_wallis, "events"),
     "proportions_ztest": _q(drift.proportions_ztest, "events"),
     "spearman_daily_corr": _q(drift.spearman_daily_corr, "events"),
@@ -4868,29 +4583,13 @@ QUERIES: dict[str, QueryFn] = {
         textstats.ccnet_perplexity_buckets, "documents"
     ),
     "srm_check": _q(drift.srm_check, "events"),
-    # Window fillers (unchanged since their last green rows — the
-    # ledger certifies; they pad the 48 stale-or-new entries to the
-    # driver's 50).
     "croston_intermittent": _q(temporal.croston_intermittent, "events"),
     "funnel_time_to_convert": _q(temporal.funnel_time_to_convert, "events"),
     "kendall_tau_daily": _q(trend.kendall_tau_daily, "events"),
-    # NEW in round 11 (third batch, optimizer proofs #7/#8): rank-limit
-    # pushdown (WindowGroupLimit keeps per-group top-k heaps BEFORE the
-    # shuffle) and nested-schema pruning (untouched struct fields never
-    # reach the scan — proof-by-absence of the wide payload column).
     "window_group_limit_check": _window_group_limit_check,
     "nested_prune_check": _nested_prune_check,
     "tokenizer_fertility": _q(textstats.tokenizer_fertility, "documents"),
-    # NEW in round 11 (fourth batch): item-item cosine CF neighbors
-    # (the recommender scoring model beside copurchase_lift's
-    # association rules — its per-item top-k IS the WindowGroupLimit
-    # proof's cost model) and Brown-Forsythe variance homogeneity
-    # (the dispersion companion to kruskal_wallis; gate = the exact
-    # F(k-1, inf) quantile chi2/(k-1)).
     "item_cf_neighbors": _q(aggregates.item_cf_neighbors, "lineitem"),
-    # Rotated out in round 12 (unchanged since their round-11 green
-    # rows — the fingerprint ledger certifies; displaced by the
-    # phi_upper_tail re-rows and the round-12 batches).
     "holt_winters_dow": _q(temporal.holt_winters_dow, "events"),
     "isotonic_daily_fit": _isotonic_daily_fit,
     "stream_rate_limited_live": _stream_rate_limited_live,
@@ -4900,49 +4599,19 @@ QUERIES: dict[str, QueryFn] = {
     "dsir_importance_weights": _q(
         textstats.dsir_importance_weights, "documents"
     ),
-    # NEW in round 10: incremental dedup stage-fusion re-row (VERDICT
-    # r9 #5) and the split/curation closure re-rows sharing textstats
-    # helpers touched by the md5-bucket rework.
     "incremental_dedup_check": _incremental_dedup_check,
-    # CHANGED in round 10: copurchase_lift now emits BOTH directional
-    # confidences (ADVICE r9); triangle_count and stream_topk_live are
-    # r9-window rows carried for their round-10 ledger ingest.
-    # NEW in round 10 (second batch): TPC-H COMPLETION — Q2/Q9/Q11/
-    # Q16/Q20 were the five queries blocked on the fixture's missing
-    # partsupp table; a derived part-supplier relation (exact-decimal
-    # min line price + quantity sum) restores each query's join/
-    # subquery archetype: correlated MIN (Q2), the six-way join tree
-    # (Q9), HAVING vs a global scalar (Q11), NOT-IN + COUNT DISTINCT
-    # (Q16), nested semi-joins with a doubly-correlated scalar (Q20).
-    # All 22 TPC-H queries now run in-gate.
     "sql_tpch_q2": _sql_tpch_q2,
     "sql_tpch_q9": _sql_tpch_q9,
     "sql_tpch_q11": _sql_tpch_q11,
-    # NEW in round 10 (second batch): the statistics tier's parametric
-    # completions — closed-form OLS over the daily series (the
-    # sufficient-statistics reduction beside theil_sen_slope's robust
-    # median), the chi-square independence test with Cramér's V
-    # (categorical drift beside KS/MI), and exact-order-statistic
-    # winsorization (tail clipping beside standardize_features).
     "ols_regression_group": _q(aggregates.ols_regression_group, "events"),
     "chi_square_independence": _q(
         aggregates.chi_square_independence, "events"
     ),
     "winsorize_features": _q(aggregates.winsorize_features, "events"),
-    # NEW in round 10 (second batch): U-shaped multi-touch attribution
-    # (40/20/40 credit over full journeys — the multi-touch upgrade of
-    # attribution_last_touch) and Holt double-exponential smoothing
-    # (the sequential recurrence Catalyst can't express, applyInPandas
-    # per series, EXACT decimal steps; oracle = DuckDB RECURSIVE CTE).
     "attribution_position_based": _q(
         temporal.attribution_position_based, "events"
     ),
     "holt_linear_forecast": _q(temporal.holt_linear_forecast, "events"),
-    # NEW in round 10 (second batch): the star-schema FK audit (one
-    # declarative plan for all six edges — tall key relations, one
-    # anti-join per direction), CCNet-style normalization-aware exact
-    # dedup, and per-doc n-gram novelty (the diversity score over the
-    # dedup family's shared shingle relation).
     "referential_integrity_check": _q(
         relational.referential_integrity_check,
         "lineitem",
@@ -4954,29 +4623,11 @@ QUERIES: dict[str, QueryFn] = {
     ),
     "dedup_exact_normalized": _q(dedup.dedup_exact_normalized, "documents"),
     "ngram_novelty_score": _q(textstats.ngram_novelty_score, "documents"),
-    # NEW in round 10 (second batch): AQE post-shuffle partition
-    # coalescing proven in-gate — the FIFTH optimizer proof (runtime
-    # filter / AQE skew / CBO reorder / DPP / coalesce): plan artifact
-    # + post-merge partition count pinned.
-    # NEW in round 10 (fourth batch): the nonparametric/multiple-
-    # testing statistics (Mann–Whitney U, Ljung–Box, Benjamini–
-    # Hochberg FDR), the distributed Poisson bootstrap, rolling
-    # distinct actives, RAG-shape document chunking, exact TF-IDF
-    # cosine pair mining, and the JL sign-projection reducer.
     "ljung_box_check": _q(drift.ljung_box_check, "events"),
     "bootstrap_ci_mean": _q(aggregates.bootstrap_ci_mean, "events"),
     "rolling_active_users": _q(windows.rolling_active_users, "events"),
     "doc_chunking": _q(textstats.doc_chunking, "documents"),
     "tfidf_cosine_pairs": _q(textstats.tfidf_cosine_pairs, "documents"),
-    # ---- end of the 50-entry driver window ----
-    # (Exactly 50 entries above — ADVICE r8 #3: the marker must match
-    # green_ledger.WINDOW. Everything below is unchanged since its
-    # last green driver row, which the fingerprint ledger certifies.)
-    # Rotated out in round 11 (unchanged since their r10 green rows;
-    # fingerprint ledger certifies): the r10 third-batch rows and the
-    # r9 filler displaced by the round-11 statistics tier.
-    # Rotated out in round 12 (unchanged since their r10 green rows):
-    # displaced by the round-12 first batch.
     "sql_tpch_q16": _sql_tpch_q16,
     "sql_tpch_q20": _sql_tpch_q20,
     "aqe_coalesce_check": _aqe_coalesce_check,
@@ -5012,10 +4663,6 @@ QUERIES: dict[str, QueryFn] = {
     "txnlog_stats_skipping": _txnlog_stats_skipping,
     "txnlog_history_table": _txnlog_history_table,
     "quantile_normalization": _q(aggregates.quantile_normalization, "events"),
-    # Rotated out in round 10 (unchanged since their r9 green rows;
-    # fingerprint ledger certifies): the round-8/9 promotions and the
-    # r9 gate rows whose sources round 10 did not touch, plus the
-    # r9 fillers displaced by the fourth batch.
     "autocorr_daily": _q(drift.autocorr_daily, "events"),
     "theil_sen_slope": _q(trend.theil_sen_slope, "events"),
     "collocation_llr": _q(textstats.collocation_llr, "documents"),
@@ -5077,25 +4724,15 @@ QUERIES: dict[str, QueryFn] = {
     "compact_small_files": _compact_small_files,
     "skew_profile": _q(aggregates.skew_profile, "lineitem"),
     "user_growth_daily": _q(temporal.user_growth_daily, "events"),
-    # NEW in round 7 (third batch): Q21 double self-correlation,
-    # inverted-index build, MAD outlier detection, smoothed target
-    # encoding.
     "sql_tpch_q21": _sql_tpch_q21,
     "inverted_index_build": _q(textstats.inverted_index_build, "documents"),
     "anomaly_mad": _q(aggregates.anomaly_mad, "events"),
     "target_encoding": _q(aggregates.target_encoding, "lineitem"),
-    # NEW in round 7 (second batch): LM perplexity quality scoring,
-    # unrolled fixed-point PageRank, snapshot-diff CDC derivation,
-    # SemDeDup cluster-scoped semantic dedup.
     "unigram_perplexity": _q(textstats.unigram_perplexity, "documents"),
     "feature_binning": _q(aggregates.feature_binning, "lineitem"),
     "pagerank_fixed": _q(graph.pagerank_fixed, "events"),
     "cdc_snapshot_diff": _q(merge.cdc_snapshot_diff, "orders"),
     "stream_outer_join_live": _stream_outer_join_live,
-    # 0-7: NEW in round 7 — TPC-H join archetypes (Q4 semi, Q13 outer
-    # histogram, Q17 correlated avg, Q19 disjunctive pushdown, Q22
-    # anti + scalar subqueries), Spark-4 state stack drain, IVF+PQ
-    # serving stack, copy-on-write MERGE.
     "sql_tpch_q4": _sql_tpch_q4,
     "sql_tpch_q13": _sql_tpch_q13,
     "sql_tpch_q17": _sql_tpch_q17,
@@ -5105,8 +4742,6 @@ QUERIES: dict[str, QueryFn] = {
     "sql_tpch_q7": _sql_tpch_q7,
     "sql_tpch_q8": _sql_tpch_q8,
     "sql_tpch_q15": _sql_tpch_q15,
-    # 8-15: CHANGED in round 7 (ADVICE fixes) — negative-id planted
-    # twins, session-unique gate artifacts, skyline local prune.
     "stateful_decay_live_v2": _stateful_decay_live_v2,
     "skyline_pareto": _q(relational.skyline_pareto, "orders"),
     "dedup_minhash_check": _q(dedup.dedup_minhash_check, "documents"),
@@ -5117,13 +4752,8 @@ QUERIES: dict[str, QueryFn] = {
     "schema_evolution_read": _schema_evolution_read,
     "jdbc_roundtrip": _jdbc_roundtrip,
     "partitioned_write_roundtrip": _partitioned_write_roundtrip,
-    # stale via its check's closure (negative-id twins share helpers)
     "dedup_simhash": _q(dedup.dedup_simhash, "documents"),
-    # changed in round 7: negative-id twins applied family-wide
-    # changed in round 7: drains through the split multi-batch source
     "stream_join_live": _stream_join_live,
-    # oldest standing green (r4) rotated through for a fresh row
-    # (implementation unchanged since its last green run).
     "gapfill_locf": _q(windows.gapfill_locf, "events"),
     "trend_anomaly": _q(trend.trend_anomaly, "events"),
     "stream_session_live": _stream_session_live,
@@ -5140,9 +4770,6 @@ QUERIES: dict[str, QueryFn] = {
     "approx_distinct": _q(aggregates.approx_distinct, "documents"),
     "approx_percentile": _q(aggregates.approx_percentile_agg, "lineitem"),
     "cms_topk_sketch": _q(aggregates.cms_topk_sketch, "documents"),
-    # ---- beyond the window: fresh r4/r5/r6 green rows stand ----
-    # (displaced from the r4 rotation block to make room for the
-    # round-7 second batch; unchanged since their r4 green rows)
     "scan_project": _q(relational.scan_project, "lineitem"),
     "filter_pred": _q(relational.filter_pred, "lineitem"),
     "json_extract": _q(trend.json_extract, "events"),
@@ -5231,7 +4858,7 @@ QUERIES: dict[str, QueryFn] = {
     "rolling_median": _q(windows.rolling_median, "events"),
     "attribution_last_touch": _q(temporal.attribution_last_touch, "events"),
     "hll_merge_check": _q(aggregates.hll_merge_check, "events"),
-}
+})
 
 
 def _sql_in_list(words) -> str:

@@ -17,6 +17,7 @@ sf0.01 correctness gate keep working on a 1000-executor cluster at
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -77,14 +78,13 @@ ENGINE_CONF: dict[str, str] = {
 }
 
 
-def ship_package(spark: SparkSession) -> None:
-    """Make this package importable on executor python workers.
+#: Application ids of the SparkContexts the package was shipped to.
+_SHIPPED: set[str] = set()
+_SHIP_LOCK = threading.Lock()
 
-    Zips the package once per version into the temp dir and
-    ``addPyFile``s it — the same mechanism that ships code to a real
-    cluster's executors, so pandas-UDF/mapInPandas plans work no matter
-    where the driver process started or how workers are spawned.
-    """
+
+def _package_zip() -> str:
+    """Zip this package into the temp dir, once per source version."""
     import hashlib
     import pathlib
     import tempfile
@@ -109,24 +109,45 @@ def ship_package(spark: SparkSession) -> None:
             for py in sources:
                 zf.write(py, os.path.join(pkg_dir.name, py.relative_to(pkg_dir)))
         os.replace(tmp, zip_path)
+    return zip_path
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Make this package importable on executor python workers.
+
+    ``addPyFile``s the package zip — the same mechanism that ships code
+    to a real cluster's executors, so pandas-UDF/mapInPandas plans work
+    no matter where the driver process started or how workers are
+    spawned. Ships once per SparkContext: every ``addPyFile`` call
+    appends to the includes sent with each Python UDF and to the
+    driver's ``sys.path``, even for a zip the context already has.
+    """
     try:
-        spark.sparkContext.addPyFile(zip_path)
-    except Exception:
+        app_id = spark.sparkContext.applicationId
+    except NotImplementedError:
         # Spark Connect has no sparkContext; workers there get code via
         # the session's artifact API instead.
         try:
-            spark.addArtifacts(zip_path, pyfile=True)
+            spark.addArtifacts(_package_zip(), pyfile=True)
         except Exception:
             pass
+        return
+    with _SHIP_LOCK:
+        if app_id not in _SHIPPED:
+            spark.sparkContext.addPyFile(_package_zip())
+            _SHIPPED.add(app_id)
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine confs to an existing session.
+    """Apply runtime-settable engine confs to ``spark`` and return it.
 
-    Used when the harness hands us a session we didn't build (the
-    driver's ``entry(spark)`` contract). Only runtime-mutable confs are
-    touched; static ones (already-started executor settings) are left
-    alone.
+    Every ``QUERIES`` call applies this to its own child session
+    (``plans/registry.py``), so a query always plans under
+    ``ENGINE_CONF`` whether the caller's session was built by
+    ``get_spark`` or by any other caller, and the caller's own
+    confs are left as they are. Only runtime-mutable confs are touched;
+    static ones (already-started executor settings) are left alone.
+    The package is shipped to executors once per SparkContext.
     """
     for key, value in ENGINE_CONF.items():
         try:

@@ -673,7 +673,6 @@ HEADLINERS: dict[str, str] = {
 def main() -> None:
     spark = get_spark("plan-dump", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     sf_dir = "/root/testdata/sf0.01"
 
     out = [
@@ -687,7 +686,8 @@ def main() -> None:
     ]
     for name, commentary in HEADLINERS.items():
         df = QUERIES[name](spark, sf_dir)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        # Each query plans on its own child session: turn AQE off there.
+        df.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
         )

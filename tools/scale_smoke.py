@@ -357,9 +357,6 @@ def main() -> None:
 
     spark = get_spark("bdta-scale-smoke")
     spark.sparkContext.setLogLevel("ERROR")
-    # Let the multi-row-group synthesized files actually split: the
-    # fixture files are a few MB, far under the 128 MB default.
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(2 * 1024 * 1024))
 
     def force(df):
         df.write.format("noop").mode("overwrite").save()
