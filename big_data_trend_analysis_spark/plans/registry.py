@@ -37,10 +37,18 @@ caller's (``_in_child_sessions``): the body may set confs, register
 views and UDFs, and start streams without touching the caller's
 session, and concurrent callers on one session cannot see each
 other's settings.
+
+Every ``*_live`` streaming drain goes through one helper,
+``streaming.sinks.drain_available_now``: bounded wait (a drain that
+does not finish in ``DRAIN_TIMEOUT_S`` raises instead of returning a
+partial table), fixed shuffle width (``STREAM_SHUFFLE_PARTITIONS``),
+checkpoint removed, listeners released.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -87,6 +95,10 @@ from big_data_trend_analysis_spark.operators import (
 )
 from big_data_trend_analysis_spark.session import tune_session
 from big_data_trend_analysis_spark.sources.tables import load_table
+from big_data_trend_analysis_spark.streaming.sinks import (
+    STREAM_SHUFFLE_PARTITIONS,  # noqa: F401 - read as registry.STREAM_SHUFFLE_PARTITIONS
+    drain_available_now,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -121,18 +133,6 @@ def _sentiment_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Shuffle partitions of a live-streaming drain's session. Streaming
-#: state cost scales with partition count, not data: every micro-batch
-#: commits one store (FOUR for a stream-stream join) per partition, so
-#: 32 partitions pay 100s of store commits to shuffle KBs of state.
-#: Measured on the fixtures (round 5, sf0.1, min-of-2): the live family
-#: totals 12.8 s at 8 partitions vs 10.8 s at 4 (stream_join_live,
-#: with its 4 stores/partition, drops 3.0→2.2 s); 4 still spreads the
-#: fixture state (≤150 keys) across cores. A cluster deployment sizes
-#: this by key cardinality instead.
-STREAM_SHUFFLE_PARTITIONS = "4"
-
-
 def _stream_decay_trend_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real Structured Streaming execution inside the correctness gate.
 
@@ -142,9 +142,6 @@ def _stream_decay_trend_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     its batch twin. Checkpoint/table names are unique per invocation.
     """
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from big_data_trend_analysis_spark.streaming.jobs import decay_trend_stream
     from big_data_trend_analysis_spark.streaming.sources import (
@@ -152,27 +149,13 @@ def _stream_decay_trend_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_from_uri,
     )
 
-    name = f"decay_live_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
     # kafka://host:port/topic when the deployment has a broker (+
     # spark-sql-kafka jar); unset = the container's file-replay twin.
     source = os.environ.get(EVENTS_SOURCE_ENV)
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            decay_trend_stream(stream_events_from_uri(spark, source, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        query.stop()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    return drain_available_now(
+        decay_trend_stream(stream_events_from_uri(spark, source, sf_dir)),
+        "complete",
+    ).table
 
 
 def _stream_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -187,43 +170,23 @@ def _stream_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the oracle is plain ``SELECT DISTINCT`` — pinning that streaming
     dedup state converges to exactly the batch-distinct answer.
     """
-    import shutil
-    import tempfile
-    import uuid
+    from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.streaming.jobs import dedup_events_stream
     from big_data_trend_analysis_spark.streaming.sources import stream_events
 
-    name = f"dedup_live_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        from pyspark.sql import functions as F
-
-        keyed = stream_events(spark, sf_dir).select(
-            "user_id",
-            "event_type",
-            F.date_trunc("hour", F.col("ts")).alias("ts_hour"),
-        )
-        deduped = dedup_events_stream(
-            keyed,
-            watermark="4 hours",
-            keys=("user_id", "event_type", "ts_hour"),
-            ts_col="ts_hour",
-        )
-        query = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        query.stop()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    keyed = stream_events(spark, sf_dir).select(
+        "user_id",
+        "event_type",
+        F.date_trunc("hour", F.col("ts")).alias("ts_hour"),
+    )
+    deduped = dedup_events_stream(
+        keyed,
+        watermark="4 hours",
+        keys=("user_id", "event_type", "ts_hour"),
+        ts_col="ts_hour",
+    )
+    return drain_available_now(deduped).table
 
 
 def _stream_dedup_within_wm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,10 +207,6 @@ def _stream_dedup_within_wm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse against batch-1 state — the cross-batch semantics this
     API exists for, not the single-batch degenerate case.
     """
-    import shutil
-    import tempfile
-    import uuid
-
     from big_data_trend_analysis_spark.streaming.jobs import (
         dedup_within_watermark_stream,
     )
@@ -255,31 +214,13 @@ def _stream_dedup_within_wm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_batched,
     )
 
-    name = f"dedup_wm_live_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        deduped = dedup_within_watermark_stream(
-            stream_events_batched(spark, sf_dir).select(
-                "user_id", "event_type", "ts"
-            ),
-            watermark="30 days",
-            keys=("user_id", "event_type"),
-            ts_col="ts",
-        ).select("user_id", "event_type")
-        query = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        query.stop()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    deduped = dedup_within_watermark_stream(
+        stream_events_batched(spark, sf_dir).select("user_id", "event_type", "ts"),
+        watermark="30 days",
+        keys=("user_id", "event_type"),
+        ts_col="ts",
+    ).select("user_id", "event_type")
+    return drain_available_now(deduped).table
 
 
 def _stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -316,53 +257,31 @@ def _stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stops lagging, or a leak of late rows into state each flips a
     different pinned value.
     """
-    import json
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.streaming.sources import (
         stream_events_batched,
     )
 
-    name = f"late_audit_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        agg = (
-            stream_events_batched(spark, sf_dir)
-            .withWatermark("ts", "3 days")
-            .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_ontime"))
+    agg = (
+        stream_events_batched(spark, sf_dir)
+        .withWatermark("ts", "3 days")
+        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_ontime"))
+    )
+    table, progress = drain_available_now(agg)
+    audits = [
+        (
+            int(p["batchId"]),
+            int(p["numInputRows"]),
+            sum(
+                int(op.get("numRowsDroppedByWatermark", 0))
+                for op in p["stateOperators"]
+            ),
         )
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        audits = []
-        for p in query.recentProgress:
-            d = p if isinstance(p, dict) else json.loads(p.json)
-            if d["numInputRows"] > 0:
-                audits.append(
-                    (
-                        int(d["batchId"]),
-                        int(d["numInputRows"]),
-                        sum(
-                            int(op.get("numRowsDroppedByWatermark", 0))
-                            for op in d["stateOperators"]
-                        ),
-                    )
-                )
-        query.stop()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+        for p in progress
+        if p["numInputRows"] > 0
+    ]
     if len(audits) != 3:  # the %3 split must drain as 3 data batches
         raise AssertionError(f"expected 3 data batches, saw {audits}")
     scal = spark.createDataFrame(
@@ -377,8 +296,7 @@ def _stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_input_b2 long, n_late_cells long",
     )
     return (
-        spark.table(name)
-        .select(
+        table.select(
             F.col("w.start").cast("date").alias("day"),
             "event_type",
             "n_ontime",
@@ -397,43 +315,24 @@ def _stream_enrich_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the equivalent batch join+window aggregate with the
     same exact-decimal discipline as ``join_skewed``.
     """
-    import shutil
-    import tempfile
-    import uuid
-
     from big_data_trend_analysis_spark.operators.skew import EVENT_TYPE_WEIGHTS
     from big_data_trend_analysis_spark.streaming.jobs import enriched_window_stream
     from big_data_trend_analysis_spark.streaming.sources import stream_events
 
-    name = f"enrich_live_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        dim = spark.createDataFrame(
-            list(EVENT_TYPE_WEIGHTS), "event_type string, weight double"
-        )
-        query = (
-            enriched_window_stream(stream_events(spark, sf_dir), dim)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        query.stop()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    dim = spark.createDataFrame(
+        list(EVENT_TYPE_WEIGHTS), "event_type string, weight double"
+    )
+    return drain_available_now(
+        enriched_window_stream(stream_events(spark, sf_dir), dim), "complete"
+    ).table
 
 
 def _stream_sink_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch sink path through the real streaming machinery.
 
-    Drains the events file stream through ``start_foreach_batch`` —
-    the engine's checkpointed foreachBatch wrapper with the reference's
-    error side-channel (K3/M1, edw_stream.py:113-136) — into a
+    Drains the events file stream through ``foreach_batch_with_errors``
+    — the engine's foreachBatch wrapper with the reference's error
+    side-channel (K3/M1, edw_stream.py:113-136) — into a
     batch_id-keyed idempotent parquet sink (the container-executable
     stand-in for the JDBC serving sink, same WriteFn contract), then
     reads the sink back and aggregates. foreachBatch itself is
@@ -447,28 +346,23 @@ def _stream_sink_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
+    from big_data_trend_analysis_spark.functions.numeric import exact_sum
     from big_data_trend_analysis_spark.streaming.sinks import (
+        foreach_batch_with_errors,
         parquet_idempotent_writer,
-        start_foreach_batch,
     )
     from big_data_trend_analysis_spark.streaming.sources import stream_events
 
-    ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
     sink_dir = tempfile.mkdtemp(prefix="bdta_sink_")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-        query = start_foreach_batch(
+        drain_available_now(
             stream_events(spark, sf_dir).select(
                 "event_id", "ts", "user_id", "event_type", "value"
             ),
-            parquet_idempotent_writer(sink_dir),
-            checkpoint_dir=ckpt,
-            trigger_available_now=True,
+            foreach_batch=foreach_batch_with_errors(
+                parquet_idempotent_writer(sink_dir)
+            ),
         )
-        query.awaitTermination(300)
-        query.stop()
-        from big_data_trend_analysis_spark.functions.numeric import exact_sum
-
         written = spark.read.parquet(sink_dir)
         return (
             written.groupBy("event_type")
@@ -481,7 +375,6 @@ def _stream_sink_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(sink_dir, ignore_errors=True)
 
 
@@ -497,31 +390,12 @@ def _stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands sessionization, pinning that streaming session
     merging converges to exactly the batch session set.
     """
-    import shutil
-    import tempfile
-    import uuid
-
     from big_data_trend_analysis_spark.streaming.jobs import session_counts_stream
     from big_data_trend_analysis_spark.streaming.sources import stream_events
 
-    name = f"session_live_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            session_counts_stream(stream_events(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        query.stop()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    return drain_available_now(
+        session_counts_stream(stream_events(spark, sf_dir)), "complete"
+    ).table
 
 
 def _stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -535,7 +409,7 @@ def _stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     match set (M1 + the stream-stream join capability the reference's
     single-stream foreachBatch loop cannot express).
     """
-    return _run_stream_join_drain(spark, sf_dir, "inner", "sjoin_live")
+    return _run_stream_join_drain(spark, sf_dir, "inner")
 
 
 def _stream_outer_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -554,41 +428,20 @@ def _stream_outer_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     above it are correctly still HELD at termination, not emitted
     (measured: 1906 of 1919 batch-outer rows at sf0.01).
     """
-    return _run_stream_join_drain(spark, sf_dir, "left_outer", "souterjoin_live")
+    return _run_stream_join_drain(spark, sf_dir, "left_outer")
 
 
 def _run_stream_join_drain(
-    spark: SparkSession, sf_dir: str, join_type: str, prefix: str
+    spark: SparkSession, sf_dir: str, join_type: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-    import uuid
-
     from big_data_trend_analysis_spark.streaming.jobs import purchases_after_signup
     from big_data_trend_analysis_spark.streaming.sources import stream_events
 
-    name = f"{prefix}_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            purchases_after_signup(
-                stream_events(spark, sf_dir),
-                streaming=True,
-                join_type=join_type,
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    return drain_available_now(
+        purchases_after_signup(
+            stream_events(spark, sf_dir), streaming=True, join_type=join_type
         )
-        query.awaitTermination(300)
-        query.stop()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    ).table
 
 
 def _stream_cms_live(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -605,33 +458,15 @@ def _stream_cms_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded-space cross-batch CMS the reference's driver matrix
     approximates (cms_stream.py:69,94-116).
     """
-    import shutil
-    import tempfile
-    import uuid
-
     from big_data_trend_analysis_spark.operators.aggregates import probe_sketches
     from big_data_trend_analysis_spark.streaming.jobs import windowed_cms_stream
     from big_data_trend_analysis_spark.streaming.sources import stream_events
 
-    name = f"cms_live_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            windowed_cms_stream(stream_events(spark, sf_dir), eps=0.01)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        query.stop()
-        keys = ("click", "view", "purchase", "signup", "error")
-        return probe_sketches(spark.table(name), keys, sketch_col="cms_sketch")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    sketches = drain_available_now(
+        windowed_cms_stream(stream_events(spark, sf_dir), eps=0.01), "complete"
+    ).table
+    keys = ("click", "view", "purchase", "signup", "error")
+    return probe_sketches(sketches, keys, sketch_col="cms_sketch")
 
 
 #: TPC-H Q1 as literal SQL text — the one capability surface the rest
@@ -819,27 +654,41 @@ def _gate_suffix(spark: SparkSession, sf_dir: str) -> str:
     return hashlib.md5(f"{sf_dir}|{app_id}".encode()).hexdigest()[:10]
 
 
+#: Gate artifacts removed at interpreter exit: directories, and tables
+#: with the session that last wrote each.
+_EXIT_PATHS: set[str] = set()
+_EXIT_TABLES: dict[str, SparkSession] = {}
+
+
 def _cleanup_at_exit(spark: SparkSession, paths=(), tables=()) -> None:
     """Remove gate artifacts at interpreter exit.
 
     The returned DataFrames read the written artifacts LAZILY — the
     driver collects after the query function returns — so an in-function
     ``finally`` would delete the data before it is ever read; interpreter
-    exit is the earliest point that is always safe.
+    exit is the earliest point that is always safe. One exit hook serves
+    every call, and repeated calls for the same artifact keep one entry.
     """
-    import atexit
+    _EXIT_PATHS.update(paths)
+    _EXIT_TABLES.update(dict.fromkeys(tables, spark))
+    _register_exit_hook()
+
+
+@functools.cache
+def _register_exit_hook() -> None:
+    atexit.register(_remove_exit_artifacts)
+
+
+def _remove_exit_artifacts() -> None:
     import shutil
 
-    def _clean() -> None:
-        for t in tables:
-            try:
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-            except Exception:
-                pass
-        for p in paths:
-            shutil.rmtree(p, ignore_errors=True)
-
-    atexit.register(_clean)
+    for table, spark in _EXIT_TABLES.items():
+        try:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
+        except Exception:
+            pass
+    for path in _EXIT_PATHS:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def _partitioned_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2405,7 +2254,6 @@ def _stream_cdc_apply_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain (3 non-empty micro-batches by split construction).
     """
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -2422,24 +2270,11 @@ def _stream_cdc_apply_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_path = f"/tmp/bdta_cdcstate_{_gate_suffix(spark, sf_dir)}"
     _cleanup_at_exit(spark, paths=[state_path])
     shutil.rmtree(state_path, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
     applied: list[int] = []
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        changes = changes_from_events(stream_events_batched(spark, sf_dir))
-        query = (
-            changes.writeStream.foreachBatch(
-                cdc_apply_sink(state_path, applied)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        query.stop()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
+    drain_available_now(
+        changes_from_events(stream_events_batched(spark, sf_dir)),
+        foreach_batch=cdc_apply_sink(state_path, applied),
+    )
     scal = spark.createDataFrame(
         [(len(applied),)], "n_batches_applied long"
     )
@@ -2859,10 +2694,6 @@ def _stateful_decay_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches keeps every true score an exact multiple of 0.01, so the
     round-6 comparison against the SQL recurrence cannot flap.
     """
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.streaming.sources import (
@@ -2873,28 +2704,14 @@ def _stateful_decay_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokens_from_text_stream,
     )
 
-    name = f"stateful_live_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            decayed_token_scores(
-                tokens_from_text_stream(stream_documents_batched(spark, sf_dir))
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        query.stop()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    updates = drain_available_now(
+        decayed_token_scores(
+            tokens_from_text_stream(stream_documents_batched(spark, sf_dir))
+        ),
+        "update",
+    ).table
     return (
-        spark.table(name)
-        .groupBy("token")
+        updates.groupBy("token")
         .agg(
             F.round(F.max_by("decayed_score", "total_count"), 6).alias(
                 "decayed_score"
@@ -2925,10 +2742,6 @@ def _stateful_decay_live_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
       either way; on a protobuf-equipped cluster the TWS path runs
       with zero code change.
     """
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.streaming.sources import (
@@ -2947,32 +2760,16 @@ def _stateful_decay_live_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     except ImportError:
         scores = decayed_token_scores
 
-    name = f"stateful_v2_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            scores(
-                tokens_from_text_stream(stream_documents_batched(spark, sf_dir))
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        query.stop()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    updates = drain_available_now(
+        scores(tokens_from_text_stream(stream_documents_batched(spark, sf_dir))),
+        "update",
+    ).table
     return (
-        spark.table(name)
-        .groupBy("token")
+        updates.groupBy("token")
         .agg(
             F.round(F.max_by("decayed_score", "total_count"), 6).alias(
                 "decayed_score"
@@ -2994,33 +2791,14 @@ def _running_counts_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming groupBy state accumulates ACROSS micro-batches to
     exactly the batch answer.
     """
-    import shutil
-    import tempfile
-    import uuid
-
     from big_data_trend_analysis_spark.streaming.jobs import running_keyword_counts
     from big_data_trend_analysis_spark.streaming.sources import (
         stream_documents_batched,
     )
 
-    name = f"tokcounts_live_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            running_keyword_counts(stream_documents_batched(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        query.stop()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    return drain_available_now(
+        running_keyword_counts(stream_documents_batched(spark, sf_dir)), "complete"
+    ).table
 
 
 def _stream_topk_live(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3032,11 +2810,8 @@ def _stream_topk_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     count + rank, pinning that streaming state accumulated across
     batches to exactly the batch answer before ranking.
     """
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
+    from pyspark.sql.window import Window as _W
 
     from big_data_trend_analysis_spark.streaming.jobs import (
         trending_topk_counts,
@@ -3045,31 +2820,14 @@ def _stream_topk_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_batched,
     )
 
-    name = f"trending_live_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="bdta_ckpt_")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            trending_topk_counts(stream_events_batched(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        query.stop()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    from pyspark.sql.window import Window as _W
-
+    counts = drain_available_now(
+        trending_topk_counts(stream_events_batched(spark, sf_dir)), "complete"
+    ).table
     w = _W.partitionBy("window_start").orderBy(
         F.col("n_events").desc(), F.col("event_type").asc()
     )
     return (
-        spark.table(name)
-        .withColumn("rnk", F.row_number().over(w))
+        counts.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= 3)
     )
 
@@ -3102,7 +2860,6 @@ def _stream_restart_recovery_live(spark: SparkSession, sf_dir: str) -> DataFrame
     import os
     import shutil
     import tempfile
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -3134,49 +2891,33 @@ def _stream_restart_recovery_live(spark: SparkSession, sf_dir: str) -> DataFrame
             F.sum(vd).alias("sum_dec"),
         )
 
-    def _drain(name: str):
-        q = (
-            _agg_stream()
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        batches = [
-            int(p["batchId"] if isinstance(p, dict) else p.batchId)
-            for p in q.recentProgress
-        ]
-        qid, rid = str(q.id), str(q.runId)
-        q.stop()
-        return qid, rid, batches
-
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
         shutil.copy(os.path.join(split_dir, "batch0.parquet"), src)
-        qid1, rid1, _ = _drain(f"restart_p1_{uuid.uuid4().hex[:12]}")
+        _, progress1 = drain_available_now(
+            _agg_stream(), "complete", checkpoint_dir=ckpt
+        )
         for b in range(1, EVENT_STREAM_BATCHES):
             shutil.copy(os.path.join(split_dir, f"batch{b}.parquet"), src)
-        name2 = f"restart_p2_{uuid.uuid4().hex[:12]}"
-        qid2, rid2, batches2 = _drain(name2)
+        table, progress2 = drain_available_now(
+            _agg_stream(), "complete", checkpoint_dir=ckpt
+        )
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
+    run1, run2 = progress1[-1], progress2[-1]
+    batches2 = [int(p["batchId"]) for p in progress2]
     scal = spark.createDataFrame(
         [
             (
-                qid1 == qid2,
-                rid1 != rid2,
-                bool(batches2) and min(batches2) >= 1,
+                run1["id"] == run2["id"],
+                run1["runId"] != run2["runId"],
+                min(batches2) >= 1,
             )
         ],
         "same_query_id boolean, new_run_id boolean, resumed_numbering boolean",
     )
     return (
-        spark.table(name2)
-        .select(
+        table.select(
             "event_type",
             "n_events",
             F.col("sum_dec").cast("double").alias("sum_value"),
@@ -3234,8 +2975,6 @@ def _stream_rate_limited_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gate pins the admission contract the capacity planning
     relies on.
     """
-    import uuid
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.streaming.sources import (
@@ -3248,37 +2987,19 @@ def _stream_rate_limited_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id long, ts timestamp, user_id long, "
         "event_type string, value double, props string"
     )
-    name = f"rate_limited_{uuid.uuid4().hex[:12]}"
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     ev = (
         spark.readStream.schema(ddl)
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "batch*.parquet")
         .parquet(split_dir)
     )
-    q = (
-        ev.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    table, progress = drain_available_now(
+        ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events")),
+        "complete",
     )
-    q.awaitTermination(300)
-    progress = [
-        (
-            int(p["batchId"] if isinstance(p, dict) else p.batchId),
-            int(
-                p["numInputRows"]
-                if isinstance(p, dict)
-                else p.numInputRows
-            ),
-        )
-        for p in q.recentProgress
-    ]
-    q.stop()
-    data_batches = sorted(n for _, n in progress if n > 0)
+    data_batches = sorted(
+        p["numInputRows"] for p in progress if p["numInputRows"] > 0
+    )
     ledger = spark.createDataFrame(
         [
             (i + 1, n, len(data_batches))
@@ -3286,7 +3007,7 @@ def _stream_rate_limited_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "batch_rank int, batch_rows long, n_batches int",
     )
-    state = spark.table(name).agg(
+    state = table.agg(
         F.count(F.lit(1)).alias("n_state_types"),
         F.sum("n_events").cast("long").alias("state_total_rows"),
     )

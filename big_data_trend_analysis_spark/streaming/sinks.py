@@ -9,15 +9,26 @@ error_time) rows in a side table instead of crashing the query
   checkpoint and silently loses its position on restart);
 - the serving write is a pluggable callable, so tests use parquet and
   production uses JDBC with the exact options the reference pins.
+
+``drain_available_now`` is the one way the engine runs a stream over
+all available input to completion (the ``*_live`` gate queries, the
+streaming tests).
 """
 
 from __future__ import annotations
 
 import datetime
+import json
+import shutil
+import tempfile
+import threading
+import time
 import traceback
+import uuid
 from collections.abc import Callable
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -281,3 +292,141 @@ def start_foreach_batch(
     elif processing_time is not None:
         writer = writer.trigger(processingTime=processing_time)
     return writer.start()
+
+
+#: Shuffle partitions of a drain's session. Streaming state cost scales
+#: with partition count, not data: every micro-batch commits one store
+#: (FOUR for a stream-stream join) per partition, so 32 partitions pay
+#: 100s of store commits to shuffle KBs of state. Measured on the
+#: fixtures (round 5, sf0.1, min-of-2): the live family totals 12.8 s at
+#: 8 partitions vs 10.8 s at 4 (stream_join_live, with its 4
+#: stores/partition, drops 3.0→2.2 s); 4 still spreads the fixture
+#: state (≤150 keys) across cores. A cluster deployment sizes this by
+#: key cardinality instead.
+STREAM_SHUFFLE_PARTITIONS = "4"
+
+#: Seconds a drain may run before it is stopped and raises TimeoutError.
+DRAIN_TIMEOUT_S = 300
+
+#: Seconds a finished drain waits for its terminated event to reach
+#: its session's listeners; past that it keeps the session's bus.
+_LISTENER_FLUSH_S = 10
+
+#: Held while a drain re-attaches its session's bus and starts, and
+#: while a finished drain releases it, so a release never detaches the
+#: bus of a session whose next drain is starting.
+_STREAMS_BUS_LOCK = threading.Lock()
+
+
+class Drain(NamedTuple):
+    """A finished drain: its memory-sink table (None for a foreachBatch
+    sink) and the query's progress reports as plain dicts."""
+
+    table: DataFrame | None
+    progress: list[dict]
+
+
+def drain_available_now(
+    df: DataFrame,
+    output_mode: str = "append",
+    foreach_batch: WriteFn | None = None,
+    checkpoint_dir: str | None = None,
+) -> Drain:
+    """Run streaming ``df`` over all available input, then stop it.
+
+    Sets the session's shuffle width to ``STREAM_SHUFFLE_PARTITIONS``,
+    writes to a uniquely named memory table (or through
+    ``foreach_batch``) with an ``availableNow`` trigger, and waits at
+    most ``DRAIN_TIMEOUT_S``: a drain that has not finished by then is
+    stopped and raises ``TimeoutError`` instead of returning a partial
+    table. The checkpoint is a temporary directory removed afterwards,
+    unless the caller passes ``checkpoint_dir`` to keep it across runs.
+    After the stop, the query's streaming listener buses are taken off
+    the SparkContext's listener bus, so repeated drains do not
+    accumulate listeners.
+    """
+    spark = df.sparkSession
+    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
+    name = f"drain_{uuid.uuid4().hex[:12]}"
+    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="bdta_ckpt_")
+    writer = df.writeStream.queryName(name).outputMode(output_mode)
+    if foreach_batch is None:
+        writer = writer.format("memory")
+    else:
+        writer = writer.foreachBatch(foreach_batch)
+    try:
+        with _STREAMS_BUS_LOCK:
+            _attach_streams_bus(spark)
+            query = (
+                writer.option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+        try:
+            finished = query.awaitTermination(DRAIN_TIMEOUT_S)
+        finally:
+            query.stop()
+            _release_streams_buses(spark, query)
+        if not finished:
+            raise TimeoutError(
+                f"streaming drain {name} did not finish in {DRAIN_TIMEOUT_S} s"
+            )
+        # Spark 3.5 reports progress as dicts, Spark 4 as objects.
+        progress = [
+            p if type(p) is dict else json.loads(p.json)
+            for p in query.recentProgress
+        ]
+    finally:
+        if checkpoint_dir is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return Drain(spark.table(name) if foreach_batch is None else None, progress)
+
+
+def _private_field(obj, name: str):
+    field = obj.getClass().getDeclaredField(name)
+    field.setAccessible(True)
+    return field.get(obj)
+
+
+def _streams_bus(jsession):
+    """The listener bus of a JVM session's StreamingQueryManager, or None
+    if the session never created a manager (checked without creating
+    one: the manager is a lazy field of the session state)."""
+    manager = _private_field(jsession.sessionState(), "streamingQueryManager")
+    return None if manager is None else _private_field(manager, "listenerBus")
+
+
+def _attach_streams_bus(spark: SparkSession) -> None:
+    """Re-register the session's streaming listener bus if an earlier
+    drain on this session released it, so this drain's events reach the
+    session's listeners."""
+    live = spark.sparkContext._jsc.sc().listenerBus()
+    bus = _streams_bus(spark._jsparkSession)
+    if bus is not None and not live.listeners().contains(bus):
+        live.addToQueue(bus, "streams")
+
+
+def _release_streams_buses(spark: SparkSession, query: StreamingQuery) -> None:
+    """Take a stopped drain's streaming listener buses off the
+    SparkContext's listener bus.
+
+    Each session's StreamingQueryManager registers one bus there for the
+    life of the SparkContext, and a stream runs on a clone of its
+    session that may create a second. The session's bus tracks the run
+    ids of its queries until their terminated events are delivered; it
+    is removed once that set is empty, so every query of the session,
+    this one included, has told the session's listeners it ended.
+    """
+    live = spark.sparkContext._jsc.sc().listenerBus()
+    # The query posts its events on its session's bus, never the clone's.
+    clone_bus = _streams_bus(query._jsq.streamingQuery().sparkSessionForStream())
+    if clone_bus is not None:
+        live.removeListener(clone_bus)
+    bus = _streams_bus(spark._jsparkSession)
+    pending, run_id = _private_field(bus, "activeQueryRunIds"), query._jsq.runId()
+    deadline = time.monotonic() + _LISTENER_FLUSH_S
+    while pending.contains(run_id) and time.monotonic() < deadline:
+        time.sleep(0.01)
+    with _STREAMS_BUS_LOCK:
+        if pending.isEmpty():
+            live.removeListener(bus)

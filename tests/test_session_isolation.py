@@ -8,6 +8,7 @@ change what another client's query plans.
 
 from __future__ import annotations
 
+import atexit
 import sys
 import threading
 import time
@@ -68,3 +69,18 @@ def test_queries_do_not_grow_python_includes_or_sys_path(spark, sf_dir):
     for _ in range(20):
         QUERIES["agg_basic"](spark, sf_dir)
     assert (len(sc._python_includes), len(sys.path)) == (includes, path)
+
+
+def test_stream_drains_release_their_listeners(spark, sf_dir):
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    before = bus.listeners().size()
+    for _ in range(3):
+        QUERIES["stream_dedup_live"](spark, sf_dir).collect()
+    assert bus.listeners().size() == before
+
+
+def test_gate_queries_share_one_exit_hook(spark, sf_dir):
+    before = atexit._ncallbacks()
+    for _ in range(2):
+        QUERIES["partitioned_write_roundtrip"](spark, sf_dir).collect()
+    assert atexit._ncallbacks() - before <= 1

@@ -17,6 +17,7 @@ from big_data_trend_analysis_spark.streaming.jobs import (
     running_keyword_counts,
 )
 from big_data_trend_analysis_spark.streaming.sinks import (
+    drain_available_now,
     foreach_batch_with_errors,
     parquet_append_writer,
     start_foreach_batch,
@@ -27,25 +28,81 @@ from big_data_trend_analysis_spark.streaming.sources import (
 )
 
 
-def _drain(df, tmp_path, name):
+def _drain(df):
     """Run a streaming plan to completion into a memory sink."""
-    query = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(120)
-    return df.sparkSession.table(name)
+    return drain_available_now(df, "complete").table
 
 
-def test_decay_trend_batch_stream_parity(spark, sf_dir, tmp_path):
+def test_drain_that_times_out_stops_and_raises(spark, sf_dir, monkeypatch):
+    """A drain that outlives DRAIN_TIMEOUT_S is stopped and fails; it
+    never hands back a partial result."""
+    import time
+
+    from big_data_trend_analysis_spark.streaming import sinks
+
+    monkeypatch.setattr(sinks, "DRAIN_TIMEOUT_S", 0.5)
+    with pytest.raises(TimeoutError, match="drain_"):
+        drain_available_now(
+            stream_events(spark, sf_dir).select("event_id"),
+            foreach_batch=lambda batch_df, batch_id: time.sleep(3),
+        )
+    assert not spark.streams.active
+
+
+def test_concurrent_drains_on_one_session_release_its_listeners(spark, sf_dir):
+    """Drains racing on one session each finish and each deliver their
+    terminated event to the session's listeners, and the last one to
+    finish leaves the SparkContext's listener count where it was."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Terminations(StreamingQueryListener):
+        def __init__(self) -> None:
+            self.ids: list[str] = []
+
+        def onQueryStarted(self, event) -> None:
+            pass
+
+        def onQueryProgress(self, event) -> None:
+            pass
+
+        def onQueryIdle(self, event) -> None:
+            pass
+
+        def onQueryTerminated(self, event) -> None:
+            self.ids.append(str(event.runId))
+
+    session = spark.newSession()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    before = bus.listeners().size()
+    terminations = Terminations()
+    session.streams.addListener(terminations)
+    counts, errors = [], []
+
+    def drain() -> None:
+        try:
+            counted = stream_events(session, sf_dir).groupBy("event_type").count()
+            counts.append(_drain(counted).count())
+        except Exception as exc:  # noqa: BLE001 - reported by the assert below
+            errors.append(exc)
+
+    workers = [threading.Thread(target=drain, daemon=True) for _ in range(6)]
+    for worker in workers:
+        worker.start()
+    for worker in workers:
+        worker.join(600)
+    assert not any(worker.is_alive() for worker in workers)
+    assert not errors, errors
+    assert len(counts) == 6 and min(counts) > 0
+    assert len(set(terminations.ids)) == 6
+    assert not session.streams.active
+    assert bus.listeners().size() == before
+
+
+def test_decay_trend_batch_stream_parity(spark, sf_dir):
     """The streaming decay trend must equal its oracle-checked batch twin."""
-    streamed = _drain(
-        decay_trend_stream(stream_events(spark, sf_dir)), tmp_path, "decay_stream"
-    )
+    streamed = _drain(decay_trend_stream(stream_events(spark, sf_dir)))
     batch = streaming_decay_trend(load_table(spark, sf_dir, "events"))
     s_rows = sorted(map(tuple, streamed.collect()))
     b_rows = sorted(map(tuple, batch.collect()))
@@ -53,7 +110,7 @@ def test_decay_trend_batch_stream_parity(spark, sf_dir, tmp_path):
     assert len(s_rows) > 0
 
 
-def test_running_keyword_counts_cumulative(spark, sf_dir, tmp_path):
+def test_running_keyword_counts_cumulative(spark, sf_dir):
     """Streaming groupBy must equal the batch count over the same input."""
     docs_stream = (
         spark.readStream.schema(
@@ -62,7 +119,7 @@ def test_running_keyword_counts_cumulative(spark, sf_dir, tmp_path):
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )
-    streamed = _drain(running_keyword_counts(docs_stream), tmp_path, "kw_counts")
+    streamed = _drain(running_keyword_counts(docs_stream))
     batch = (
         load_table(spark, sf_dir, "documents")
         .select(F.explode(F.split("text", " ")).alias("token"))
@@ -74,16 +131,14 @@ def test_running_keyword_counts_cumulative(spark, sf_dir, tmp_path):
     )
 
 
-def test_windowed_cms_stream_probe_matches_exact(spark, sf_dir, tmp_path):
+def test_windowed_cms_stream_probe_matches_exact(spark, sf_dir):
     """Per-window streaming CMS sketches, probed on the driver, must
     reproduce the exact per-window event-type counts (width ≫ keys →
     collision-free), matching the batch cms_window_probe path."""
     from big_data_trend_analysis_spark.operators.aggregates import probe_cms
     from big_data_trend_analysis_spark.streaming.jobs import windowed_cms_stream
 
-    streamed = _drain(
-        windowed_cms_stream(stream_events(spark, sf_dir)), tmp_path, "cms_win"
-    )
+    streamed = _drain(windowed_cms_stream(stream_events(spark, sf_dir)))
     keys = ["click", "view", "purchase", "signup", "error"]
     got = {
         (r.window_start, k): est
