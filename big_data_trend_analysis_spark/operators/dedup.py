@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
+from big_data_trend_analysis_spark import scope
+
 
 def _materialize(df: DataFrame) -> DataFrame:
     """Persist a multiply-referenced intermediate (MEMORY_AND_DISK).
@@ -29,8 +31,10 @@ def _materialize(df: DataFrame) -> DataFrame:
     Spark's CacheManager dedupes by canonicalized plan, so repeated
     calls share one cache entry. At 100 TB the same role is played by
     checkpointing the (corpus-fraction-sized) relation to storage.
+    The persist is recorded in the running query call's scope, so
+    ``registry.run`` unpersists it once the call's rows are collected.
     """
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
+    return scope.persist(df, StorageLevel.MEMORY_AND_DISK)
 
 
 def _materialize_tiny(df: DataFrame) -> DataFrame:

@@ -38,6 +38,17 @@ views and UDFs, and start streams without touching the caller's
 session, and concurrent callers on one session cannot see each
 other's settings.
 
+Every call writes only to its own artifacts: temp dirs from
+``_call_dir``, catalog tables from ``_call_table`` and in-memory Derby
+databases with uuid names, all recorded in the call's
+``scope.CallScope`` together with the relations ``dedup._materialize``
+persists. So a second call of a query never deletes or rewrites what
+the first call's lazy DataFrame still reads. ``QUERIES[name]`` keeps a
+call's dirs and tables until interpreter exit; ``run(name, spark,
+sf_dir)`` collects the rows and releases all of it at once. SQL-family
+queries bind their input DataFrames into the template
+(``spark.sql(template, lineitem=df)``) instead of naming views.
+
 Every ``*_live`` streaming drain goes through one helper,
 ``streaming.sinks.drain_available_now``: bounded wait (a drain that
 does not finish in ``DRAIN_TIMEOUT_S`` raises instead of returning a
@@ -49,6 +60,9 @@ from __future__ import annotations
 
 import atexit
 import functools
+import os
+import tempfile
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,6 +89,7 @@ from big_data_trend_analysis_spark.operators.drift import (
 #: Python and spliced as the same literal into the engine column
 #: expression and the DuckDB oracle.
 _AB_POWER_ZSUM = Z_975 + Z_80
+from big_data_trend_analysis_spark import scope
 from big_data_trend_analysis_spark.functions.text import EN_STOPWORDS
 from big_data_trend_analysis_spark.operators import (
     aggregates,
@@ -141,8 +156,6 @@ def _stream_decay_trend_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's oracle check covers the actual streaming path, not just
     its batch twin. Checkpoint/table names are unique per invocation.
     """
-    import os
-
     from big_data_trend_analysis_spark.streaming.jobs import decay_trend_stream
     from big_data_trend_analysis_spark.streaming.sources import (
         EVENTS_SOURCE_ENV,
@@ -342,7 +355,6 @@ def _stream_sink_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     the delivered row set matches the source exactly.
     """
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -492,16 +504,35 @@ _SQL_Q1 = """
 """
 
 
+def _tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
+    """Fixture tables by name, for ``spark.sql(template, **tables)``:
+    PySpark registers each under a uuid view name on the query's own
+    session and drops the views once the statement is analysed."""
+    return {t: load_table(spark, sf_dir, t) for t in names}
+
+
+def _cached_view(df: DataFrame) -> str:
+    """Name a persisted relation for SQL with a uuid view on the query's
+    own session, which the view outlives.
+
+    Not bound by ``spark.sql(template, name=df)``: PySpark drops those
+    views after analysis, and dropping a view uncaches every relation
+    with the same plan, this call's and any concurrent call's.
+    """
+    name = f"bdta_{uuid.uuid4().hex}"
+    df.createTempView(name)
+    return name
+
+
 def _sql_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL entry point: TPC-H Q1 as ``spark.sql`` over a temp view.
+    """SQL entry point: TPC-H Q1 as ``spark.sql`` over a bound DataFrame.
 
     The reference never calls ``spark.sql`` (SURVEY §2.1 "Not
     present"); a user switching to this engine will. Same Catalyst
     plan as the DataFrame API — the shipdate predicate reaches the
     parquet scan as a PushedFilter through the SQL text path too.
     """
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    return spark.sql(_SQL_Q1.format(table="lineitem_v"))
+    return spark.sql(_SQL_Q1, table=load_table(spark, sf_dir, "lineitem"))
 
 
 #: TPC-H Q3 (shipping priority) adapted to the fixture schema (orders
@@ -533,12 +564,8 @@ def _sql_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed to their scans and the top-10 planned as
     TakeOrderedAndProject — never a full sort of the join output.
     """
-    for t in ("customer", "orders", "lineitem"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
-        _SQL_Q3.format(
-            customer="customer_v", orders="orders_v", lineitem="lineitem_v"
-        )
+        _SQL_Q3, **_tables(spark, sf_dir, "customer", "orders", "lineitem")
     )
 
 
@@ -573,12 +600,8 @@ def _sql_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     and broadcast it onto orders/customer rather than materializing
     the full join first. Top-100 plans as TakeOrderedAndProject.
     """
-    for t in ("customer", "orders", "lineitem"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
-        _SQL_Q18.format(
-            customer="customer_v", orders="orders_v", lineitem="lineitem_v"
-        )
+        _SQL_Q18, **_tables(spark, sf_dir, "customer", "orders", "lineitem")
     )
 
 
@@ -617,17 +640,13 @@ def _sql_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts onto the lineitem probe; the date range pushes to the
     orders scan. The canonical "did join reordering work" query.
     """
-    for t in ("region", "nation", "customer", "orders", "lineitem", "supplier"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
-        _SQL_Q5.format(
-            region="region_v",
-            nation="nation_v",
-            customer="customer_v",
-            orders="orders_v",
-            lineitem="lineitem_v",
-            supplier="supplier_v",
-        )
+        _SQL_Q5,
+        **_tables(
+            spark,
+            sf_dir,
+            "region", "nation", "customer", "orders", "lineitem", "supplier",
+        ),
     )
 
 
@@ -639,38 +658,37 @@ def _sql_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PARTITION_LIST_MAX = 100_000
 
 
-def _gate_suffix(spark: SparkSession, sf_dir: str) -> str:
-    """Collision-free artifact suffix for the side-effecting gate queries.
-
-    Keyed by (sf_dir, Spark application id): two concurrent sessions on
-    the same tier (bench + the gate, or scale_smoke) can no longer race
-    on DROP TABLE / rmtree of each other's live artifacts (ADVICE r6).
-    Same-session reruns (bench runs every query twice) still collide by
-    design and are handled by each query's own overwrite/DROP guard.
-    """
-    import hashlib
-
-    app_id = spark.sparkContext.applicationId
-    return hashlib.md5(f"{sf_dir}|{app_id}".encode()).hexdigest()[:10]
+def _call_dir(kind: str) -> str:
+    """A new temp directory owned by the running query call."""
+    path = tempfile.mkdtemp(prefix=f"bdta_{kind}_")
+    scope.current().dirs.append(path)
+    return path
 
 
-#: Gate artifacts removed at interpreter exit: directories, and tables
-#: with the session that last wrote each.
+def _call_table(spark: SparkSession, kind: str) -> str:
+    """A new catalog table name owned by the running query call."""
+    name = f"bdta_{kind}_{uuid.uuid4().hex}"
+    scope.current().tables.append((spark, name))
+    return name
+
+
+#: Artifacts of lazily returned gate queries, removed at interpreter
+#: exit: directories, and tables with the session that wrote each.
 _EXIT_PATHS: set[str] = set()
 _EXIT_TABLES: dict[str, SparkSession] = {}
 
 
-def _cleanup_at_exit(spark: SparkSession, paths=(), tables=()) -> None:
-    """Remove gate artifacts at interpreter exit.
+def _keep_until_exit(made: scope.CallScope) -> None:
+    """Hand a lazy call's directories and tables to the exit hook.
 
-    The returned DataFrames read the written artifacts LAZILY — the
-    driver collects after the query function returns — so an in-function
-    ``finally`` would delete the data before it is ever read; interpreter
-    exit is the earliest point that is always safe. One exit hook serves
-    every call, and repeated calls for the same artifact keep one entry.
+    The returned DataFrame reads them LAZILY (the caller collects after
+    the query function returns), so interpreter exit is the earliest
+    point that is always safe. One exit hook serves every call. Derby
+    databases die with the JVM, and the call's persisted relations stay
+    counted, so no ``registry.run`` release unpersists them.
     """
-    _EXIT_PATHS.update(paths)
-    _EXIT_TABLES.update(dict.fromkeys(tables, spark))
+    _EXIT_PATHS.update(made.dirs)
+    _EXIT_TABLES.update({table: spark for spark, table in made.tables})
     _register_exit_hook()
 
 
@@ -701,8 +719,8 @@ def _partitioned_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     6/365ths of the files — and aggregates per day. The oracle is the
     same aggregate over raw events, pinning that the write→prune→read
     path is lossless. This is the only container-exercisable sink (no
-    Kafka broker / Postgres here); the write lands under /tmp, sized
-    by SF, overwritten per run, removed at exit.
+    Kafka broker / Postgres here); the write lands in the call's own
+    temp dir.
     """
     from pyspark.sql import functions as F
 
@@ -711,8 +729,7 @@ def _partitioned_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events")
-    path = f"/tmp/bdta_lakehouse_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[path])
+    path = _call_dir("lakehouse")
     write_date_partitioned(events, path, "ts")
     back = spark.read.parquet(path).filter(
         (F.col("p_date") >= F.lit("2024-01-05").cast("date"))
@@ -741,27 +758,20 @@ def _bucketed_write_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact table per query. The oracle joins the raw tables —
     pinning that the bucketed write→join path is lossless.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
 
-    suffix = _gate_suffix(spark, sf_dir)
-    t_o, t_c = f"bdta_bkt_orders_{suffix}", f"bdta_bkt_customer_{suffix}"
-    # EXTERNAL tables under session-unique /tmp paths: the location is
-    # independent of the cwd-derived warehouse dir; the DROP + rmtree
-    # guard handles same-session reruns (bench runs each query twice).
-    _cleanup_at_exit(spark, paths=[f"/tmp/{t_o}", f"/tmp/{t_c}"], tables=[t_o, t_c])
-    for tbl, path in ((t_o, f"/tmp/{t_o}"), (t_c, f"/tmp/{t_c}")):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(path, ignore_errors=True)
+    # EXTERNAL tables in the call's temp dir: the location is
+    # independent of the cwd-derived warehouse dir.
+    root = _call_dir("bkt")
+    t_o, t_c = _call_table(spark, "bkt_orders"), _call_table(spark, "bkt_customer")
     load_table(spark, sf_dir, "orders").write.bucketBy(8, "o_custkey").sortBy(
         "o_custkey"
-    ).format("parquet").option("path", f"/tmp/{t_o}").saveAsTable(t_o)
+    ).format("parquet").option("path", f"{root}/orders").saveAsTable(t_o)
     load_table(spark, sf_dir, "customer").write.bucketBy(8, "c_custkey").sortBy(
         "c_custkey"
-    ).format("parquet").option("path", f"/tmp/{t_c}").saveAsTable(t_c)
+    ).format("parquet").option("path", f"{root}/customer").saveAsTable(t_c)
     joined = spark.table(t_o).hint("merge").join(
         spark.table(t_c), F.col("o_custkey") == F.col("c_custkey")
     )
@@ -798,14 +808,11 @@ def _multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_id") % 5 == 0)
         .select(*cols)
     )
-    suffix = _gate_suffix(spark, sf_dir)
-    csv_dir = f"/tmp/bdta_csv_{suffix}"
-    json_dir = f"/tmp/bdta_json_{suffix}"
-    orc_dir = f"/tmp/bdta_orc_{suffix}"
-    _cleanup_at_exit(spark, paths=[csv_dir, json_dir, orc_dir])
-    slice_df.write.mode("overwrite").option("header", "true").csv(csv_dir)
-    slice_df.write.mode("overwrite").json(json_dir)
-    slice_df.write.mode("overwrite").orc(orc_dir)
+    root = _call_dir("multiformat")
+    csv_dir, json_dir, orc_dir = f"{root}/csv", f"{root}/json", f"{root}/orc"
+    slice_df.write.option("header", "true").csv(csv_dir)
+    slice_df.write.json(json_dir)
+    slice_df.write.orc(orc_dir)
     ddl = "event_id long, event_type string, value double"
     back_csv = (
         spark.read.schema(ddl)
@@ -862,15 +869,8 @@ def _sql_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, and the top-20 plans as TakeOrderedAndProject with a
     c_custkey tie-break for determinism.
     """
-    for t in ("customer", "orders", "lineitem", "nation"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
-        _SQL_Q10.format(
-            customer="customer_v",
-            orders="orders_v",
-            lineitem="lineitem_v",
-            nation="nation_v",
-        )
+        _SQL_Q10, **_tables(spark, sf_dir, "customer", "orders", "lineitem", "nation")
     )
 
 
@@ -901,9 +901,7 @@ def _sql_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     range in the lineitem scan's PushedFilters), output bounded by
     |linestatus|.
     """
-    for t in ("orders", "lineitem"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-    return spark.sql(_SQL_Q12.format(orders="orders_v", lineitem="lineitem_v"))
+    return spark.sql(_SQL_Q12, **_tables(spark, sf_dir, "orders", "lineitem"))
 
 
 #: TPC-H Q14 (promotion effect): PROMO revenue share of one quarter's
@@ -931,9 +929,7 @@ def _sql_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     and both sums run in exact decimal so the single output row is
     order-independent to the digit.
     """
-    for t in ("lineitem", "part"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-    return spark.sql(_SQL_Q14.format(lineitem="lineitem_v", part="part_v"))
+    return spark.sql(_SQL_Q14, **_tables(spark, sf_dir, "lineitem", "part"))
 
 
 #: TPC-H Q4 (order-priority check, adapted to the fixture schema): the
@@ -967,9 +963,7 @@ def _sql_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     set-membership question the reference answers with driver-side
     sketches (``cms_stream.py:42-47``), here as a relational semi-join.
     """
-    for t in ("orders", "lineitem"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-    return spark.sql(_SQL_Q4.format(orders="orders_v", lineitem="lineitem_v"))
+    return spark.sql(_SQL_Q4, **_tables(spark, sf_dir, "orders", "lineitem"))
 
 
 #: TPC-H Q13 (customer distribution): LEFT OUTER join with an ON-clause
@@ -998,9 +992,7 @@ def _sql_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations: per-customer counts (shuffle on custkey), then the
     O(|distinct counts|) histogram.
     """
-    for t in ("customer", "orders"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-    return spark.sql(_SQL_Q13.format(customer="customer_v", orders="orders_v"))
+    return spark.sql(_SQL_Q13, **_tables(spark, sf_dir, "customer", "orders"))
 
 
 #: TPC-H Q17 (small-quantity-order revenue): per-part correlated
@@ -1029,9 +1021,7 @@ def _sql_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     The brand predicate broadcasts through the part join; the final
     result is a single exact-decimal scalar.
     """
-    for t in ("lineitem", "part"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-    return spark.sql(_SQL_Q17.format(lineitem="lineitem_v", part="part_v"))
+    return spark.sql(_SQL_Q17, **_tables(spark, sf_dir, "lineitem", "part"))
 
 
 #: TPC-H Q19 (discounted revenue): three-branch disjunction mixing
@@ -1061,9 +1051,7 @@ def _sql_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plan_properties.py). The residual mixed-side
     disjunction evaluates post-join on the pre-pruned rows.
     """
-    for t in ("lineitem", "part"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-    return spark.sql(_SQL_Q19.format(lineitem="lineitem_v", part="part_v"))
+    return spark.sql(_SQL_Q19, **_tables(spark, sf_dir, "lineitem", "part"))
 
 
 #: TPC-H Q22 (global-sales opportunity, adapted): customers above the
@@ -1099,9 +1087,7 @@ def _sql_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi/anti/outer/correlated join-archetype set (Q4/Q13/Q17/Q22)
     VERDICT r6 named as the remaining relational gap.
     """
-    for t in ("customer", "orders"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-    return spark.sql(_SQL_Q22.format(customer="customer_v", orders="orders_v"))
+    return spark.sql(_SQL_Q22, **_tables(spark, sf_dir, "customer", "orders"))
 
 
 #: TPC-H Q6 (forecasting revenue change): the pure scan-side query —
@@ -1125,8 +1111,7 @@ def _sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes to three columns, and the exact-decimal sum folds map-side
     to one row per task.
     """
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    return spark.sql(_SQL_Q6.format(lineitem="lineitem_v"))
+    return spark.sql(_SQL_Q6, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 #: TPC-H Q7 (volume shipping): nation-pair trade flows. The fixture
@@ -1166,16 +1151,13 @@ def _sql_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier/customer broadcast; lineitem⋈orders is the only big join,
     and the output is bounded by pairs × years.
     """
-    for t in ("supplier", "lineitem", "orders", "customer", "nation"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
-        _SQL_Q7.format(
-            supplier="supplier_v",
-            lineitem="lineitem_v",
-            orders="orders_v",
-            customer="customer_v",
-            nation="nation_v",
-        )
+        _SQL_Q7,
+        **_tables(
+            spark,
+            sf_dir,
+            "supplier", "lineitem", "orders", "customer", "nation",
+        ),
     )
 
 
@@ -1219,18 +1201,13 @@ def _sql_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     market-share division is exact-decimal-over-exact-decimal per
     year, so the ratio is order-independent.
     """
-    for t in ("part", "lineitem", "supplier", "orders", "customer", "nation", "region"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
-        _SQL_Q8.format(
-            part="part_v",
-            lineitem="lineitem_v",
-            supplier="supplier_v",
-            orders="orders_v",
-            customer="customer_v",
-            nation="nation_v",
-            region="region_v",
-        )
+        _SQL_Q8,
+        **_tables(
+            spark,
+            sf_dir,
+            "part", "lineitem", "supplier", "orders", "customer", "nation", "region",
+        ),
     )
 
 
@@ -1266,9 +1243,7 @@ def _sql_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the fixture schema (the remaining five — Q2/Q9/Q11/Q16/Q20 —
     all need the absent partsupp table).
     """
-    for t in ("lineitem", "supplier"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-    return spark.sql(_SQL_Q15.format(lineitem="lineitem_v", supplier="supplier_v"))
+    return spark.sql(_SQL_Q15, **_tables(spark, sf_dir, "lineitem", "supplier"))
 
 
 #: TPC-H Q21 (suppliers who kept orders waiting, adapted): the
@@ -1322,15 +1297,8 @@ def _sql_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape (semi + anti over lineitem) is pinned in
     tests/test_plan_properties.py.
     """
-    for t in ("supplier", "lineitem", "orders", "nation"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
-        _SQL_Q21.format(
-            supplier="supplier_v",
-            lineitem="lineitem_v",
-            orders="orders_v",
-            nation="nation_v",
-        )
+        _SQL_Q21, **_tables(spark, sf_dir, "supplier", "lineitem", "orders", "nation")
     )
 
 
@@ -1355,11 +1323,13 @@ def _jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Keep Derby's log out of the (arbitrary) driver CWD.
     spark._jvm.java.lang.System.setProperty(
-        "derby.stream.error.file", "/tmp/bdta_derby.log"
+        "derby.stream.error.file",
+        os.path.join(tempfile.gettempdir(), "bdta_derby.log"),
     )
-    # Session-unique in-memory db name (no cross-session clash); the
-    # db itself dies with the JVM, so no exit cleanup is needed.
-    url = f"jdbc:derby:memory:bdta_gate_{_gate_suffix(spark, sf_dir)};create=true"
+    # An in-memory db owned by this call.
+    db = f"bdta_gate_{uuid.uuid4().hex}"
+    scope.current().derby.append((spark, db))
+    url = f"jdbc:derby:memory:{db};create=true"
     driver = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
     slice_df = (
         load_table(spark, sf_dir, "events")
@@ -1401,17 +1371,13 @@ def _schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     halves), pinning that evolution loses no rows and nulls exactly
     the pre-evolution ones.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
     from big_data_trend_analysis_spark.sources.tables import read_merged_schema
 
     events = load_table(spark, sf_dir, "events")
-    path = f"/tmp/bdta_evolve_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[path])
-    shutil.rmtree(path, ignore_errors=True)
+    path = _call_dir("evolve")
     v1 = events.filter(F.col("event_id") % 2 == 0).select("event_id", "event_type")
     v2 = events.filter(F.col("event_id") % 2 == 1).select(
         "event_id", "event_type", "value"
@@ -1451,8 +1417,7 @@ def _file_skipping_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_date_partitioned,
     )
 
-    path = f"/tmp/bdta_skipchk_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[path])
+    path = _call_dir("skipchk")
     events = load_table(spark, sf_dir, "events")
     write_date_partitioned(events, path, "ts")
     n_files_total = len(glob.glob(f"{path}/p_date=*/*.parquet"))
@@ -1508,8 +1473,7 @@ def _zorder_skipping_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.sources.lakehouse import write_zordered
 
-    path = f"/tmp/bdta_zorderchk_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[path])
+    path = _call_dir("zorderchk")
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -1575,7 +1539,6 @@ def _merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
        rewrite lost nothing, left no stale versions behind, and
        touched exactly the declared partitions.
     """
-    import os
     import shutil
 
     from pyspark.sql import functions as F
@@ -1586,9 +1549,7 @@ def _merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_date_partitioned,
     )
 
-    path = f"/tmp/bdta_merge_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[path])
-    shutil.rmtree(path, ignore_errors=True)
+    path = _call_dir("merge")
 
     events = load_table(spark, sf_dir, "events")
     cut = F.lit(SNAPSHOT_CUT).cast("timestamp")
@@ -1706,35 +1667,14 @@ def _txn_log_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     match ONLY if commits are atomic, the rewrite lost nothing, and
     stale files are invisible to the live snapshot.
     """
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
-    from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
-    from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    root = f"/tmp/bdta_txnlog_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[root])
-    shutil.rmtree(root, ignore_errors=True)
-    log = TxnLog(root)
-
-    events = load_table(spark, sf_dir, "events")
-    cut = F.lit(SNAPSHOT_CUT).cast("timestamp")
-    log.write_commit(events.filter(F.col("ts") < cut), n_files=2)  # v0
-    log.write_commit(events.filter(F.col("ts") >= cut), n_files=2)  # v1
-
-    v0_rel = log.manifest(0)["added"]
-    purged = log.read_snapshot(spark, 0).filter(F.col("event_type") != "click")
-    log.write_commit(purged, remove=v0_rel, n_files=2)  # v2
-
+    log = _txnlog_three_commits(spark, sf_dir, "txnlog")
     n_rows_v0 = log.read_snapshot(spark, 0).count()  # time travel
     n_live = len(log.snapshot_files())
-    n_disk = sum(
-        len([f for f in files if f.endswith(".parquet")])
-        for _, _, files in os.walk(os.path.join(root, "data"))
-    )
+    n_disk = _data_files_on_disk(log)
     scal = spark.createDataFrame(
         [(log.latest_version() + 1, n_rows_v0, n_disk, n_live)],
         "n_versions long, n_rows_v0 long, n_files_disk long, n_files_live long",
@@ -1752,20 +1692,17 @@ def _txn_log_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _txnlog_three_commits(spark: SparkSession, sf_dir: str, root: str):
+def _txnlog_three_commits(spark: SparkSession, sf_dir: str, kind: str):
     """Shared gate construction: the snapshot-read trio of commits —
     v0 pre-cut base (2 files), v1 post-cut append (2 files), v2
     GDPR-style purge rewrite of v0's files (pre-cut clicks deleted,
-    2 files). Returns the TxnLog."""
-    import shutil
-
+    2 files) — in a new temp dir of the call. Returns the TxnLog."""
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    shutil.rmtree(root, ignore_errors=True)
-    log = TxnLog(root)
+    log = TxnLog(_call_dir(kind))
     events = load_table(spark, sf_dir, "events")
     cut = F.lit(SNAPSHOT_CUT).cast("timestamp")
     log.write_commit(events.filter(F.col("ts") < cut), n_files=2)  # v0
@@ -1774,6 +1711,14 @@ def _txnlog_three_commits(spark: SparkSession, sf_dir: str, root: str):
     purged = log.read_snapshot(spark, 0).filter(F.col("event_type") != "click")
     log.write_commit(purged, remove=v0_rel, n_files=2)  # v2
     return log
+
+
+def _data_files_on_disk(log) -> int:
+    """Parquet files physically under a txnlog table, live or not."""
+    return sum(
+        len([f for f in files if f.endswith(".parquet")])
+        for _, _, files in os.walk(os.path.join(log.root, "data"))
+    )
 
 
 def _txn_log_vacuum_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1801,15 +1746,11 @@ def _txn_log_vacuum_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     - the audit stats are exact literals (2 data files aged out, 2
       manifests compacted, earliest retained version 2).
     """
-    import os
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
 
-    root = f"/tmp/bdta_txnvac_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[root])
-    log = _txnlog_three_commits(spark, sf_dir, root)
+    log = _txnlog_three_commits(spark, sf_dir, "txnvac")
 
     stats = log.vacuum(retain_versions=1)
     try:
@@ -1823,10 +1764,7 @@ def _txn_log_vacuum_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     except ValueError as exc:
         cdf_vacuumed = "was vacuumed" in str(exc)
     n_live = len(log.snapshot_files())
-    n_disk = sum(
-        len([f for f in files if f.endswith(".parquet")])
-        for _, _, files in os.walk(os.path.join(root, "data"))
-    )
+    n_disk = _data_files_on_disk(log)
     scal = spark.createDataFrame(
         [(
             stats["data_files_removed"],
@@ -1872,9 +1810,7 @@ def _txnlog_cdf_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
 
-    root = f"/tmp/bdta_txncdf_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[root])
-    log = _txnlog_three_commits(spark, sf_dir, root)
+    log = _txnlog_three_commits(spark, sf_dir, "txncdf")
 
     return (
         log.read_changes(spark, key_cols=["event_id"])
@@ -1906,18 +1842,13 @@ def _txnlog_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
       what version 0 actually was;
     - totals over coalesce(score, 0) equal the raw recomputation.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    root = f"/tmp/bdta_txnsch_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[root])
-    shutil.rmtree(root, ignore_errors=True)
-    log = TxnLog(root)
+    log = TxnLog(_call_dir("txnsch"))
 
     events = load_table(spark, sf_dir, "events")
     cut = F.lit(SNAPSHOT_CUT).cast("timestamp")
@@ -1977,8 +1908,6 @@ def _txnlog_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     same object-store put-if-absent Delta serializes on; data files
     land before the CAS, so contention never blocks executors.
     """
-    import os
-    import shutil
     import threading
 
     from pyspark.sql import functions as F
@@ -1987,10 +1916,7 @@ def _txnlog_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    root = f"/tmp/bdta_txncc_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[root])
-    shutil.rmtree(root, ignore_errors=True)
-    log = TxnLog(root)
+    log = TxnLog(_call_dir("txncc"))
 
     events = load_table(spark, sf_dir, "events")
     cut = F.lit(SNAPSHOT_CUT).cast("timestamp")
@@ -2030,10 +1956,7 @@ def _txnlog_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise errors[0]
 
     stats = log.vacuum(retain_versions=3)  # keeps v0..v2, reaps orphans
-    n_disk = sum(
-        len([f for f in files if f.endswith(".parquet")])
-        for _, _, files in os.walk(os.path.join(root, "data"))
-    )
+    n_disk = _data_files_on_disk(log)
     scal = spark.createDataFrame(
         [(
             log.latest_version() + 1,
@@ -2079,18 +2002,13 @@ def _txnlog_partition_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pruning bug that drops a needed file changes the totals, and
     one that leaks extra files changes the scan counts.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    root = f"/tmp/bdta_txnpe_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[root])
-    shutil.rmtree(root, ignore_errors=True)
-    log = TxnLog(root)
+    log = TxnLog(_call_dir("txnpe"))
 
     events = load_table(spark, sf_dir, "events")
     cut = F.lit(SNAPSHOT_CUT).cast("timestamp")
@@ -2158,17 +2076,12 @@ def _txnlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     WRITE time. Row counts and exact integer id-sums per resolved
     snapshot are oracle-pinned from the same slice arithmetic.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    root = f"/tmp/bdta_txntt_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[root])
-    shutil.rmtree(root, ignore_errors=True)
-    log = TxnLog(root)
+    log = TxnLog(_call_dir("txntt"))
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
@@ -2253,8 +2166,6 @@ def _stream_cdc_apply_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     both guards hold. ``n_batches_applied`` certifies the multi-batch
     drain (3 non-empty micro-batches by split construction).
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
@@ -2267,9 +2178,7 @@ def _stream_cdc_apply_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events_batched,
     )
 
-    state_path = f"/tmp/bdta_cdcstate_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[state_path])
-    shutil.rmtree(state_path, ignore_errors=True)
+    state_path = _call_dir("cdcstate")
     applied: list[int] = []
     drain_available_now(
         changes_from_events(stream_events_batched(spark, sf_dir)),
@@ -2352,17 +2261,15 @@ def _udtf_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i, toks[i] + " " + toks[i + 1]
 
     spark.udtf.register("bdta_bigrams_udtf", _Bigrams)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "docs_udtf_v"
-    )
     return spark.sql(
         """
         SELECT t.gram, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM docs_udtf_v d, LATERAL bdta_bigrams_udtf(d.text) t
+        FROM {docs} d, LATERAL bdta_bigrams_udtf(d.text) t
         GROUP BY t.gram
         ORDER BY cnt DESC, gram ASC
         LIMIT 10
-        """
+        """,
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -2430,7 +2337,7 @@ def _cbo_reorder_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cost-based join reorder proven in-gate (VERDICT r7 #6 — the
     deferred ANALYZE/CBO item, un-deferred for its provable part).
 
-    Three catalog tables (external, session-unique /tmp locations)
+    Three catalog tables (external, in the call's temp dir)
     get ``ANALYZE TABLE ... COMPUTE STATISTICS FOR ALL COLUMNS``; the
     star join is then written in a deliberately BAD syntactic order —
     fact first (``orders ⋈ customer ⋈ nation``), selective dim last.
@@ -2444,20 +2351,13 @@ def _cbo_reorder_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputed from the raw fixtures.
     """
     import re
-    import shutil
 
-    sfx = _gate_suffix(spark, sf_dir)
-    tbls = {t: f"bdta_cbo_{t}_{sfx}" for t in ("orders", "customer", "nation")}
-    _cleanup_at_exit(
-        spark,
-        paths=[f"/tmp/{n}" for n in tbls.values()],
-        tables=list(tbls.values()),
-    )
+    root = _call_dir("cbo")
+    tbls = {t: _call_table(spark, f"cbo_{t}") for t in ("orders", "customer", "nation")}
     for t, name in tbls.items():
-        shutil.rmtree(f"/tmp/{name}", ignore_errors=True)
-        load_table(spark, sf_dir, t).write.mode("overwrite").format(
-            "parquet"
-        ).option("path", f"/tmp/{name}").saveAsTable(name)
+        load_table(spark, sf_dir, t).write.format("parquet").option(
+            "path", f"{root}/{t}"
+        ).saveAsTable(name)
         spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS")
     q = f"""
         SELECT n.n_name,
@@ -2578,16 +2478,12 @@ def _mor_read_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches only if the merge resolves every key to its true latest
     version across both layers.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
 
-    path = f"/tmp/bdta_mor_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[path])
-    shutil.rmtree(path, ignore_errors=True)
+    path = _call_dir("mor")
 
     events = load_table(spark, sf_dir, "events")
     cut = F.lit(SNAPSHOT_CUT).cast("timestamp")
@@ -2639,15 +2535,11 @@ def _compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout. NameNode/listing pressure, not query parallelism, is what
     this buys: 16× fewer objects for identical data.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
 
-    path = f"/tmp/bdta_compact_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[path])
-    shutil.rmtree(path, ignore_errors=True)
+    path = _call_dir("compact")
 
     slice_df = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
@@ -2857,9 +2749,7 @@ def _stream_restart_recovery_live(spark: SparkSession, sf_dir: str) -> DataFrame
     decimal(18,6) (the ``standardize_features`` discipline) so both
     engines agree bit-for-bit.
     """
-    import os
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -3037,13 +2927,9 @@ def _dpp_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     and pins BOTH the plan artifact (``dpp_planned``) and the pruned
     aggregate against the oracle's recomputation from raw events.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
-    root = f"/tmp/bdta_dpp_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[root])
-    shutil.rmtree(root, ignore_errors=True)
+    root = os.path.join(_call_dir("dpp"), "fact")
     events = load_table(spark, sf_dir, "events")
     events.withColumn(
         "day", F.to_date(F.date_trunc("DAY", "ts"))
@@ -3092,8 +2978,7 @@ def _recursive_cte_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE has the same UNION ALL semantics), so this is the
     rare gate whose Spark and oracle texts coincide.
     """
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events_rcte_v")
-    return spark.sql(_SQL_RCTE.format(events="events_rcte_v"))
+    return spark.sql(_SQL_RCTE, events=load_table(spark, sf_dir, "events"))
 
 
 _SQL_RCTE = """
@@ -3131,7 +3016,6 @@ def _sql_udf_tvf_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic stays in exact decimals so the oracle — the same
     bodies inlined by hand — matches bit-for-bit.
     """
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_fn_v")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION bdta_disc_price(p DOUBLE, d DOUBLE) "
         "RETURNS DOUBLE RETURN CAST(CAST(p AS DECIMAL(12,2)) "
@@ -3149,11 +3033,11 @@ def _sql_udf_tvf_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(CAST(bdta_disc_price(l_extendedprice, l_discount)
                              AS DECIMAL(16,4))) AS DOUBLE) AS sum_disc_price,
                COUNT(*) AS n_rows
-        FROM lineitem_fn_v,
+        FROM {lineitem},
              LATERAL bdta_price_parts(l_extendedprice, l_discount)
         WHERE l_quantity < 10
         GROUP BY l_returnflag, part
-    """)
+    """, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 def _url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3369,23 +3253,23 @@ _SQL_PS = """
 #: min-cost subquery — the archetype — are intact.
 #: Q2 body references ``ps`` twice (outer join tree + the correlated
 #: MIN subquery). Split from the WITH prefix so the Spark wrapper can
-#: register a PERSISTED ps view (per-branch column pruning
+#: bind a PERSISTED ps relation as ``{ps}`` (per-branch column pruning
 #: differentiates the two CTE expansions' exchanges, so Catalyst's
 #: ReuseExchange never collapses them and the lineitem aggregation ran
 #: twice — round-13, guide §2.4; the oracle keeps the single WITH
-#: string, same relation by construction).
+#: string with ``{ps}`` naming the CTE, same relation by construction).
 _SQL_Q2_BODY = """
     SELECT CAST(s_acctbal AS DOUBLE) AS s_acctbal, s_name, n_name,
            p_partkey, p_brand, CAST(ps_supplycost AS DOUBLE) AS supplycost
     FROM {part}
-    JOIN ps ON p_partkey = ps_partkey
+    JOIN {ps} ON p_partkey = ps_partkey
     JOIN {supplier} ON s_suppkey = ps_suppkey
     JOIN {nation} ON s_nationkey = n_nationkey
     JOIN {region} ON n_regionkey = r_regionkey
     WHERE p_size = 15 AND r_name = 'EUROPE'
       AND ps_supplycost = (
           SELECT MIN(ps2.ps_supplycost)
-          FROM ps ps2
+          FROM {ps} ps2
           JOIN {supplier} s2 ON s2.s_suppkey = ps2.ps_suppkey
           JOIN {nation} n2 ON s2.s_nationkey = n2.n_nationkey
           JOIN {region} r2 ON n2.n_regionkey = r2.r_regionkey
@@ -3407,7 +3291,7 @@ def _sql_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast into both the outer and the subquery join trees. The
     cost compare is DECIMAL = DECIMAL — exact on both engines.
 
-    The ps relation is PERSISTED and registered as a view (round-13):
+    The ps relation is PERSISTED and bound as ``{ps}`` (round-13):
     the outer tree and the decorrelated subquery prune ps differently,
     so ReuseExchange never fired and the lineitem aggregation ran
     twice (18 parquet scans in the before plan). ps is
@@ -3416,19 +3300,11 @@ def _sql_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from big_data_trend_analysis_spark.operators.dedup import _materialize
 
-    for t in ("lineitem", "part", "supplier", "nation", "region"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-    _materialize(
-        spark.sql(_SQL_PS.format(lineitem="lineitem_v"))
-    ).createOrReplaceTempView("ps")
-    return spark.sql(
-        _SQL_Q2_BODY.format(
-            part="part_v",
-            supplier="supplier_v",
-            nation="nation_v",
-            region="region_v",
-        )
+    tables = _tables(spark, sf_dir, "lineitem", "part", "supplier", "nation", "region")
+    ps = _cached_view(
+        _materialize(spark.sql(_SQL_PS, lineitem=tables.pop("lineitem")))
     )
+    return spark.sql(_SQL_Q2_BODY.replace("{ps}", ps), **tables)
 
 
 #: TPC-H Q9 (product-type profit), adapted: p_name LIKE '%green%'
@@ -3468,16 +3344,13 @@ def _sql_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     profit expression folds in exact DECIMAL before one cast to
     double per (nation, year) group.
     """
-    for t in ("lineitem", "orders", "part", "supplier", "nation"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
-        _SQL_Q9.format(
-            lineitem="lineitem_v",
-            orders="orders_v",
-            part="part_v",
-            supplier="supplier_v",
-            nation="nation_v",
-        )
+        _SQL_Q9,
+        **_tables(
+            spark,
+            sf_dir,
+            "lineitem", "orders", "part", "supplier", "nation",
+        ),
     )
 
 
@@ -3487,7 +3360,8 @@ def _sql_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: exact decimals.
 #: Q11 splits like Q2: ``scoped`` is referenced by both the per-part
 #: rollup and the HAVING scalar — the Spark wrapper persists it once
-#: (round-13, guide §2.4); the oracle keeps the single WITH string.
+#: (round-13, guide §2.4); the oracle keeps the single WITH string with
+#: ``{scoped}`` naming the CTE.
 _SQL_Q11_SCOPED = (
     "WITH ps AS (" + _SQL_PS + ")"
     + """
@@ -3502,9 +3376,9 @@ _SQL_Q11_SCOPED = (
 
 _SQL_Q11_BODY = """
     SELECT ps_partkey, CAST(SUM(val) AS DOUBLE) AS value
-    FROM scoped
+    FROM {scoped}
     GROUP BY ps_partkey
-    HAVING SUM(val) * 400 > (SELECT SUM(val) FROM scoped)
+    HAVING SUM(val) * 400 > (SELECT SUM(val) FROM {scoped})
     ORDER BY value DESC
 """
 
@@ -3522,25 +3396,22 @@ def _sql_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     The threshold compare is decimal·int vs decimal — exact, no double
     boundary.
 
-    scoped is PERSISTED and registered as a view (round-13): the two
+    scoped is PERSISTED and bound as ``{scoped}`` (round-13): the two
     CTE expansions prune differently, so ReuseExchange never fired and
     the whole lineitem→ps→scoped pipeline ran twice (6 parquet scans
     in the before plan). scoped is |parts|-bounded.
     """
     from big_data_trend_analysis_spark.operators.dedup import _materialize
 
-    for t in ("lineitem", "supplier", "nation"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-    _materialize(
-        spark.sql(
-            _SQL_Q11_SCOPED.format(
-                lineitem="lineitem_v",
-                supplier="supplier_v",
-                nation="nation_v",
+    scoped = _cached_view(
+        _materialize(
+            spark.sql(
+                _SQL_Q11_SCOPED,
+                **_tables(spark, sf_dir, "lineitem", "supplier", "nation"),
             )
         )
-    ).createOrReplaceTempView("scoped")
-    return spark.sql(_SQL_Q11_BODY)
+    )
+    return spark.sql(_SQL_Q11_BODY.replace("{scoped}", scoped))
 
 
 #: TPC-H Q16 (parts/supplier relationship), adapted: the excluded
@@ -3572,13 +3443,7 @@ def _sql_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     partially map-side. The size IN-list and brand/type exclusions
     push to the part scan.
     """
-    for t in ("lineitem", "part", "supplier"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-    return spark.sql(
-        _SQL_Q16.format(
-            lineitem="lineitem_v", part="part_v", supplier="supplier_v"
-        )
-    )
+    return spark.sql(_SQL_Q16, **_tables(spark, sf_dir, "lineitem", "part", "supplier"))
 
 
 #: TPC-H Q20 (potential part promotion), adapted: "availqty" is the
@@ -3625,16 +3490,13 @@ def _sql_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     stock-vs-shipments compare is decimal·2 vs decimal — exact.
     Completes the 22/22 TPC-H archetype sweep.
     """
-    for t in ("lineitem", "part", "supplier", "nation", "region"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
     return spark.sql(
-        _SQL_Q20.format(
-            lineitem="lineitem_v",
-            part="part_v",
-            supplier="supplier_v",
-            nation="nation_v",
-            region="region_v",
-        )
+        _SQL_Q20,
+        **_tables(
+            spark,
+            sf_dir,
+            "lineitem", "part", "supplier", "nation", "region",
+        ),
     )
 
 
@@ -3696,13 +3558,10 @@ def _nested_prune_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     alongside the aggregate recomputed by the oracle from raw events.
     """
     import re as _re
-    import shutil
 
     from pyspark.sql import functions as F
 
-    root = f"/tmp/bdta_nested_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[root])
-    shutil.rmtree(root, ignore_errors=True)
+    root = os.path.join(_call_dir("nested"), "table")
     events = load_table(spark, sf_dir, "events")
     events.select(
         "event_id",
@@ -3790,17 +3649,12 @@ def _txnlog_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     version) raises. Oracle recomputes every slice from events
     arithmetic.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    root = f"/tmp/bdta_txnrestore_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[root])
-    shutil.rmtree(root, ignore_errors=True)
-    log = TxnLog(root)
+    log = TxnLog(_call_dir("txnrestore"))
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
@@ -3870,17 +3724,12 @@ def _txnlog_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a no-op (version -1, nothing rewritten). Oracle recomputes
     all slices from events arithmetic.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    root = f"/tmp/bdta_txncompact_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[root])
-    shutil.rmtree(root, ignore_errors=True)
-    log = TxnLog(root)
+    log = TxnLog(_call_dir("txncompact"))
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
@@ -4064,16 +3913,11 @@ def _txnlog_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     Values are pinned by the oracle's own m = MAX(event_id)
     arithmetic over raw events.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    root = f"/tmp/bdta_txnstats_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[root])
-    shutil.rmtree(root, ignore_errors=True)
-    log = TxnLog(root)
+    log = TxnLog(_call_dir("txnstats"))
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
@@ -4126,8 +3970,6 @@ def _txnlog_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's full-table arithmetic (the superset guarantee made
     measurable).
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.sources.bloom import (
@@ -4136,10 +3978,7 @@ def _txnlog_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    root = f"/tmp/bdta_txnbloom_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[root])
-    shutil.rmtree(root, ignore_errors=True)
-    log = TxnLog(root)
+    log = TxnLog(_call_dir("txnbloom"))
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
@@ -4194,17 +4033,12 @@ def _txnlog_history_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     table-owner audit (what changed, when, by how many files) must
     read straight off the manifests with zero data I/O.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
     from big_data_trend_analysis_spark.sources.txnlog import TxnLog
 
-    root = f"/tmp/bdta_txnhist_{_gate_suffix(spark, sf_dir)}"
-    _cleanup_at_exit(spark, paths=[root])
-    shutil.rmtree(root, ignore_errors=True)
-    log = TxnLog(root)
+    log = TxnLog(_call_dir("txnhist"))
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
@@ -4231,7 +4065,8 @@ def _txnlog_history_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _in_child_sessions(bodies: dict[str, QueryFn]) -> dict[str, QueryFn]:
-    """Make each query body run on a new child session of the caller's.
+    """Make each query body run on a new child session of the caller's,
+    recording what it makes in a call scope.
 
     ``spark.newSession()`` shares the SparkContext and the table cache
     but has its own SQLConf, temp views and UDF registry, so the confs,
@@ -4239,15 +4074,45 @@ def _in_child_sessions(bodies: dict[str, QueryFn]) -> dict[str, QueryFn]:
     the caller's session, and any query running beside it on the same
     session, never see them. ``tune_session`` is looked up at call time,
     so a patched module attribute takes effect.
+
+    The scope (``scope.CallScope``) records the temp dirs, tables and
+    caches the body makes. Called from ``run``, the body records into
+    ``run``'s scope, which releases them; called directly, the lazy
+    DataFrame keeps them until interpreter exit.
     """
 
     def isolate(body: QueryFn) -> QueryFn:
-        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            return body(tune_session(spark.newSession()), sf_dir)
+        def call(spark: SparkSession, sf_dir: str) -> DataFrame:
+            child = tune_session(spark.newSession())
+            if scope.current() is not None:
+                return body(child, sf_dir)
+            with scope.opened() as made:
+                try:
+                    return body(child, sf_dir)
+                finally:
+                    _keep_until_exit(made)
 
-        return run
+        return call
 
     return {name: isolate(body) for name, body in bodies.items()}
+
+
+def run(
+    name: str, spark: SparkSession, sf_dir: str
+) -> tuple[list[str], list[tuple]]:
+    """Run ``QUERIES[name]`` to completion and release what it made.
+
+    Returns ``(columns, rows)``. Once the rows are collected (or the
+    call fails) the call's temp dirs are removed, its tables and Derby
+    databases dropped and its cached relations unpersisted, so a
+    long-lived caller accumulates nothing.
+    """
+    with scope.opened() as made:
+        try:
+            df = QUERIES[name](spark, sf_dir)
+            return df.columns, [tuple(r) for r in df.collect()]
+        finally:
+            made.release()
 
 
 QUERIES: dict[str, QueryFn] = _in_child_sessions({
@@ -8368,14 +8233,14 @@ ORACLE_SQL: dict[str, str] = {
     """,
     "sql_tpch_q2": _SQL_Q2.format(
         lineitem="lineitem", part="part", supplier="supplier",
-        nation="nation", region="region",
+        nation="nation", region="region", ps="ps",
     ),
     "sql_tpch_q9": _SQL_Q9.format(
         lineitem="lineitem", orders="orders", part="part",
         supplier="supplier", nation="nation",
     ),
     "sql_tpch_q11": _SQL_Q11.format(
-        lineitem="lineitem", supplier="supplier", nation="nation",
+        lineitem="lineitem", supplier="supplier", nation="nation", scoped="scoped",
     ),
     "sql_tpch_q16": _SQL_Q16.format(
         lineitem="lineitem", part="part", supplier="supplier",

@@ -3,20 +3,16 @@
 This is the local twin of the driver's t2 correctness gate (SURVEY.md
 §5.2-1): exact value parity, order-insensitive, columns sorted by name.
 Rows-only queries are exercised for execution + schema stability in
-test_rows_only_queries.
+test_rows_only_queries. Every query goes through ``registry.run``, so
+the sweep releases each call's temp dirs, tables and caches as it goes.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from big_data_trend_analysis_spark.plans.registry import ORACLE_SQL, QUERIES
-from tests.oracle_utils import (
-    assert_results_match,
-    duckdb_connection,
-    run_oracle,
-    run_spark,
-)
+from big_data_trend_analysis_spark.plans.registry import ORACLE_SQL, QUERIES, run
+from tests.oracle_utils import assert_results_match, duckdb_connection, run_oracle
 
 # Opt-in module (see pyproject.toml): the sweep is the local twin of
 # the driver's own per-round 304-query correctness gate, so excluding
@@ -37,14 +33,13 @@ def oracle(sf_dir):
 
 @pytest.mark.parametrize("name", ORACLE_BACKED)
 def test_oracle_parity(spark, sf_dir, oracle, name):
-    spark_res = run_spark(QUERIES[name](spark, sf_dir))
+    spark_res = run(name, spark, sf_dir)
     oracle_res = run_oracle(oracle, ORACLE_SQL[name])
     assert_results_match(spark_res, oracle_res, name)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only_queries(spark, sf_dir, name):
-    df = QUERIES[name](spark, sf_dir)
-    rows = df.collect()
+    cols, rows = run(name, spark, sf_dir)
     assert rows is not None
-    assert len(df.schema) > 0
+    assert len(cols) > 0

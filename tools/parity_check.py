@@ -11,7 +11,9 @@ Usage::
     python tools/parity_check.py [--sf /root/testdata/sf0.01] [names...]
 
 With no names, checks every oracle-backed query; rows-only queries are
-executed for clean-run verification.
+executed for clean-run verification. Each query runs through
+``registry.run``, which releases its temp dirs, tables and caches
+before the next one starts.
 """
 
 from __future__ import annotations
@@ -24,14 +26,9 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from big_data_trend_analysis_spark.plans.registry import ORACLE_SQL, QUERIES
+from big_data_trend_analysis_spark.plans.registry import ORACLE_SQL, QUERIES, run
 from big_data_trend_analysis_spark.session import get_spark
-from tests.oracle_utils import (
-    assert_results_match,
-    duckdb_connection,
-    run_oracle,
-    run_spark,
-)
+from tests.oracle_utils import assert_results_match, duckdb_connection, run_oracle
 
 
 def main() -> int:
@@ -51,7 +48,7 @@ def main() -> int:
     for name in names:
         t0 = time.monotonic()
         try:
-            spark_res = run_spark(QUERIES[name](spark, args.sf))
+            spark_res = run(name, spark, args.sf)
             if name in ORACLE_SQL:
                 oracle_res = run_oracle(con, ORACLE_SQL[name])
                 assert_results_match(spark_res, oracle_res, name)
