@@ -120,7 +120,7 @@ def main() -> None:
     # min-of-2: this host shows multi-second CPU-steal stalls (shared
     # VM); the min is the engine's actual cost, the stall is not.
     # clearCache() before every timed run: operators that persist
-    # multiply-referenced intermediates (_materialize) would otherwise
+    # multiply-referenced intermediates (scope.materialize) would otherwise
     # hand run 2 a warm cache, and the min would measure a cached
     # pipeline instead of the full cold path a cluster would run.
     def time_queries(names, data_dir, reps, bytes_out=None) -> dict[str, float]:

@@ -22,7 +22,7 @@ scale-correct shape (the classic distributed prefix-sum):
    Σ totals of partitions < i.
 
 The result is independent of where the sampled range boundaries fall;
-the ``localCheckpoint`` materializes the partition-local pass once so
+the ``scope.checkpoint`` materializes the partition-local pass once so
 the totals aggregation and the join consumer share one scan.
 """
 
@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from big_data_trend_analysis_spark.scope import checkpoint
 
 
 def range_cumsum(
@@ -52,7 +54,7 @@ def range_cumsum(
     # eager=False (round-12): the consumer action materializes the
     # partition-local pass once (cached RDD shared by the offsets
     # broadcast and the output join) without a blocking extra job.
-    local = local.localCheckpoint(eager=False)
+    local = checkpoint(local, eager=False)
     ptot = local.groupBy("_pid").agg(
         *[F.sum(c).alias(f"_pt_{c}") for c in sum_cols]
     )

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from big_data_trend_analysis_spark.functions.numeric import PRICE_DEC, RATE_DEC, dec
+from big_data_trend_analysis_spark.scope import checkpoint, materialize
 
 
 def agg_basic(lineitem: DataFrame) -> DataFrame:
@@ -857,11 +858,11 @@ def feature_binning(lineitem: DataFrame, n_buckets: int = 10) -> DataFrame:
     # Distributed cumsum: range-partition by value, run local sums,
     # broadcast the tiny per-partition totals back as offsets. The
     # output is independent of where the range boundaries fall.
-    # localCheckpoint: every downstream relation (partition totals,
+    # checkpoint: every downstream relation (partition totals,
     # offsets, rank targets, the three cumsum consumers) derives from
     # this one materialized histogram — the raw table is scanned
     # exactly once, at this point.
-    local = (
+    local = checkpoint(
         hist.repartitionByRange(8, "v")
         .withColumn("pid", F.spark_partition_id())
         .withColumn(
@@ -872,7 +873,6 @@ def feature_binning(lineitem: DataFrame, n_buckets: int = 10) -> DataFrame:
                 .rowsBetween(Window.unboundedPreceding, 0)
             ),
         )
-        .localCheckpoint()
     )
     ptot = local.groupBy("pid").agg(F.sum("cnt").alias("ptot"))
     offs = ptot.select(
@@ -1159,10 +1159,8 @@ def _brand_basket_pairs(
     pairs below ``min_support``. Returns ``(baskets, pairs)`` where
     pairs carries (brand_a, brand_b, n_ab).
     """
-    from big_data_trend_analysis_spark.operators.dedup import _materialize
-
     dim = F.broadcast(part.select("p_partkey", "p_brand"))
-    baskets = _materialize(
+    baskets = materialize(
         lineitem.join(dim, lineitem["l_partkey"] == dim["p_partkey"])
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("p_brand")).alias("basket"))
@@ -1788,9 +1786,7 @@ def item_cf_neighbors(
     Emits per (item, rank ≤ k): (item, neighbor, n_co, n_item,
     n_neighbor, cosine, rnk).
     """
-    from big_data_trend_analysis_spark.operators.dedup import _materialize
-
-    baskets = _materialize(
+    baskets = materialize(
         lineitem.select("l_orderkey", "l_partkey")
         .distinct()
         .groupBy("l_orderkey")
@@ -1799,7 +1795,7 @@ def item_cf_neighbors(
     # materialized: the symmetric union below references the pair
     # relation twice — unpersisted, the basket explode + pair count ran
     # once per orientation (round-12 optimization, guide §2.4).
-    pairs = _materialize(
+    pairs = materialize(
         baskets.select(
             F.explode(
                 F.expr(

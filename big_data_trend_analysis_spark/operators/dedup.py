@@ -16,49 +16,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from pyspark.storagelevel import StorageLevel
 
 from big_data_trend_analysis_spark import scope
 
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Persist a multiply-referenced intermediate (MEMORY_AND_DISK).
-
-    The LSH pipelines reference their shingle/candidate relations
-    several times (self-joins reference them twice); without
-    materialization Catalyst re-expands the whole subtree per reference
-    — ngram_jaccard's un-persisted plan contained 44 parquet scans.
-    Spark's CacheManager dedupes by canonicalized plan, so repeated
-    calls share one cache entry. At 100 TB the same role is played by
-    checkpointing the (corpus-fraction-sized) relation to storage.
-    The persist is recorded in the running query call's scope, so
-    ``registry.run`` unpersists it once the call's rows are collected.
-    """
-    return scope.persist(df, StorageLevel.MEMORY_AND_DISK)
-
-
-def _materialize_tiny(df: DataFrame) -> DataFrame:
-    """Persist a BOUNDED multiply-referenced relation on one partition.
-
-    Reserved for relations whose cardinality is FIXED at any corpus
-    scale (k event types, ≤ 7 weekdays, max_lag rows, |brands|² edges
-    — the same boundedness argument that lets the stats tier broadcast
-    them; width-parameterised bucket-grain rollups do NOT qualify and
-    use plain ``_materialize``). A plain persist is wasteful here: the
-    cache materializes (and every downstream stage re-reads) at the
-    full shuffle width, so each tiny consumer stage pays a cores-wide
-    task wave to move a handful of rows (round-12 optimization, guide
-    §2.2 "fewer, larger reduce partitions" taken to its
-    bounded-relation limit).
-
-    ``repartition(1)``, not ``coalesce(1)`` (round-13, VERDICT r12):
-    coalesce on top of an aggregation collapses the final merge stage
-    itself to one task — that task reads every upstream map task's
-    partial output (~10⁶ × k rows at 100 TB). The extra k-row
-    round-robin exchange keeps the aggregation merge at its
-    AQE-chosen width and funnels only the k RESULT rows to the
-    single-partition cache layout."""
-    return _materialize(df.repartition(1))
+#: Module-level names, not direct calls into ``scope``: perfbench's
+#: traced run replaces them, and dedup's own calls resolve through the
+#: replacement.
+_materialize = scope.materialize
+_truncate_lineage = scope.checkpoint
 
 #: MinHash signature size / banding (b bands of r rows; with 16 perms,
 #: 8 bands × 2 rows → LSH threshold (1/b)^(1/r) ≈ 0.35, comfortably
@@ -778,28 +743,6 @@ def candidate_edges(
         .select("src", "dst")
     )
     return pairs.union(pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-
-
-def _truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Checkpoint an iterative intermediate, cluster-aware.
-
-    ``localCheckpoint`` stores blocks in executor memory/disk — fine in
-    local mode and on stable clusters, but lost on executor failure.
-    When a reliable checkpoint dir is configured
-    (``sc.setCheckpointDir``), use the fault-tolerant ``checkpoint()``
-    instead: same lineage truncation, survives executor loss.
-
-    ``eager=False`` still truncates the logical plan immediately (the
-    DataFrame is backed by the checkpoint RDD either way) but defers
-    materialization to the caller's next action — an iterative loop
-    that already runs a periodic action (convergence count) then pays
-    ONE job per check instead of one blocking checkpoint job per round
-    (round-12 optimization; the connected_components lesson).
-    """
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
 
 
 #: Shuffle partitions for the label-propagation loop. The iterative

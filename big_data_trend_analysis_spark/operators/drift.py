@@ -34,11 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from big_data_trend_analysis_spark.functions.ranks import range_cumsum
-from big_data_trend_analysis_spark.operators.dedup import (
-    _materialize,
-    _materialize_tiny,
-)
 from big_data_trend_analysis_spark.operators.merge import SNAPSHOT_CUT
+from big_data_trend_analysis_spark.scope import materialize, materialize_tiny
 
 #: Rounded log-terms accumulate exactly in this type (6 dp, 18 digits).
 _TERM_DEC = "decimal(18,6)"
@@ -224,7 +221,7 @@ def changepoint_cusum(events: DataFrame, crit: float = 1.358) -> DataFrame:
     (event_type, n_days, cp_day, max_dev, cusum_stat, is_change).
     """
 
-    daily = _materialize_tiny(
+    daily = materialize_tiny(
         events.groupBy(
             "event_type", F.date_trunc("DAY", "ts").alias("day")
         ).agg(F.count(F.lit(1)).alias("n"))
@@ -302,7 +299,7 @@ def autocorr_daily(events: DataFrame, max_lag: int = 3) -> DataFrame:
 
     # daily feeds the moments agg, the numerator stack AND the
     # denominator fold — materialized so the corpus scans once.
-    daily = _materialize_tiny(
+    daily = materialize_tiny(
         events.groupBy(F.date_trunc("DAY", "ts").alias("day")).agg(
             F.count(F.lit(1)).alias("n")
         )
@@ -385,7 +382,7 @@ def seasonal_adjust_dow(events: DataFrame) -> DataFrame:
     (day, dow, n, dow_mean, adjusted, strength).
     """
 
-    daily = _materialize_tiny(
+    daily = materialize_tiny(
         events.groupBy(
             F.date_trunc("DAY", "ts").alias("day"),
             F.dayofweek("ts").alias("dow"),
@@ -397,7 +394,7 @@ def seasonal_adjust_dow(events: DataFrame) -> DataFrame:
     glob = daily.agg(
         (F.sum("n").cast("double") / F.count(F.lit(1))).alias("g_mean")
     )
-    scored = _materialize_tiny(
+    scored = materialize_tiny(
         daily.join(F.broadcast(dow_means), "dow")
         .crossJoin(F.broadcast(glob))
         .select(
@@ -556,7 +553,7 @@ def ljung_box_check(events: DataFrame, max_lag: int = 7) -> DataFrame:
     # persisted: referenced by the verdict aggregation AND the output
     # crossJoin — unpersisted, the whole calendar-ACF machinery ran
     # twice (42 jobs / 61 stages measured at sf0.1; round-12, guide §2.4)
-    per_lag = _materialize_tiny(
+    per_lag = materialize_tiny(
         acf.select("lag", "n_days", "acf", q_term.alias("q_term"))
     )
     crit = F.lit(None).cast("double")
@@ -664,7 +661,7 @@ def benjamini_hochberg(
     )
     # tested feeds the m-count AND the ranked window — materialized so
     # the corpus-sized moment aggregation runs once.
-    tested = _materialize_tiny(
+    tested = materialize_tiny(
         a.join(b, "event_type", "full").select(
             "event_type",
             "n_base",
@@ -754,7 +751,7 @@ def ab_test_welch(
 
     # moments feeds BOTH cohort branches of the crossJoin — materialized
     # so the corpus collapses in one aggregation, not once per branch.
-    moments = _materialize_tiny(
+    moments = materialize_tiny(
         lineitem.filter(F.col("l_returnflag").isin("R", "N"))
         .groupBy("l_returnflag")
         .agg(
@@ -901,7 +898,7 @@ def kruskal_wallis(events: DataFrame) -> DataFrame:
     # persisted: referenced by the H aggregation AND the output
     # projection — unpersisted, the rank/cumsum machinery ran twice
     # (22 jobs / 45 stages measured at sf0.1; round-12, guide §2.4)
-    h_raw = _materialize_tiny(
+    h_raw = materialize_tiny(
         groups.crossJoin(F.broadcast(totals))
         .select(
             "event_type",
@@ -1571,7 +1568,7 @@ def brown_forsythe_test(events: DataFrame) -> DataFrame:
     # persisted: referenced by the W aggregation AND the output
     # projection — unpersisted, the z-transform + median machinery ran
     # twice (17 jobs measured at sf0.1; round-12, guide §2.4)
-    per_group = _materialize(
+    per_group = materialize(
         groups.crossJoin(F.broadcast(totals))
         .join(F.broadcast(med), "event_type")
         .select(
@@ -1770,7 +1767,7 @@ def pacf_by_type(events: DataFrame, max_lag: int = 7) -> DataFrame:
     )
 
 
-    daily = _materialize_tiny(
+    daily = materialize_tiny(
         events.groupBy(
             "event_type", F.date_trunc("DAY", "ts").alias("day")
         ).agg(F.count(F.lit(1)).alias("n"))
@@ -2067,7 +2064,7 @@ def dunn_posthoc(events: DataFrame, q_fdr: float = 0.05) -> DataFrame:
             "avgrank2"
         ),
     )
-    groups = _materialize_tiny(
+    groups = materialize_tiny(
         per_vt.join(ranked, "value")
         .groupBy("event_type")
         .agg(
@@ -2194,7 +2191,7 @@ def friedman_test(events: DataFrame) -> DataFrame:
     # kept join; rj feeds the verdict chain AND the output projection —
     # unpersisted, the corpus aggregation re-ran per reference (20 jobs
     # / 53 stages measured at sf0.1; round-12, guide §2.4).
-    cells = _materialize_tiny(
+    cells = materialize_tiny(
         events.filter(F.col("value").isNotNull())
         .groupBy(
             F.dayofweek("ts").alias("dow"),
@@ -2234,7 +2231,7 @@ def friedman_test(events: DataFrame) -> DataFrame:
             2 * (F.sum("c").over(w_ord) - F.col("c")) + F.col("c") + 1
         ).alias("avgrank2"),
     )
-    rj = _materialize_tiny(
+    rj = materialize_tiny(
         kept.join(ranked, ["dow", "cell"])
         .groupBy("event_type")
         .agg(
@@ -2332,7 +2329,7 @@ def mood_median_test(events: DataFrame) -> DataFrame:
     # output projection); unpersisted, Catalyst re-expanded the whole
     # corpus scan + median cumsum per reference (25 jobs / 47 stages
     # measured at sf0.1 — round-12 optimization, guide §2.4).
-    groups = _materialize_tiny(
+    groups = materialize_tiny(
         flagged.groupBy("event_type", "grand_median").agg(
             F.count(F.lit(1)).alias("n_g"),
             F.count_if(F.col("above")).alias("n_above"),
@@ -2418,7 +2415,7 @@ def cochran_armitage_trend(events: DataFrame) -> DataFrame:
     # persisted: referenced by the trend moments AND the output
     # projection — unpersisted, the corpus scan + median cumsum ran
     # twice (19 jobs / 36 stages measured at sf0.1; round-12, §2.4).
-    groups = _materialize_tiny(
+    groups = materialize_tiny(
         vals.crossJoin(F.broadcast(med))
         .groupBy("dow", "grand_median")
         .agg(

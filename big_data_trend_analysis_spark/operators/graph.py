@@ -22,7 +22,7 @@ event-type Markov chain). Spark-first shape:
 100 TB posture: per iteration one shuffle on ``src`` (ranks are
 node-sized, edges edge-sized; AQE broadcasts the smaller side) and one
 on ``dst``. Dangling mass is a 1-row aggregate broadcast into the next
-round. For deep iteration counts you would ``localCheckpoint`` every
+round. For deep iteration counts you would ``scope.checkpoint`` every
 few rounds to truncate lineage exactly as ``operators/dedup.py``'s
 label propagation does; at the unrolled depth used here (3) the plan
 stays comfortably within codegen limits.
@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from big_data_trend_analysis_spark.scope import checkpoint, materialize, materialize_tiny
 
 #: Fixed-point rank representation: 6 dp is ~1e-6 mass granularity,
 #: two orders below anything the output rounds to; 18 digits keeps
@@ -57,14 +59,22 @@ def pagerank_fixed(events: DataFrame, d: float = 0.85, iters: int = 3) -> DataFr
     """
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # The graph relations are derived ONCE and materialized
-    # (localCheckpoint, the dedup_clusters lineage-truncation pattern):
+    # (scope.checkpoint, the dedup_clusters lineage-truncation pattern):
     # without it Catalyst re-derives edges/nodes from the raw event
     # scan inside EVERY unrolled branch — each iteration references
     # ranks twice (contributions + dangling mass), so the un-truncated
     # plan doubles per round and re-shuffles the event log ~4× per
     # iteration. On a cluster this materialization is the standard
     # "build the edge list once, iterate over it" discipline.
-    edges = (
+    # eager=False throughout (round-12): plans still truncate at every
+    # checkpoint. With AQE on (session default) each lazy checkpoint
+    # call still materializes its upstream shuffle map stages at call
+    # time (toRdd resolves the final physical plan); what eager=False
+    # skips is the per-checkpoint driver-blocking RESULT job — the
+    # final result stages all run inside the consumer action (ADVICE
+    # r12: the win is the skipped blocking jobs, not zero work at call
+    # time).
+    edges = checkpoint(
         events.select(
             "user_id",
             F.col("event_type").alias("dst"),
@@ -72,27 +82,13 @@ def pagerank_fixed(events: DataFrame, d: float = 0.85, iters: int = 3) -> DataFr
         )
         .filter(F.col("src").isNotNull())
         .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-        # eager=False throughout (round-12): plans still truncate at
-        # every checkpoint. With AQE on (session default) each lazy
-        # checkpoint call still materializes its upstream shuffle map
-        # stages at call time (toRdd resolves the final physical plan);
-        # what eager=False skips is the per-checkpoint driver-blocking
-        # RESULT job — the final result stages all run inside the
-        # consumer action (ADVICE r12: the win is the skipped blocking
-        # jobs, not zero work at call time).
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("w")),
+        eager=False,
     )
-    nodes = (
-        events.select(F.col("event_type").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    nodes = checkpoint(
+        events.select(F.col("event_type").alias("node")).distinct(), eager=False
     )
-    outw = (
-        edges.groupBy("src")
-        .agg(F.sum("w").alias("outw"))
-        .localCheckpoint(eager=False)
-    )
+    outw = checkpoint(edges.groupBy("src").agg(F.sum("w").alias("outw")), eager=False)
     nrel = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
 
     ranks = nodes.crossJoin(F.broadcast(nrel)).select(
@@ -145,7 +141,7 @@ def pagerank_fixed(events: DataFrame, d: float = 0.85, iters: int = 3) -> DataFr
         # eager job is trivial); the last round stays lazy — the caller
         # owns the final plan.
         if it < iters - 1:
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = checkpoint(ranks, eager=False)
     return ranks.select("node", F.col("rank").cast("double").alias("rank"))
 
 
@@ -175,13 +171,9 @@ def triangle_count(
     from big_data_trend_analysis_spark.operators.aggregates import (
         _brand_basket_pairs,
     )
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
 
     _, pairs = _brand_basket_pairs(lineitem, part, min_support)
-    edges = _materialize_tiny(
+    edges = materialize_tiny(
         pairs.select(
             F.col("brand_a").alias("a"), F.col("brand_b").alias("b")
         )
@@ -244,13 +236,9 @@ def adamic_adar_linkpred(
     from big_data_trend_analysis_spark.operators.aggregates import (
         _brand_basket_pairs,
     )
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
 
     _, pairs = _brand_basket_pairs(lineitem, part, min_support)
-    edges = _materialize_tiny(
+    edges = materialize_tiny(
         pairs.select(F.col("brand_a").alias("a"), F.col("brand_b").alias("b"))
     )
     sym = edges.unionByName(
@@ -330,24 +318,19 @@ def connected_components(
     whether or not the graph has converged. Scale shape: the pair
     relation derives from ONE basket aggregation; each round is one
     src-keyed equi-join + one min-aggregation on the node-sized label
-    relation, lineage truncated per round (``localCheckpoint``, the
+    relation, lineage truncated per round (``scope.checkpoint``, the
     pagerank/dedup_clusters discipline) — the standard scalable CC
     loop (GraphX/GraphFrames run exactly this shape).
 
     Emits one row per part: (node, component, component_size,
     n_components).
     """
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
-
-    baskets = _materialize(
+    baskets = materialize(
         lineitem.groupBy("l_orderkey").agg(
             F.sort_array(F.collect_set("l_partkey")).alias("basket")
         )
     )
-    pairs = _materialize(
+    pairs = materialize(
         baskets.select(
             F.explode(
                 F.expr(
@@ -362,7 +345,7 @@ def connected_components(
         .agg(F.count(F.lit(1)).alias("n_ab"))
         .filter(F.col("n_ab") >= min_support)
     )
-    edges = _materialize(
+    edges = materialize(
         pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
         .unionByName(
             pairs.select(
@@ -370,11 +353,11 @@ def connected_components(
             )
         )
     )
-    labels = (
+    labels = checkpoint(
         lineitem.select(F.col("l_partkey").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=False)
+        .select("node", F.col("node").alias("label")),
+        eager=False,
     )
     for _ in range(iters):
         msgs = edges.join(
@@ -391,11 +374,11 @@ def connected_components(
         # stages at call time — what eager=False removes is the six
         # sequential driver-blocking RESULT jobs (34 jobs / 66 stages
         # measured at sf0.1 before; ADVICE r12 pinned the mechanism).
-        labels = (
+        labels = checkpoint(
             labels.unionByName(msgs)
             .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
+            .agg(F.min("label").alias("label")),
+            eager=False,
         )
     sizes = labels.groupBy("label").agg(
         F.count(F.lit(1)).alias("component_size")

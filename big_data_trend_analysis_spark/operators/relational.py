@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from big_data_trend_analysis_spark.functions.numeric import exact_avg, exact_sum
+from big_data_trend_analysis_spark.scope import materialize
 
 
 def scan_project(lineitem: DataFrame) -> DataFrame:
@@ -385,9 +386,7 @@ def k_anonymity_check(events: DataFrame, k: int = 5) -> DataFrame:
     (event_type, dow, hour, k_count, is_safe, n_risky_classes,
     n_risky_rows).
     """
-    from big_data_trend_analysis_spark.operators.dedup import _materialize
-
-    classes = _materialize(
+    classes = materialize(
         events.groupBy(
             "event_type",
             F.dayofweek("ts").alias("dow"),

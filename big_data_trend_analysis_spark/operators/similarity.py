@@ -30,6 +30,7 @@ from pyspark.sql.types import ArrayType, IntegerType
 from pyspark.sql.window import Window
 
 from big_data_trend_analysis_spark.functions.vectors import as_double, cosine, dot
+from big_data_trend_analysis_spark.scope import materialize
 
 EMBEDDING_DIM = 64
 DEFAULT_PROBES = (0, 1, 2)
@@ -455,12 +456,10 @@ def embed_neardup(
         vals = bits.reshape(len(mat), bands, bits_per_band) @ bit_weights
         return pd.Series(list(vals.astype("int32")))
 
-    from big_data_trend_analysis_spark.operators.dedup import _materialize
-
     vec = as_double("embedding")
     # Bucket relation carries only (vec_id, band key): candidate
     # generation and dedup shuffle bare ids, never the vectors.
-    buckets = _materialize(
+    buckets = materialize(
         embeddings.select(
             "vec_id", F.posexplode(band_values(F.col("embedding"))).alias("band_id", "band_val")
         )
@@ -480,7 +479,7 @@ def embed_neardup(
         )
         .distinct()
     )
-    vecs = _materialize(embeddings.select("vec_id", vec.alias("v")))
+    vecs = materialize(embeddings.select("vec_id", vec.alias("v")))
     return (
         candidates.join(
             vecs.select(F.col("vec_id").alias("vec_id_a"), F.col("v").alias("vec_a")),
@@ -757,8 +756,6 @@ def embed_pq_check(
     The oracle recomputes the planted count and demands both flags
     TRUE.
     """
-    from big_data_trend_analysis_spark.operators.dedup import _materialize
-
     dim = EMBEDDING_DIM
     sub = dim // m
 
@@ -823,7 +820,7 @@ def embed_pq_check(
             err += d2[np.arange(len(x)), codes[:, s]]
         return pd.DataFrame({"codes": list(codes), "err": err})
 
-    encoded = _materialize(
+    encoded = materialize(
         augmented.select(
             "vec_id", encode(F.col("embedding")).alias("e")
         ).select("vec_id", F.col("e.codes").alias("codes"), F.col("e.err").alias("err"))
@@ -926,8 +923,6 @@ def ann_ivfpq_check(
     collision-safe at any corpus size. The oracle recomputes the
     planted count and demands ``all_found``.
     """
-    from big_data_trend_analysis_spark.operators.dedup import _materialize
-
     dim = EMBEDDING_DIM
     sub = dim // m
 
@@ -965,7 +960,7 @@ def ann_ivfpq_check(
             codes[:, s] = np.argmin(d2, axis=1).astype("int32")
         return pd.DataFrame({"cell": cell, "codes": list(codes)})
 
-    encoded = _materialize(
+    encoded = materialize(
         augmented.select("vec_id", encode(F.col("embedding")).alias("e")).select(
             "vec_id", F.col("e.cell").alias("cell"), F.col("e.codes").alias("codes")
         )

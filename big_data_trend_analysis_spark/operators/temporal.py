@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from big_data_trend_analysis_spark.functions.numeric import exact_sum
+from big_data_trend_analysis_spark.scope import checkpoint, materialize, materialize_tiny
 
 
 def asof_join(events: DataFrame) -> DataFrame:
@@ -385,15 +386,10 @@ def survival_km(events: DataFrame) -> DataFrame:
     Emits one row per observed day:
     (day, n_risk, d_churned, hazard, s_km).
     """
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
-
     last_days = events.groupBy("user_id").agg(
         F.max(F.date_trunc("DAY", "ts")).alias("last_day")
     )
-    per_day = _materialize(
+    per_day = materialize(
         last_days.groupBy(F.col("last_day").alias("day")).agg(
             F.count(F.lit(1)).alias("c")
         )
@@ -452,14 +448,10 @@ def rfm_segmentation(orders: DataFrame) -> DataFrame:
     monetary, r_q, f_q, m_q, segment).
     """
     from big_data_trend_analysis_spark.functions.numeric import exact_sum
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
 
     # per_cust feeds both the anchor rollup and the RFM projection —
     # materialized so the orders corpus aggregates once.
-    per_cust = _materialize(
+    per_cust = materialize(
         orders.groupBy("o_custkey").agg(
             F.max(F.date_trunc("DAY", "o_orderdate")).alias("last_order"),
             F.count(F.lit(1)).alias("frequency"),
@@ -998,7 +990,7 @@ def funnel_time_to_convert(events: DataFrame) -> DataFrame:
     # post-filter: a viewer whose purchases all PRECEDE the first view
     # must survive as unconverted, not vanish (post-filtering removes
     # every matched row and the user with it)
-    delays = (
+    delays = checkpoint(
         viewers.join(
             purchases,
             (F.col("user_id") == F.col("p_uid"))
@@ -1013,8 +1005,9 @@ def funnel_time_to_convert(events: DataFrame) -> DataFrame:
                 F.unix_seconds(F.col("first_purchase"))
                 - F.unix_seconds(F.col("first_view"))
             ).alias("delay_s"),
-        )
-    ).localCheckpoint(eager=False)
+        ),
+        eager=False,
+    )
     per_delay = delays.filter(F.col("delay_s").isNotNull()).groupBy(
         "delay_s"
     ).agg(F.count(F.lit(1)).alias("n_d"))
@@ -1519,18 +1512,13 @@ def log_rank_test(events: DataFrame) -> DataFrame:
     Emits ONE row: (n_users_g1, n_users_g0, obs_g1, exp_g1,
     var_sum, chi2_stat, reject).
     """
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
-
     per_user = events.groupBy("user_id").agg(
         F.max(F.date_trunc("DAY", "ts")).alias("last_day"),
         F.max(
             (F.col("event_type") == "signup").cast("int")
         ).alias("g"),
     )
-    per_day = _materialize_tiny(
+    per_day = materialize_tiny(
         per_user.groupBy(F.col("last_day").alias("day")).agg(
             F.count(F.lit(1)).alias("c_all"),
             F.count_if(F.col("g") == 1).alias("c_g1"),

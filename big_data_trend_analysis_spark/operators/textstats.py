@@ -19,6 +19,7 @@ from big_data_trend_analysis_spark.functions.text import (
     n_word_tokens,
     quality_score,
 )
+from big_data_trend_analysis_spark.scope import checkpoint, materialize, materialize_tiny
 
 
 def text_stats(documents: DataFrame) -> DataFrame:
@@ -261,14 +262,9 @@ def bm25_rank(
     then summed as DECIMAL so the doc score is independent of term
     addition order; ties rank by doc_id.
     """
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
-
     # Materialized: referenced twice (scores + df derivation), and only
     # O(matching_docs × |terms|) rows survive the term filter.
-    tf = _materialize(
+    tf = materialize(
         documents.select(
             "doc_id", F.explode(F.split("text", " ")).alias("tok")
         )
@@ -334,12 +330,7 @@ def cooccurrence_pmi(
     PMI uses exact integer counts, so ``ln((c_ab·N)/(df_a·df_b))`` is
     deterministic; ties break lexicographically.
     """
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
-
-    dt = _materialize(
+    dt = materialize(
         documents.select(
             "doc_id",
             F.explode(F.array_distinct(F.split("text", " "))).alias("tok"),
@@ -687,15 +678,14 @@ def unigram_perplexity(documents: DataFrame) -> DataFrame:
         "doc_id", F.explode(F.split("text", " ")).alias("token")
     )
     # The unigram LM (vocab-sized counts) is materialized once
-    # (localCheckpoint): both consumers — the corpus total and the
+    # (checkpoint): both consumers — the corpus total and the
     # per-token join side — would otherwise each re-derive it from
     # their own full corpus scan (Catalyst does no subplan reuse
     # across DataFrame references). One eager vocab-sized job buys the
     # final plan down to a single corpus scan.
-    cnts = (
+    cnts = checkpoint(
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
     )
     total = cnts.agg(F.sum("cnt").alias("total"))
     bits = (
@@ -743,7 +733,7 @@ def bigram_perplexity(documents: DataFrame, lam: float = 0.7) -> DataFrame:
     - bigrams form ROW-LOCALLY (zip_with over the shifted token
       array — no shuffle, no self-join) then explode once;
     - the LM relations are vocab-sized: bigram counts (one corpus
-      aggregation, localCheckpoint — three consumers), context
+      aggregation, checkpoint — three consumers), context
       counts as a re-aggregation, unigram counts from the shared
       tokenization;
     - per-bigram bits = round(−log2(λ·p_ml + (1−λ)·p_uni), 6) fixed
@@ -762,10 +752,9 @@ def bigram_perplexity(documents: DataFrame, lam: float = 0.7) -> DataFrame:
     lam_c = {0.7: 0.3, 0.5: 0.5}.get(lam, round(1.0 - lam, 10))
     arr = F.split("text", " ")
     toks = documents.select("doc_id", F.explode(arr).alias("token"))
-    uni = (
+    uni = checkpoint(
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("cu"))
-        .localCheckpoint()
     )
     total = uni.agg(F.sum("cu").alias("total"))
     pairs = F.zip_with(
@@ -776,10 +765,9 @@ def bigram_perplexity(documents: DataFrame, lam: float = 0.7) -> DataFrame:
     big = documents.select("doc_id", F.explode(pairs).alias("p")).select(
         "doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")
     )
-    cb = (
+    cb = checkpoint(
         big.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("cb"))
-        .localCheckpoint()
     )
     cc = cb.groupBy("w1").agg(F.sum("cb").alias("cc"))
     probs = (
@@ -888,7 +876,7 @@ def bpe_merge_rounds(documents: DataFrame, rounds: int = 2) -> DataFrame:
     singles (`' a a a a '` → `' aa a aa '` — probed). Two passes are
     run (one reaches fixpoint; the second is an idempotent guard),
     with identical replace semantics in both engines. Per-round
-    ``localCheckpoint`` truncates lineage so round N+1 plans against
+    ``checkpoint`` truncates lineage so round N+1 plans against
     the materialized vocab, not a growing expression tree. Output:
     one row per round — the learned merge rule and its frequency.
     """
@@ -901,7 +889,7 @@ def bpe_merge_rounds(documents: DataFrame, rounds: int = 2) -> DataFrame:
     sym0 = F.concat(
         F.lit("  "), F.concat_ws("  ", F.split(F.col("w"), "")), F.lit("  ")
     )
-    vocab = words.select("freq", sym0.alias("s")).localCheckpoint()
+    vocab = checkpoint(words.select("freq", sym0.alias("s")))
 
     learned = []
     for r in range(1, rounds + 1):
@@ -915,12 +903,11 @@ def bpe_merge_rounds(documents: DataFrame, rounds: int = 2) -> DataFrame:
                 )
             ).alias("p"),
         ).select("freq", F.col("p.lhs").alias("lhs"), F.col("p.rhs").alias("rhs"))
-        best = (
+        best = checkpoint(
             pairs.groupBy("lhs", "rhs")
             .agg(F.sum("freq").alias("pf"))
             .orderBy(F.desc("pf"), F.asc("lhs"), F.asc("rhs"))
             .limit(1)
-            .localCheckpoint()
         )
         learned.append(
             best.select(
@@ -935,10 +922,9 @@ def bpe_merge_rounds(documents: DataFrame, rounds: int = 2) -> DataFrame:
             merged = F.col("s")
             for _ in range(2):
                 merged = F.replace(merged, pat, rep)
-            vocab = (
+            vocab = checkpoint(
                 vocab.crossJoin(F.broadcast(best))
                 .select("freq", merged.alias("s"))
-                .localCheckpoint()
             )
     out = learned[0]
     for df in learned[1:]:
@@ -993,7 +979,7 @@ def _bpe_encoded_vocab(doc_words: DataFrame, rounds: int) -> DataFrame:
     sym0 = F.concat(
         F.lit("  "), F.concat_ws("  ", F.split(F.col("w"), "")), F.lit("  ")
     )
-    vocab = words.select("w", "freq", sym0.alias("s")).localCheckpoint()
+    vocab = checkpoint(words.select("w", "freq", sym0.alias("s")))
 
     for _ in range(rounds):
         arr = vocab.withColumn("a", F.split(F.trim(F.col("s")), "  "))
@@ -1006,12 +992,11 @@ def _bpe_encoded_vocab(doc_words: DataFrame, rounds: int) -> DataFrame:
                 )
             ).alias("p"),
         ).select("freq", F.col("p.lhs").alias("lhs"), F.col("p.rhs").alias("rhs"))
-        best = (
+        best = checkpoint(
             pairs.groupBy("lhs", "rhs")
             .agg(F.sum("freq").alias("pf"))
             .orderBy(F.desc("pf"), F.asc("lhs"), F.asc("rhs"))
             .limit(1)
-            .localCheckpoint()
         )
         pat = F.concat(
             F.lit(" "), F.col("lhs"), F.lit("  "), F.col("rhs"), F.lit(" ")
@@ -1020,10 +1005,9 @@ def _bpe_encoded_vocab(doc_words: DataFrame, rounds: int) -> DataFrame:
         merged = F.col("s")
         for _ in range(2):
             merged = F.replace(merged, pat, rep)
-        vocab = (
+        vocab = checkpoint(
             vocab.crossJoin(F.broadcast(best))
             .select("w", "freq", merged.alias("s"))
-            .localCheckpoint()
         )
 
     return vocab.select(
@@ -1228,15 +1212,10 @@ def collocation_llr(
     Emits the ``top_k`` pairs by G² (ties lexicographic):
     (rnk, w1, w2, k11, llr).
     """
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
-
     toks = documents.select(
         F.filter(F.split("text", " "), lambda t: t != "").alias("arr")
     ).filter(F.size("arr") >= 2)
-    grams = _materialize(
+    grams = materialize(
         toks.select(
             F.explode(
                 F.expr(
@@ -1319,14 +1298,9 @@ def dataset_mixing_weights(
     Emits one row per source: (source, n_docs, n_tokens, token_share,
     target_share, weight, capped_weight, effective_tokens).
     """
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
-
     # per_src feeds both the totals rollup and the weights projection —
     # materialized so the corpus tokenizes once.
-    per_src = _materialize_tiny(
+    per_src = materialize_tiny(
         documents.groupBy("source").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(n_tokens("text")).alias("n_tokens"),
@@ -1588,11 +1562,7 @@ def tfidf_cosine_pairs(
 
     Emits ≤ top_k rows: (doc_a, doc_b, n_shared, cosine).
     """
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _doc_shingles,
-        _materialize,
-        _materialize_tiny,
-    )
+    from big_data_trend_analysis_spark.operators.dedup import _doc_shingles
 
     # hashed=True: every downstream shuffle (tf/df aggregation, the
     # rare-postings self-join, both candidate-routed dot joins) moves
@@ -1619,7 +1589,7 @@ def tfidf_cosine_pairs(
     # persisted: the window's exchange is the single consumer of the
     # tf aggregation, so the cache bought nothing.
     w_term = Window.partitionBy("term")
-    posting = _materialize(
+    posting = materialize(
         tf.withColumn("df", F.count(F.lit(1)).over(w_term))
         .crossJoin(F.broadcast(n_docs))
         .select(
@@ -1638,7 +1608,7 @@ def tfidf_cosine_pairs(
     # norms is referenced twice (the doc_a and doc_b sides of the
     # scored join); unpersisted, the posting cache re-aggregated per
     # side (round-13, guide §2.4).
-    norms = _materialize(
+    norms = materialize(
         posting.groupBy("doc_id").agg(
             F.sum(
                 (F.col("w") * F.col("w")).cast("decimal(38,12)")
@@ -1810,12 +1780,8 @@ def paragraph_dedup(
             " ", F.slice(F.col("w"), F.col("idx") * seg_words + 1, seg_words)
         ).alias("seg"),
     ).select("doc_id", "idx", "seg", F.md5("seg").alias("fp"))
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
 
-    segs = _materialize(segs)
+    segs = materialize(segs)
     docfreq = (
         segs.select("doc_id", "fp")
         .distinct()
@@ -1871,7 +1837,7 @@ def ccnet_perplexity_buckets(documents: DataFrame) -> DataFrame:
     """
     from big_data_trend_analysis_spark.functions.ranks import range_cumsum
 
-    ppl = unigram_perplexity(documents).localCheckpoint()
+    ppl = checkpoint(unigram_perplexity(documents))
     per_bits = ppl.groupBy("bits_per_token").agg(
         F.count(F.lit(1)).alias("n_b")
     )
@@ -1938,13 +1904,13 @@ def dsir_importance_weights(
         (F.col("source") == target_source).alias("is_target"),
         F.explode(F.split("text", " ")).alias("token"),
     )
-    cnts = (
+    cnts = checkpoint(
         toks.groupBy("token")
         .agg(
             F.count_if(F.col("is_target")).alias("c_t"),
             F.count(F.lit(1)).alias("c_all"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     totals = cnts.agg(
         F.sum("c_t").alias("n_t"),
@@ -2086,7 +2052,7 @@ def zipf_fit_slope(documents: DataFrame, min_count: int = 5) -> DataFrame:
     """
     toks = documents.select(F.explode(F.split("text", " ")).alias("token"))
     cnts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-    cnts = cnts.localCheckpoint(eager=False)
+    cnts = checkpoint(cnts, eager=False)
     totals = cnts.agg(
         F.count(F.lit(1)).alias("n_types"),
         F.sum("cnt").alias("n_tokens"),
@@ -2257,10 +2223,6 @@ def naive_bayes_lang(
             6,
         ).alias("ln_prior"),
     )
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
 
     train_toks = train.select(
         "lang", F.explode(F.split("text", " ")).alias("tok")
@@ -2272,7 +2234,7 @@ def naive_bayes_lang(
     # once per relation (round-12 optimization, guide §2.3 "aggregate
     # before you shuffle" — the re-expansion cost three full
     # split+explode passes).
-    tok_counts = _materialize(
+    tok_counts = materialize(
         train_toks.groupBy("tok", "lang").agg(
             F.count(F.lit(1)).alias("cnt")
         )

@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 from big_data_trend_analysis_spark.functions.decay import DEFAULT_ANCHOR, decay_weight
 from big_data_trend_analysis_spark.functions.numeric import rounded_sum
 from big_data_trend_analysis_spark.functions.scoring import event_type_score
+from big_data_trend_analysis_spark.scope import checkpoint, materialize
 
 
 def tokenize_explode(documents: DataFrame) -> DataFrame:
@@ -189,15 +190,10 @@ def trend_anomaly(
     hash-checks the full scoring surface even when the fixtures'
     near-uniform traffic flags nothing.
     """
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
-
     # counts feeds both the moment roll-up and the scoring join; pruning
     # differentiates the two branches' exchanges, so without persisting
     # the |windows × types| rollup the fact table scans twice.
-    counts = _materialize(
+    counts = materialize(
         events.groupBy(
             F.window("ts", window_width).getField("start").alias("window_start"),
             F.col("event_type"),
@@ -245,12 +241,7 @@ def theil_sen_slope(events: DataFrame) -> DataFrame:
     Emits one row per event_type:
     (event_type, n_days, n_pairs, sen_slope).
     """
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
-
-    daily = _materialize(
+    daily = materialize(
         events.groupBy(
             "event_type", F.date_trunc("DAY", "ts").alias("day")
         ).agg(F.count(F.lit(1)).alias("n"))
@@ -397,7 +388,7 @@ def kendall_tau_daily(events: DataFrame) -> DataFrame:
         _daily_counts,
     )
 
-    daily = _daily_counts(events).localCheckpoint()
+    daily = checkpoint(_daily_counts(events))
     a = daily.select(
         "event_type", F.col("day").alias("da"), F.col("y").alias("ya")
     )
@@ -459,7 +450,7 @@ def mann_kendall_trend(events: DataFrame) -> DataFrame:
         _daily_counts,
     )
 
-    daily = _daily_counts(events).localCheckpoint(eager=False)
+    daily = checkpoint(_daily_counts(events), eager=False)
     a = daily.select(
         "event_type", F.col("day").alias("da"), F.col("y").alias("ya")
     )
@@ -541,7 +532,7 @@ def runs_test(events: DataFrame) -> DataFrame:
         _daily_counts,
     )
 
-    daily = _daily_counts(events).localCheckpoint(eager=False)
+    daily = checkpoint(_daily_counts(events), eager=False)
     per_y = daily.groupBy("event_type", "y").agg(
         F.count(F.lit(1)).alias("c")
     )

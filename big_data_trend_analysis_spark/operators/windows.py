@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from big_data_trend_analysis_spark.functions.numeric import dec, exact_sum
+from big_data_trend_analysis_spark.scope import materialize
 
 
 def window_tumbling(events: DataFrame, width: str = "10 minutes") -> DataFrame:
@@ -182,18 +183,13 @@ def gapfill_locf(events: DataFrame, width: str = "10 minutes") -> DataFrame:
     oracle recomputes the spine with ``generate_series`` and LOCF with
     ``last_value(… IGNORE NULLS)`` — exact equality.
     """
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
-
     # The bucket relation is referenced three times (bounds, the type
     # spine, the actuals join). Per-branch column pruning makes each
     # branch's aggregation exchange DIFFERENT, so Spark's ReuseExchange
     # never collapses them and the fact table would scan three times —
     # persisting the |types × buckets|-row rollup (KBs) keeps the
     # 100 TB scan+aggregate single-pass.
-    daily = _materialize(
+    daily = materialize(
         events.groupBy(F.window("ts", width).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -380,12 +376,7 @@ def gapfill_linear(events: DataFrame, width: str = "10 minutes") -> DataFrame:
     of epoch seconds, so both engines interpolate bit-identically
     after the 6-dp round.
     """
-    from big_data_trend_analysis_spark.operators.dedup import (
-        _materialize,
-        _materialize_tiny,
-    )
-
-    daily = _materialize(
+    daily = materialize(
         events.groupBy(F.window("ts", width).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

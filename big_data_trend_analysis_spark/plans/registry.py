@@ -41,9 +41,10 @@ other's settings.
 Every call writes only to its own artifacts: temp dirs from
 ``_call_dir``, catalog tables from ``_call_table`` and in-memory Derby
 databases with uuid names, all recorded in the call's
-``scope.CallScope`` together with the relations ``dedup._materialize``
-persists. So a second call of a query never deletes or rewrites what
-the first call's lazy DataFrame still reads. ``QUERIES[name]`` keeps a
+``scope.CallScope`` together with the relations ``scope.materialize``
+persists and the checkpoints ``scope.checkpoint`` makes. So a second
+call of a query never deletes or rewrites what the first call's lazy
+DataFrame still reads. ``QUERIES[name]`` keeps a
 call's dirs and tables until interpreter exit; ``run(name, spark,
 sf_dir)`` collects the rows and releases all of it at once. SQL-family
 queries bind their input DataFrames into the template
@@ -376,15 +377,13 @@ def _stream_sink_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         written = spark.read.parquet(sink_dir)
-        return (
-            written.groupBy("event_type")
-            .agg(
+        # Materialize before the temp sink dir is removed.
+        return scope.checkpoint(
+            written.groupBy("event_type").agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.count_distinct("event_id").alias("n_distinct_ids"),
                 exact_sum("value").alias("sum_value"),
             )
-            # Materialize before the temp sink dir is removed.
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(sink_dir, ignore_errors=True)
@@ -1528,7 +1527,7 @@ def _merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
        (all its keys moved forward, nothing arrived) cannot be
        expressed as a zero-row dynamic overwrite, so its dir is
        dropped explicitly — exactly the delete a table-format commit
-       log records. ``localCheckpoint`` breaks the read-path lineage
+       log records. ``scope.checkpoint`` breaks the read-path lineage
        before overwriting the same location (at cluster scale this is
        a staging-dir commit swap; the rewrite set is identical).
     4. Read the final table back and aggregate per event_type —
@@ -1567,13 +1566,12 @@ def _merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialized once: the compacted changelog feeds three consumers
     # (affected-partition semi-join, survivor anti-join, rewrite union)
     # and is O(changed keys), not O(events).
-    winners = (
+    winners = scope.checkpoint(
         events.filter(F.col("ts") >= cut)
         .groupBy("user_id", "event_type")
         .agg(latest.alias("w"))
         .select("user_id", "event_type", "w.event_id", "w.ts", "w.value")
         .withColumn("p_date", F.to_date("ts"))
-        .localCheckpoint()
     )
 
     table = spark.read.parquet(path)
@@ -1606,10 +1604,10 @@ def _merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys, ["user_id", "event_type"], "left_anti"
     )
     cols = ("user_id", "event_type", "event_id", "ts", "value", "p_date")
-    rewrite = (
-        survivors.select(*cols).unionByName(winners.select(*cols))
+    rewrite = scope.checkpoint(
+        survivors.select(*cols)
+        .unionByName(winners.select(*cols))
         .repartition("p_date")
-        .localCheckpoint()
     )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     rewrite.write.mode("overwrite").partitionBy("p_date").parquet(path)
@@ -2616,23 +2614,12 @@ def _stateful_decay_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stateful_decay_live_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship stateful drain on the Spark 4 state stack (VERDICT r6 #3).
 
-    Same SPLIT-stream multi-batch drain and token-recurrence oracle as
-    ``stateful_decay_live``, but on the Spark 4 state machinery:
-
-    - the **RocksDB state store provider** always — disk-backed keyed
-      state that scales past executor heap, the 100 TB posture for
-      billions of live keys (the HDFS-backed default keeps every key
-      on-heap);
-    - the **transformWithStateInPandas processor**
-      (``streaming/stateful.py::_DecayedScoreProcessor`` — typed
-      ValueState, timer/TTL-capable) whenever its protobuf state-server
-      dependency imports. This container ships no protobuf wheel (the
-      pytest twin ``test_decayed_token_scores_transform_with_state``
-      documents the same gap), so the drain falls back to the
-      ``applyInPandasWithState`` implementation of the IDENTICAL
-      recurrence — still under RocksDB. The oracle pins the recurrence
-      either way; on a protobuf-equipped cluster the TWS path runs
-      with zero code change.
+    Same SPLIT-stream multi-batch drain, ``applyInPandasWithState``
+    recurrence and token-recurrence oracle as ``stateful_decay_live``,
+    but on the **RocksDB state store provider** — disk-backed keyed
+    state that scales past executor heap, the 100 TB posture for
+    billions of live keys (the HDFS-backed default keeps every key
+    on-heap).
     """
     from pyspark.sql import functions as F
 
@@ -2641,23 +2628,17 @@ def _stateful_decay_live_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from big_data_trend_analysis_spark.streaming.stateful import (
         decayed_token_scores,
-        decayed_token_scores_tws,
         tokens_from_text_stream,
     )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        scores = decayed_token_scores_tws
-    except ImportError:
-        scores = decayed_token_scores
 
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     updates = drain_available_now(
-        scores(tokens_from_text_stream(stream_documents_batched(spark, sf_dir))),
+        decayed_token_scores(
+            tokens_from_text_stream(stream_documents_batched(spark, sf_dir))
+        ),
         "update",
     ).table
     return (
@@ -3298,11 +3279,9 @@ def _sql_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     |parts × suppliers|-bounded — orders of magnitude below the fact
     at any scale.
     """
-    from big_data_trend_analysis_spark.operators.dedup import _materialize
-
     tables = _tables(spark, sf_dir, "lineitem", "part", "supplier", "nation", "region")
     ps = _cached_view(
-        _materialize(spark.sql(_SQL_PS, lineitem=tables.pop("lineitem")))
+        scope.materialize(spark.sql(_SQL_PS, lineitem=tables.pop("lineitem")))
     )
     return spark.sql(_SQL_Q2_BODY.replace("{ps}", ps), **tables)
 
@@ -3401,10 +3380,8 @@ def _sql_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole lineitem→ps→scoped pipeline ran twice (6 parquet scans
     in the before plan). scoped is |parts|-bounded.
     """
-    from big_data_trend_analysis_spark.operators.dedup import _materialize
-
     scoped = _cached_view(
-        _materialize(
+        scope.materialize(
             spark.sql(
                 _SQL_Q11_SCOPED,
                 **_tables(spark, sf_dir, "lineitem", "supplier", "nation"),
@@ -4104,8 +4081,8 @@ def run(
 
     Returns ``(columns, rows)``. Once the rows are collected (or the
     call fails) the call's temp dirs are removed, its tables and Derby
-    databases dropped and its cached relations unpersisted, so a
-    long-lived caller accumulates nothing.
+    databases dropped, its cached relations unpersisted and its
+    checkpoints freed, so a long-lived caller accumulates nothing.
     """
     with scope.opened() as made:
         try:
@@ -6266,7 +6243,7 @@ ORACLE_SQL: dict[str, str] = {
         GROUP BY token
     """,
     # Identical recurrence oracle — v2 changes the state-store backend
-    # (RocksDB) and, where protobuf exists, the state API, never the math.
+    # (RocksDB), never the math.
     "stateful_decay_live_v2": """
         WITH tok AS (
             SELECT doc_id % 3 AS batch,

@@ -49,15 +49,15 @@ ENGINE_CONF: dict[str, str] = {
     # AQE for CACHED plans too (stock conf, default false): without it
     # every persisted relation materializes — and every consumer
     # re-reads — at the fixed pre-AQE shuffle width, so the engine's
-    # many small multiply-referenced caches (_materialize) paid
+    # many small multiply-referenced caches (scope.materialize) paid
     # cores-wide task waves regardless of size (measured round-13:
     # sql_tpch_q2's ps cache 146 tasks → 62, the k-row stat caches
     # likewise). With it, AQE coalesces the cached plan's output by
     # BYTES — tiny relations collapse to few partitions, corpus-sized
-    # ones stay wide. It does NOT replace ``dedup._materialize_tiny``'s
+    # ones stay wide. It does NOT replace ``scope.materialize_tiny``'s
     # repartition(1) for provably-bounded relations: an A/B at sf0.1
     # (local[4] on a 4-vCPU host, 3 alternating repetitions, rows
-    # identical) with plain ``_materialize`` in its place was slower on
+    # identical) with plain ``materialize`` in its place was slower on
     # 13 of the 16 queries that use it (friedman_test 1.35 → 2.06 s and
     # 21 → 32 jobs, pacf_by_type 1.32 → 1.71 s, kruskal_wallis 1.80 →
     # 2.06 s). Exchange reuse inside cached plans is unaffected;

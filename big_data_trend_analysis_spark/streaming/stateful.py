@@ -22,7 +22,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -87,66 +86,6 @@ def decayed_token_scores(
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-class _DecayedScoreProcessor(StatefulProcessor):
-    """StatefulProcessor for transformWithStateInPandas (Spark 4 API).
-
-    Same recurrence as ``decayed_token_scores``: per key,
-    ``score ← score·decay + batch_count``. State is a typed ValueState
-    in the (RocksDB-backed) state store — checkpointed, partitioned by
-    key, with optional TTL; the arbitrary-state successor Spark 4
-    positions over ``applyInPandasWithState``.
-    """
-
-    def __init__(self, decay: float):
-        self._decay = decay
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("decay_state", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        batch_count = sum(len(pdf) for pdf in rows)
-        score, total = self._state.get() if self._state.exists() else (0.0, 0)
-        score = score * self._decay + batch_count
-        total = total + batch_count
-        self._state.update((float(score), int(total)))
-        yield pd.DataFrame(
-            {
-                "token": [key[0]],
-                "decayed_score": [float(score)],
-                "total_count": [int(total)],
-            }
-        )
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        return None
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        yield from ()
-
-    def close(self) -> None:
-        return None
-
-
-def decayed_token_scores_tws(
-    tokens: DataFrame,
-    decay: float = 0.9,
-    token_col: str = "token",
-) -> DataFrame:
-    """``decayed_token_scores`` on the transformWithStateInPandas API.
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass = …RocksDBStateStoreProvider``)
-    — bundled with Spark, no extra jars; disk-backed state scales past
-    executor heap, which is the 100 TB posture for billions of keys.
-    """
-    return tokens.groupBy(token_col).transformWithStateInPandas(
-        statefulProcessor=_DecayedScoreProcessor(decay),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

@@ -52,6 +52,12 @@ def run_spark(df) -> tuple[list[str], list[tuple]]:
     return df.columns, [tuple(r) for r in df.collect()]
 
 
+def persistent_rdds(spark) -> set[int]:
+    """Ids of the SparkContext's persistent RDDs (caches and local
+    checkpoints). A ``registry.run`` call must add none."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def run_oracle(
     con: duckdb.DuckDBPyConnection, sql: str
 ) -> tuple[list[str], list[tuple]]:

@@ -90,71 +90,6 @@ def test_decayed_token_scores_stateful(spark, sf_dir, tmp_path):
         assert row.decayed_score == pytest.approx(float(exact[token]))
 
 
-def test_decayed_token_scores_transform_with_state(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas (Spark 4 arbitrary-state API) must
-    produce the same per-token result as the applyInPandasWithState
-    path on a single availableNow batch (RocksDB-backed state store).
-
-    Spark's TWS state server speaks protobuf to the Python worker, so
-    this path needs the protobuf wheel — absent in this container; the
-    skip documents (rather than hides) the gap, and the recurrence
-    itself is fully covered by the applyInPandasWithState twin above.
-    """
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas needs protobuf for its state server",
-    )
-    from big_data_trend_analysis_spark.streaming.stateful import (
-        decayed_token_scores_tws,
-    )
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        docs_stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, source string, n_chars long"
-            )
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir)
-        )
-        scored = decayed_token_scores_tws(tokens_from_text_stream(docs_stream))
-        query = (
-            scored.writeStream.format("memory")
-            .queryName("tok_state_tws")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(180)
-        got = {r.token: r for r in spark.table("tok_state_tws").collect()}
-    finally:
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
-
-    from big_data_trend_analysis_spark.sources.tables import load_table
-
-    exact = {
-        r.token: r.cnt
-        for r in load_table(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    assert set(got) == set(exact)
-    for token, row in got.items():
-        assert row.total_count == exact[token]
-        assert row.decayed_score == pytest.approx(float(exact[token]))
-
-
 def test_decayed_token_scores_multi_batch(spark, tmp_path):
     """Cross-batch state: two files drained oldest-first with
     maxFilesPerTrigger=1 become two micro-batches, and the second

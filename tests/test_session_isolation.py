@@ -8,7 +8,8 @@ change what another client's query plans. Likewise every call writes
 only to its own temp dirs and tables, so a second call of the same
 query (lazy rerun, or a concurrent client) cannot destroy or change
 what the first call's DataFrame still reads; ``registry.run`` releases
-them once the rows are collected.
+them, and the call's caches and checkpoints, once the rows are
+collected.
 """
 
 from __future__ import annotations
@@ -16,6 +17,8 @@ from __future__ import annotations
 import atexit
 import glob
 import os
+import pathlib
+import re
 import sys
 import tempfile
 import threading
@@ -29,6 +32,7 @@ from big_data_trend_analysis_spark.plans.registry import ORACLE_SQL, QUERIES
 from tests.oracle_utils import (
     assert_results_match,
     duckdb_connection,
+    persistent_rdds,
     run_oracle,
     run_spark,
 )
@@ -206,20 +210,49 @@ def test_concurrent_calls_each_read_their_own_artifacts(
 def _artifacts(spark):
     dirs = set(glob.glob(os.path.join(tempfile.gettempdir(), "bdta_*")))
     tables = {t.name for t in spark.catalog.listTables() if t.name.startswith("bdta_")}
-    cached = len(spark.sparkContext._jsc.getPersistentRDDs())
-    return dirs, tables, cached
+    return dirs, tables, persistent_rdds(spark)
 
 
-@pytest.mark.parametrize("name", ["partitioned_write_roundtrip", "sql_tpch_q2"])
+@pytest.mark.parametrize(
+    "name",
+    ["partitioned_write_roundtrip", "sql_tpch_q2", "dedup_clusters",
+     "connected_components", "feature_binning"],
+)
 def test_run_releases_what_concurrent_calls_made(
     spark, sf_dir, expected, name, tmp_path, monkeypatch
 ):
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))  # call dirs land here
-    before = _artifacts(spark)
+    dirs, tables, rdds = _artifacts(spark)
     for res in _in_two_threads(lambda: registry.run(name, spark, sf_dir)):
         assert not isinstance(res, Exception), res
         assert_results_match(res, expected(name), name)
-    assert _artifacts(spark) == before
+    after_dirs, after_tables, after_rdds = _artifacts(spark)
+    assert (after_dirs, after_tables) == (dirs, tables)
+    assert after_rdds <= rdds
+
+
+#: A DataFrame cached or checkpointed other than through ``scope``.
+_CACHE_CALL = re.compile(
+    r"\.(localCheckpoint|persist)\(|\.cache\(\)|(?<!scope)\.checkpoint\("
+)
+#: dedup's bindings of the scope helpers (kept for perfbench's tracer).
+_DEDUP_NAME = re.compile(r"\b_(materialize|materialize_tiny|truncate_lineage)\b")
+
+
+def test_only_scope_caches_or_checkpoints():
+    """Every cached intermediate goes through ``scope``, so a query call
+    that ``registry.run`` releases leaves none behind."""
+    package = pathlib.Path(scope.__file__).parent
+    found = []
+    for path in sorted(package.rglob("*.py")):
+        if path.name == "scope.py":
+            continue
+        for no, line in enumerate(path.read_text().splitlines(), 1):
+            if _CACHE_CALL.search(line) or (
+                path.name != "dedup.py" and _DEDUP_NAME.search(line)
+            ):
+                found.append(f"{path.relative_to(package)}:{no}: {line.strip()}")
+    assert found == []
 
 
 def test_a_shared_cache_is_unpersisted_by_its_last_release(spark):
@@ -237,7 +270,7 @@ def test_a_shared_cache_is_unpersisted_by_its_last_release(spark):
     def work():
         try:
             with scope.opened() as made:
-                df = scope.persist(plan.select("*"), StorageLevel.MEMORY_AND_DISK)
+                df = scope.materialize(plan.select("*"))
                 assert df.count() == 7
             scopes.append(made)
         except Exception as exc:  # noqa: BLE001 - reported by the assert below

@@ -12,8 +12,9 @@ Usage::
 
 With no names, checks every oracle-backed query; rows-only queries are
 executed for clean-run verification. Each query runs through
-``registry.run``, which releases its temp dirs, tables and caches
-before the next one starts.
+``registry.run``, which releases its temp dirs, tables, caches and
+checkpoints before the next one starts; a query that leaves a new
+persistent RDD behind counts as a failure.
 """
 
 from __future__ import annotations
@@ -28,7 +29,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from big_data_trend_analysis_spark.plans.registry import ORACLE_SQL, QUERIES, run
 from big_data_trend_analysis_spark.session import get_spark
-from tests.oracle_utils import assert_results_match, duckdb_connection, run_oracle
+from tests.oracle_utils import (
+    assert_results_match,
+    duckdb_connection,
+    persistent_rdds,
+    run_oracle,
+)
 
 
 def main() -> int:
@@ -48,7 +54,11 @@ def main() -> int:
     for name in names:
         t0 = time.monotonic()
         try:
+            before = persistent_rdds(spark)
             spark_res = run(name, spark, args.sf)
+            left = persistent_rdds(spark) - before
+            if left:
+                raise AssertionError(f"left {len(left)} new persistent RDDs")
             if name in ORACLE_SQL:
                 oracle_res = run_oracle(con, ORACLE_SQL[name])
                 assert_results_match(spark_res, oracle_res, name)
