@@ -202,7 +202,9 @@ def funnel_conversion(events: DataFrame) -> DataFrame:
         F.count("t2").alias("n_view"),
         F.count("t3").alias("n_click"),
         F.count("t4").alias("n_purchase"),
-        F.round(F.count("t4") / F.count("t1"), 6).alias("full_funnel_rate"),
+        F.round(F.try_divide(F.count("t4"), F.count("t1")), 6).alias(
+            "full_funnel_rate"
+        ),
     )
 
 

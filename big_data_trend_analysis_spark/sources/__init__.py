@@ -1,5 +1,5 @@
 """Sources & sinks: parquet table catalog, Kafka/rate/memory streams, JDBC."""
 
-from big_data_trend_analysis_spark.sources.tables import TABLES, load_table, register_views
+from big_data_trend_analysis_spark.sources.tables import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "register_views"]
+__all__ = ["TABLES", "load_table"]

@@ -513,6 +513,35 @@ def test_funnel_equal_timestamps_are_strict(spark):
     assert (row.n_signup, row.n_view) == (1, 0)
 
 
+@pytest.mark.parametrize("events_slice", ["empty", "no_signups"])
+def test_funnel_without_signups_matches_oracle(spark, sf_dir, tmp_path, events_slice):
+    """An events slice with no signups has an empty funnel denominator:
+    the rate is NULL, as in DuckDB, not an ANSI DIVIDE_BY_ZERO."""
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from big_data_trend_analysis_spark.plans.registry import ORACLE_SQL, QUERIES
+    from tests.oracle_utils import assert_results_match, run_oracle, run_spark
+
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    if events_slice == "empty":
+        events = events.slice(0, 0)
+    else:
+        events = events.filter(pc.not_equal(events["event_type"], "signup"))
+        assert events.num_rows > 0
+    path = tmp_path / "events.parquet"
+    pq.write_table(events, str(path))
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+    expected = run_oracle(con, ORACLE_SQL["funnel_conversion"])
+    con.close()
+    assert expected[1] == [(0, 0, 0, 0, None)]
+    got = run_spark(QUERIES["funnel_conversion"](spark, str(tmp_path)))
+    assert_results_match(got, expected, "funnel_conversion")
+
+
 def test_hashed_shingles_preserve_set_cardinalities(spark, sf_dir):
     """The hashed-shingle rewrite claims Jaccard values are unchanged
     because xxhash64 is collision-free at corpus scale; verify the

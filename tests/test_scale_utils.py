@@ -1,5 +1,5 @@
 """Scale-utility tests: salted joins, date partitioning, bucketed joins,
-and the SQL entry point over registered views."""
+and the SQL entry point over bound DataFrames."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ from big_data_trend_analysis_spark.sources.lakehouse import (
     write_bucketed,
     write_date_partitioned,
 )
-from big_data_trend_analysis_spark.sources.tables import load_table, register_views
+from big_data_trend_analysis_spark.sources.tables import load_table
 
 
 def _plan(df) -> str:
@@ -220,17 +220,20 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
 
 
 def test_sql_entry_point(spark, sf_dir):
-    """spark.sql over registered views — the SQL surface the reference
-    never had (SURVEY §2.1: 'spark.sql never called')."""
-    register_views(spark, sf_dir)
+    """spark.sql over catalog tables bound as DataFrame arguments — the
+    SQL surface the reference never had (SURVEY §2.1: 'spark.sql never
+    called'). Binding leaves no temp view on the shared session."""
     out = spark.sql(
         """
         SELECT r_name, COUNT(*) AS n
-        FROM customer
-        JOIN nation ON c_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
+        FROM {customer}
+        JOIN {nation} ON c_nationkey = n_nationkey
+        JOIN {region} ON n_regionkey = r_regionkey
         GROUP BY r_name ORDER BY n DESC
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        nation=load_table(spark, sf_dir, "nation"),
+        region=load_table(spark, sf_dir, "region"),
     ).collect()
     assert len(out) == 5
     assert sum(r.n for r in out) == load_table(spark, sf_dir, "customer").count()
