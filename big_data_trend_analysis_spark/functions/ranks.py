@@ -1,10 +1,9 @@
 """Distributed exact order statistics: the range-partitioned cumsum.
 
-Promoted from ``operators/drift._range_cumsum`` (docs/ROADMAP.md
-round-12 frontier #3 — six consumers now span three operator modules:
-Mann–Whitney ranks, the KS merged-support CDF, Kruskal–Wallis k-group
-ranks, CCNet perplexity-bucket cutoffs, funnel conversion-latency
-quantiles, and feature binning's equi-depth edges).
+Promoted from ``operators/drift._range_cumsum``: its six consumers span
+three operator modules (Mann–Whitney ranks, the KS merged-support CDF,
+Kruskal–Wallis k-group ranks, CCNet perplexity-bucket cutoffs, funnel
+conversion-latency quantiles, and feature binning's equi-depth edges).
 
 The problem it solves: every exact global order statistic (rank, CDF,
 discrete quantile) needs an inclusive cumulative sum over a global

@@ -1,7 +1,6 @@
 """Distribution quantiles as engine-portable column expressions.
 
-Round-11 staging (docs/ROADMAP.md "Round-11 frontier" #1): the
-experimentation tier flags significance against fixed normal critical
+The experimentation tier flags significance against fixed normal critical
 values (``ab_test_welch`` uses 1.96); the correct Welch gate is the
 t-distribution quantile at the Welch–Satterthwaite df. SciPy is the
 obvious tool and exactly the wrong one here — the gate needs the SAME

@@ -745,37 +745,44 @@ def candidate_edges(
     return pairs.union(pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
 
-#: Shuffle partitions for the label-propagation loop. The iterative
-#: state is the candidate-subgraph endpoint set (hundreds of rows at
-#: fixture SFs — a vanishing fraction of any corpus), so running the
-#: per-round joins at corpus-sized parallelism is pure task-scheduling
-#: overhead. A cluster deployment sizes this to |endpoints| /
-#: target-rows-per-task, NOT to the corpus; edge generation and the
-#: final corpus join stay at the session's full parallelism either way.
-CLUSTER_LOOP_PARTITIONS = "8"
+#: Rounds ``dedup_clusters`` runs before it gives up. A planted chain
+#: of n documents with shuffled ids took 8 rounds at n = 200, 9 at
+#: 1000 and 12 at 5000.
+CLUSTER_MAX_ROUNDS = 50
 
 
-def dedup_clusters(documents: DataFrame, max_iters: int = 50) -> DataFrame:
+def dedup_clusters(documents: DataFrame) -> DataFrame:
     """Resolve near-dup candidate pairs into canonical clusters.
 
-    Connected components by iterative min-label propagation — run
-    **only over edge endpoints**, never the corpus: docs that appear in
-    no candidate pair are their own cluster by definition, so the
+    Connected components by min-label propagation — run **only over
+    edge endpoints**, never the corpus: docs that appear in no
+    candidate pair are their own cluster by definition, so the
     iterative state (labels), every per-round join, and every
     checkpoint is sized to the candidate subgraph, a vanishing fraction
     of a 100 TB corpus. The corpus-sized relation is touched exactly
     twice: once to generate edges, once in the final left join that
-    attaches resolved labels (endpoint relation broadcasts when small;
-    singletons coalesce to their own id).
+    attaches resolved labels (singletons coalesce to their own id).
 
-    Each round every endpoint takes the min of its label and its
-    neighbors' labels, until a fixed point — O(component diameter)
-    rounds; near-dup components are tiny (pairs/chains), so 2-3 rounds
-    in practice. Convergence is checked every second round (the
-    propagation step is monotone and idempotent at the fixed point, so
-    the check's only cost is the extra action it saves), and a loop
-    that exhausts ``max_iters`` unconverged raises rather than
-    returning silently wrong cluster ids. Output: (doc_id, cluster_id,
+    Every label is an endpoint of the same component, no larger than
+    its node, so labels only fall and the fixpoint gives each node its
+    component's min doc_id (``min`` in a recursion is monotone, so a
+    faster path to the fixpoint gives the same answer — RaSQL, SIGMOD
+    2019). Each round:
+
+    - every node sees the least label among itself and its neighbours;
+    - every label value (a root, or a node some label still points at)
+      is hooked to the least label any node carrying it saw;
+    - pointer jumping shortcuts ``label <- label[label]``.
+
+    Propagation alone needs one round per hop of a component's
+    diameter; hooking whole trees and jumping makes the rounds grow
+    with its logarithm on the planted chains (``CLUSTER_MAX_ROUNDS``
+    gives the figures). Each round is one lazy checkpoint and one
+    convergence count, which materializes it; the round it replaced is
+    freed then, so a call holds at most the shingle cache, the edges
+    and two rounds, and the edges go once the loop ends. A loop that
+    exhausts ``CLUSTER_MAX_ROUNDS`` unconverged raises rather than
+    returning wrong cluster ids. Output: (doc_id, cluster_id,
     is_canonical) for every document; ``is_canonical`` (min doc_id
     wins) selects the one copy a curation pipeline keeps.
 
@@ -785,58 +792,52 @@ def dedup_clusters(documents: DataFrame, max_iters: int = 50) -> DataFrame:
     # Edge generation scans the corpus — runs (eagerly, inside the
     # checkpoint) at the session's full parallelism.
     edges = _truncate_lineage(candidate_edges(documents))
-    # Edges are symmetric, so src alone covers every endpoint. Initial
-    # labels need no checkpoint of their own: the lineage is one
-    # distinct off the already-checkpointed edges.
+    # Edges are symmetric, so src alone covers every endpoint, and
+    # every endpoint has a neighbour.
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
         .select("doc_id", F.col("doc_id").alias("label"))
     )
-    converged = False
-    spark = documents.sparkSession
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", CLUSTER_LOOP_PARTITIONS)
-    try:
-        for it in range(max_iters):
-            neighbor_min = (
-                edges.join(labels, edges.src == labels.doc_id)
-                .groupBy(F.col("dst").alias("doc_id"))
-                .agg(F.min("label").alias("nmin"))
-            )
-            # Lineage truncation: each round's plan references the previous
-            # labels twice, so without it the tree doubles per iteration.
-            # The pre-update label rides along so the convergence check is
-            # a filter over the checkpointed rows, not a self-join.
-            # eager=False: the odd-round convergence count is the only
-            # action this loop needs — it materializes the (still
-            # plan-truncated) checkpoint chain two rounds at a time,
-            # instead of one driver-blocking checkpoint job per round
-            # (41 jobs / 64 stages measured at sf0.1 before; round-12).
-            new_labels = _truncate_lineage(
-                labels.join(neighbor_min, "doc_id", "left").select(
-                    "doc_id",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                    ).alias("label"),
-                    F.col("label").alias("prev"),
-                ),
-                eager=False,
-            )
-            labels = new_labels.select("doc_id", "label")
-            # Check convergence on odd rounds only: halves the count actions
-            # while the propagation itself stays exactly as before.
-            if it % 2 == 1 or it == max_iters - 1:
-                if new_labels.filter(F.col("label") != F.col("prev")).count() == 0:
-                    converged = True
-                    break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-    if not converged:
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iters} rounds — "
-            "a component's diameter exceeds the bound; raise max_iters"
+    last = None  # the previous round's checkpoint
+    for _ in range(CLUSTER_MAX_ROUNDS):
+        seen = (
+            edges.join(labels, edges.src == labels.doc_id)
+            .groupBy(F.col("dst").alias("doc_id"))
+            .agg(F.min("label").alias("nmin"))
+            .join(labels, "doc_id")
+            .select("doc_id", "label", F.least("label", "nmin").alias("seen"))
         )
+        hooks = seen.groupBy(F.col("label").alias("doc_id")).agg(
+            F.min("seen").alias("hook")
+        )
+        # least() skips the NULL hook of a node no label points at.
+        hooked = seen.join(hooks, "doc_id", "left").select(
+            "doc_id",
+            F.least("seen", "hook").alias("parent"),
+            F.col("label").alias("prev"),
+        )
+        jump = hooked.select(
+            F.col("doc_id").alias("parent"), F.col("parent").alias("label")
+        )
+        # Lazy: the convergence count below is this round's one action,
+        # and it materializes the checkpoint. The pre-round label rides
+        # along so the check is a filter, not a self-join.
+        rnd = _truncate_lineage(
+            hooked.join(jump, "parent").select("doc_id", "label", "prev"),
+            eager=False,
+        )
+        changed = rnd.filter(F.col("label") != F.col("prev")).count()
+        if last is not None:
+            scope.free(last)
+        last, labels = rnd, rnd.select("doc_id", "label")
+        if not changed:
+            break
+    else:
+        raise RuntimeError(
+            f"dedup_clusters did not converge in {CLUSTER_MAX_ROUNDS} rounds"
+        )
+    scope.free(edges)
     return (
         documents.select("doc_id")
         .join(labels, "doc_id", "left")

@@ -1734,9 +1734,7 @@ def pacf_daily(events: DataFrame, max_lag: int = 7) -> DataFrame:
 
 def pacf_by_type(events: DataFrame, max_lag: int = 7) -> DataFrame:
     """Per-series partial autocorrelation: ``pacf_daily`` keyed by
-    ``event_type`` (docs/ROADMAP.md round-12 frontier #2 — "the
-    per-series variant is the same applyInPandas over a keyed ACF
-    relation").
+    ``event_type``: the same applyInPandas, over a keyed ACF relation.
 
     An AR-order diagnostic per monitored series, not just the global
     one: each event type's daily-count series gets its own

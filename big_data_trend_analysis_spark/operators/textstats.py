@@ -8,6 +8,8 @@ enrichments a training-data pipeline computes on every one of its
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -880,19 +882,34 @@ def bpe_merge_rounds(documents: DataFrame, rounds: int = 2) -> DataFrame:
     the materialized vocab, not a growing expression tree. Output:
     one row per round — the learned merge rule and its frequency.
     """
-    words = (
-        documents.select(F.explode(F.split("text", " ")).alias("w"))
-        .where(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
+    rules, _ = _bpe_rounds(
+        documents.select(F.explode(F.split("text", " ")).alias("w")).where(
+            F.col("w") != ""
+        ),
+        rounds,
     )
+    return rules
+
+
+def _bpe_rounds(words: DataFrame, rounds: int) -> tuple[DataFrame, DataFrame]:
+    """The argmax-and-replace merge rounds over the |vocab| relation.
+
+    ``words`` has one row per word occurrence (column ``w``). Returns
+    the learned rules — ``(round, lhs, rhs, pf)``, one row per round —
+    and the vocab after the last merge, ``(w, freq, s)`` with ``s``
+    the word's symbols joined by double spaces. Each round checkpoints
+    the vocab it reads, so the merged vocab is checkpointed only when
+    a later round reads it; the returned one is still lazy.
+    """
     sym0 = F.concat(
         F.lit("  "), F.concat_ws("  ", F.split(F.col("w"), "")), F.lit("  ")
     )
-    vocab = checkpoint(words.select("freq", sym0.alias("s")))
-
+    vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("freq")).select(
+        "w", "freq", sym0.alias("s")
+    )
     learned = []
     for r in range(1, rounds + 1):
+        vocab = checkpoint(vocab)
         arr = vocab.withColumn("a", F.split(F.trim(F.col("s")), "  "))
         pairs = arr.select(
             "freq",
@@ -910,26 +927,19 @@ def bpe_merge_rounds(documents: DataFrame, rounds: int = 2) -> DataFrame:
             .limit(1)
         )
         learned.append(
-            best.select(
-                F.lit(r).cast("int").alias("round"), "lhs", "rhs", "pf"
-            )
+            best.select(F.lit(r).cast("int").alias("round"), "lhs", "rhs", "pf")
         )
-        if r < rounds:
-            pat = F.concat(
-                F.lit(" "), F.col("lhs"), F.lit("  "), F.col("rhs"), F.lit(" ")
-            )
-            rep = F.concat(F.lit(" "), F.col("lhs"), F.col("rhs"), F.lit(" "))
-            merged = F.col("s")
-            for _ in range(2):
-                merged = F.replace(merged, pat, rep)
-            vocab = checkpoint(
-                vocab.crossJoin(F.broadcast(best))
-                .select("freq", merged.alias("s"))
-            )
-    out = learned[0]
-    for df in learned[1:]:
-        out = out.unionByName(df)
-    return out
+        pat = F.concat(
+            F.lit(" "), F.col("lhs"), F.lit("  "), F.col("rhs"), F.lit(" ")
+        )
+        rep = F.concat(F.lit(" "), F.col("lhs"), F.col("rhs"), F.lit(" "))
+        merged = F.col("s")
+        for _ in range(2):
+            merged = F.replace(merged, pat, rep)
+        vocab = vocab.crossJoin(F.broadcast(best)).select(
+            "w", "freq", merged.alias("s")
+        )
+    return functools.reduce(DataFrame.unionByName, learned), vocab
 
 
 def bpe_encode(documents: DataFrame, rounds: int = 2) -> DataFrame:
@@ -971,46 +981,11 @@ def bpe_encode(documents: DataFrame, rounds: int = 2) -> DataFrame:
 def _bpe_encoded_vocab(doc_words: DataFrame, rounds: int) -> DataFrame:
     """Shared encode-the-vocabulary stage of ``bpe_encode`` /
     ``pack_sequences_bpe``: re-derive the merge chain over the
-    |vocab| relation (identical argmax-and-replace rounds as
-    ``bpe_merge_rounds``, each rule a broadcast 1-row scalar) and
-    return ``(w, freq, tpw, rt)`` — tokens-per-word and the
+    |vocab| relation (``_bpe_rounds``, the rounds ``bpe_merge_rounds``
+    runs) and return ``(w, freq, tpw, rt)`` — tokens-per-word and the
     lossless-reassembly flag for every distinct word."""
-    words = doc_words.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-    sym0 = F.concat(
-        F.lit("  "), F.concat_ws("  ", F.split(F.col("w"), "")), F.lit("  ")
-    )
-    vocab = checkpoint(words.select("w", "freq", sym0.alias("s")))
-
-    for _ in range(rounds):
-        arr = vocab.withColumn("a", F.split(F.trim(F.col("s")), "  "))
-        pairs = arr.select(
-            "freq",
-            F.explode(
-                F.arrays_zip(
-                    F.expr("slice(a, 1, size(a) - 1)").alias("lhs"),
-                    F.expr("slice(a, 2, size(a) - 1)").alias("rhs"),
-                )
-            ).alias("p"),
-        ).select("freq", F.col("p.lhs").alias("lhs"), F.col("p.rhs").alias("rhs"))
-        best = checkpoint(
-            pairs.groupBy("lhs", "rhs")
-            .agg(F.sum("freq").alias("pf"))
-            .orderBy(F.desc("pf"), F.asc("lhs"), F.asc("rhs"))
-            .limit(1)
-        )
-        pat = F.concat(
-            F.lit(" "), F.col("lhs"), F.lit("  "), F.col("rhs"), F.lit(" ")
-        )
-        rep = F.concat(F.lit(" "), F.col("lhs"), F.col("rhs"), F.lit(" "))
-        merged = F.col("s")
-        for _ in range(2):
-            merged = F.replace(merged, pat, rep)
-        vocab = checkpoint(
-            vocab.crossJoin(F.broadcast(best))
-            .select("w", "freq", merged.alias("s"))
-        )
-
-    return vocab.select(
+    _, vocab = _bpe_rounds(doc_words, rounds)
+    return checkpoint(vocab).select(
         "w",
         "freq",
         F.size(F.split(F.trim(F.col("s")), "  ")).alias("tpw"),

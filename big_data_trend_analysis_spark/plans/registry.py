@@ -2736,10 +2736,10 @@ def _stream_restart_recovery_live(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from big_data_trend_analysis_spark.streaming.sources import (
         EVENT_STREAM_BATCHES,
-        _split_events_dir,
+        _split_dir,
     )
 
-    split_dir = _split_events_dir(sf_dir, EVENT_STREAM_BATCHES)
+    split_dir = _split_dir(sf_dir, "events", "event_id", EVENT_STREAM_BATCHES)
     work = tempfile.mkdtemp(prefix="bdta_restart_")
     ckpt = os.path.join(work, "ckpt")
     src = os.path.join(work, "src")
@@ -2850,10 +2850,10 @@ def _stream_rate_limited_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_trend_analysis_spark.streaming.sources import (
         EVENT_STREAM_BATCHES,
-        _split_events_dir,
+        _split_dir,
     )
 
-    split_dir = _split_events_dir(sf_dir, EVENT_STREAM_BATCHES)
+    split_dir = _split_dir(sf_dir, "events", "event_id", EVENT_STREAM_BATCHES)
     ddl = (
         "event_id long, ts timestamp, user_id long, "
         "event_type string, value double, props string"

@@ -8,7 +8,9 @@ relations ``materialize`` persists and the DataFrames ``checkpoint``
 returns. ``release`` removes all of them; ``registry.run`` calls it
 once the rows are collected, while a lazily returned DataFrame keeps
 them until interpreter exit (its checkpoints go when Spark's
-ContextCleaner collects them).
+ContextCleaner collects them). An iterative operator need not wait for
+either: ``free`` drops a round's checkpoint once the next round is
+materialized.
 
 This module is the one place that persists or checkpoints: operators
 cache an intermediate only through ``materialize``,
@@ -65,9 +67,7 @@ class CallScope:
         for path in self.dirs:
             shutil.rmtree(path, ignore_errors=True)
         for df in self.checkpoints:
-            # A checkpointed DataFrame's plan is a LogicalRDD over the
-            # checkpoint RDD.
-            df._jdf.queryExecution().logical().rdd().unpersist(False)
+            free(df)
         with _CACHE_LOCK:
             for key, df in self.cached:
                 _CACHE_REFS[key] -= 1
@@ -165,3 +165,12 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     if made is not None:
         made.checkpoints.append(out)
     return out
+
+
+def free(df: DataFrame) -> None:
+    """Free the blocks of a DataFrame ``checkpoint`` returned, before
+    its scope's release. Only for a checkpoint nothing reads again: it
+    has no lineage to recompute from. Freeing twice is harmless."""
+    # A checkpointed DataFrame's plan is a LogicalRDD over the
+    # checkpoint RDD.
+    df._jdf.queryExecution().logical().rdd().unpersist(False)

@@ -85,8 +85,18 @@ def _resolved_schema(spark: SparkSession, path: str) -> tuple[StructType, tuple[
         hit = _SCHEMAS.get(key)
     if hit is not None and hit[:2] == version:
         return hit[2], hit[3]
-    # Two threads may both miss and both infer; the results are equal.
-    schema = spark.read.parquet(path).schema
+    # Infer on a child session, so the caller's confs stay as they are:
+    # TIMESTAMP(NANOS) columns must infer as long (restored below) and
+    # naive micros timestamps as TIMESTAMP, not TIMESTAMP_NTZ — the
+    # engine's event-time semantics are LTZ under a UTC session
+    # (session.py ENGINE_CONF), matching DuckDB's naive read
+    # bit-for-bit while keeping ts predicates pushdown-eligible (a
+    # post-read cast would defeat parquet filter pushdown). Two threads
+    # may both miss and both infer; the results are equal.
+    infer = spark.newSession()
+    infer.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    infer.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    schema = infer.read.parquet(path).schema
     nanos = tuple(_nano_ts_columns(path))
     with _SCHEMAS_LOCK:
         _SCHEMAS[key] = (*version, schema, nanos)
@@ -98,23 +108,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     The read passes the file's cached schema (``_resolved_schema``), so
     it runs no Spark job; only the first load of each version of a file
-    pays Spark's footer inference. The two confs are still set on every
-    call, before the lookup: the schema a miss infers depends on them,
-    and only the lookup knows whether the call misses. Setting them on
-    a hit too leaves the caller's session as every load left it before
-    the cache. The read itself needs neither: given the cached schema,
-    Spark hands a TIMESTAMP(NANOS) column over as the long it declares.
+    pays Spark's footer inference, on a child session with the two
+    confs that inference needs. The caller's session keeps its confs:
+    the read needs neither, since given the cached schema Spark hands a
+    TIMESTAMP(NANOS) column over as the long it declares, and a naive
+    micros column as the TIMESTAMP it declares.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Naive (non-UTC-adjusted) micros timestamps must read as TIMESTAMP,
-    # not TIMESTAMP_NTZ: the engine's event-time semantics are LTZ under
-    # a UTC session (session.py ENGINE_CONF), matching DuckDB's naive
-    # read bit-for-bit while keeping ts predicates pushdown-eligible
-    # (a post-read cast would defeat parquet filter pushdown).
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     schema, nanos = _resolved_schema(spark, path)
     df = spark.read.schema(schema).parquet(path)
     for col in nanos:

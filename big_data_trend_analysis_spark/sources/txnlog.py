@@ -3,8 +3,7 @@ lakehouse trio was missing.
 
 ``merge_roundtrip`` (copy-on-write rewrite), ``mor_read_view`` (merge-
 on-read) and ``compact_small_files`` demonstrate the table-format DATA
-mechanics in stock parquet; what they lack (docs/ROADMAP.md round-7
-delta) is the TRANSACTION LOG: an atomic, versioned record of which
+mechanics in stock parquet; what they lack is the TRANSACTION LOG: an atomic, versioned record of which
 files constitute each table snapshot. Without it, readers discover
 files by directory listing — so a concurrent rewrite is visible
 half-applied (old and new files listed together: rows double-counted)

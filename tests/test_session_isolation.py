@@ -231,9 +231,9 @@ def test_run_releases_what_concurrent_calls_made(
     assert after_rdds <= rdds
 
 
-#: A DataFrame cached or checkpointed other than through ``scope``.
+#: A DataFrame cached, checkpointed or freed other than through ``scope``.
 _CACHE_CALL = re.compile(
-    r"\.(localCheckpoint|persist)\(|\.cache\(\)|(?<!scope)\.checkpoint\("
+    r"\.(localCheckpoint|persist|unpersist)\(|\.cache\(\)|(?<!scope)\.checkpoint\("
 )
 #: dedup's bindings of the scope helpers (kept for perfbench's tracer).
 _DEDUP_NAME = re.compile(r"\b_(materialize|materialize_tiny|truncate_lineage)\b")
@@ -241,15 +241,18 @@ _DEDUP_NAME = re.compile(r"\b_(materialize|materialize_tiny|truncate_lineage)\b"
 
 def test_only_scope_caches_or_checkpoints():
     """Every cached intermediate goes through ``scope``, so a query call
-    that ``registry.run`` releases leaves none behind."""
+    that ``registry.run`` releases leaves none behind, and no operator
+    sets a conf on the session it was handed."""
     package = pathlib.Path(scope.__file__).parent
     found = []
     for path in sorted(package.rglob("*.py")):
         if path.name == "scope.py":
             continue
         for no, line in enumerate(path.read_text().splitlines(), 1):
-            if _CACHE_CALL.search(line) or (
-                path.name != "dedup.py" and _DEDUP_NAME.search(line)
+            if (
+                _CACHE_CALL.search(line)
+                or (path.name != "dedup.py" and _DEDUP_NAME.search(line))
+                or (path.parent.name == "operators" and "conf.set(" in line)
             ):
                 found.append(f"{path.relative_to(package)}:{no}: {line.strip()}")
     assert found == []

@@ -4,6 +4,7 @@ tweet parsing without a broker, cumulative state, error side-channel."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -1013,6 +1014,44 @@ def test_batched_events_stream_runs_multiple_microbatches(spark, sf_dir, tmp_pat
     got = spark.table("evsplit_ts_check").agg(F.max("ts"), F.min("ts")).collect()[0]
     want = batch.agg(F.max("ts"), F.min("ts")).collect()[0]
     assert [str(x) for x in got] == [str(x) for x in want]
+
+
+@pytest.mark.parametrize("table,key", [("documents", "doc_id"), ("events", "event_id")])
+def test_concurrent_first_splits_publish_one_complete_split(
+    sf_dir, tmp_path, monkeypatch, table, key
+):
+    """Two threads split the same table into a fresh temp dir at once:
+    both get the one published dir, holding every row exactly once,
+    and the losing copy is gone."""
+    import tempfile
+    import threading
+
+    import pyarrow.parquet as pq
+
+    from big_data_trend_analysis_spark.streaming.sources import _split_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    barrier = threading.Barrier(2)
+    got: list = []
+
+    def work():
+        barrier.wait()
+        got.append(_split_dir(sf_dir, table, key, 3))
+
+    threads = [threading.Thread(target=work) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+    assert len(got) == 2 and got[0] == got[1]
+    assert [p.name for p in tmp_path.iterdir()] == [os.path.basename(got[0])]
+    files = sorted(os.listdir(got[0]))
+    assert files == ["batch0.parquet", "batch1.parquet", "batch2.parquet"]
+    ids = [pq.read_table(os.path.join(got[0], f)).column(key).to_pylist() for f in files]
+    source = pq.read_table(f"{sf_dir}/{table}.parquet").column(key).to_pylist()
+    assert sorted(sum(ids, [])) == sorted(source)
+    for b, part in enumerate(ids):
+        assert {i % 3 for i in part} <= {b}
 
 
 def test_events_source_uri_dispatch(spark, sf_dir):

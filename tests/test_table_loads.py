@@ -9,6 +9,7 @@ before and after, once the listener bus has delivered every event.
 
 from __future__ import annotations
 
+import datetime
 import shutil
 import sys
 import threading
@@ -127,3 +128,40 @@ def test_building_an_analytics_mix_query_runs_no_job(spark, sf_dir):
     for name in ANALYTICS_MIX:
         _, jobs = _jobs_run(spark, lambda: QUERIES[name](spark, sf_dir))
         assert jobs == set(), name
+
+
+#: The two confs ``load_table``'s schema inference needs, at the values
+#: opposite to the engine's.
+OPPOSITE_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "false",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+}
+
+
+def test_load_keeps_the_callers_confs_and_reads_correct_timestamps(spark, tmp_path):
+    """A session with the opposite conf values keeps them through a
+    first (inferring) and a second (cached) load, and still reads both
+    TIMESTAMP(NANOS) and naive micros event times as the TIMESTAMP of
+    the same UTC instant."""
+    from pyspark.sql.types import TimestampType
+
+    when = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    epoch = int(when.replace(tzinfo=datetime.timezone.utc).timestamp())
+    session = spark.newSession()
+    for key, value in OPPOSITE_CONFS.items():
+        session.conf.set(key, value)
+    for unit in ("ns", "us"):
+        sf = tmp_path / unit
+        sf.mkdir()
+        pq.write_table(
+            pa.table({
+                "event_id": pa.array([1], pa.int64()),
+                "ts": pa.array([when], pa.timestamp(unit)),
+            }),
+            str(sf / "events.parquet"),
+        )
+        for _ in range(2):
+            df = load_table(session, str(sf), "events")
+            assert {k: session.conf.get(k) for k in OPPOSITE_CONFS} == OPPOSITE_CONFS
+            assert df.schema["ts"].dataType == TimestampType(), unit
+            assert df.select(F.col("ts").cast("long")).collect() == [(epoch,)], unit
