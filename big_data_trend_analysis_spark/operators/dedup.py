@@ -13,6 +13,8 @@ deterministic across runs, partitionings, and cluster sizes.
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -54,13 +56,6 @@ def dedup_exact(documents: DataFrame) -> DataFrame:
         )
         .select("text", "doc_id")
     )
-
-
-def _doc_tokens(documents: DataFrame) -> DataFrame:
-    """Distinct (doc_id, token) pairs — the unigram relation."""
-    return documents.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("token")
-    ).distinct()
 
 
 def _doc_shingles(
@@ -131,6 +126,79 @@ def minhash_signatures(documents: DataFrame, perms: int = MINHASH_PERMS) -> Data
     return toks.groupBy("doc_id").agg(*aggs)
 
 
+def _rare_shingles(shingles: DataFrame, max_df: int) -> DataFrame:
+    """The (doc_id, shingle) rows whose shingle is in at most ``max_df``
+    documents — inverted-index pruning: stop-shingles generate
+    quadratic candidates for no recall."""
+    doc_freq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    return shingles.join(
+        doc_freq.filter(F.col("df") <= max_df).select("shingle"), "shingle"
+    )
+
+
+def _shared_rare_pairs(
+    rare: DataFrame, keep, a: str, b: str, min_shared: int
+) -> DataFrame:
+    """Document pairs (``a``, ``b``) sharing ≥ ``min_shared`` rare
+    shingles: a self-join of ``rare`` on the shingle, kept where
+    ``keep(doc_a, doc_b)`` holds (``operator.lt`` for unordered pairs,
+    ``operator.ne`` for ordered ones), then a count aggregation — far
+    cheaper than array work on junk pairs."""
+    return (
+        rare.alias("l")
+        .join(
+            rare.alias("r"),
+            (F.col("l.shingle") == F.col("r.shingle"))
+            & keep(F.col("l.doc_id"), F.col("r.doc_id")),
+        )
+        .groupBy(F.col("l.doc_id").alias(a), F.col("r.doc_id").alias(b))
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .filter(F.col("n_shared") >= min_shared)
+        .select(a, b)
+    )
+
+
+def _candidate_ids(candidates: DataFrame, a: str, b: str) -> DataFrame:
+    """Distinct ``doc_id`` of every document in some candidate pair:
+    the semi-join key that prunes set building to candidate docs."""
+    return (
+        candidates.select(F.col(a).alias("doc_id"))
+        .union(candidates.select(F.col(b).alias("doc_id")))
+        .distinct()
+    )
+
+
+def _with_sets(
+    candidates: DataFrame, sets: DataFrame, col: str, a: str, b: str
+) -> DataFrame:
+    """Candidate pairs with both sides' ``col`` sets attached as
+    ``{col}_a`` and ``{col}_b``."""
+    return candidates.join(
+        sets.select(F.col("doc_id").alias(a), F.col(col).alias(f"{col}_a")), a
+    ).join(sets.select(F.col("doc_id").alias(b), F.col(col).alias(f"{col}_b")), b)
+
+
+def _jaccard_verified(
+    candidates: DataFrame, sets: DataFrame, col: str, a: str, b: str, threshold: float
+) -> DataFrame:
+    """(``a``, ``b``, jaccard) of the candidate pairs whose exact set
+    Jaccard, rounded 6 dp, is ≥ ``threshold``."""
+    sa, sb = f"{col}_a", f"{col}_b"
+    return (
+        _with_sets(candidates, sets, col, a, b)
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.size(F.array_intersect(sa, sb)).cast("double")
+                / F.size(F.array_union(sa, sb)).cast("double"),
+                6,
+            ),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
+
+
 def dedup_minhash(
     documents: DataFrame,
     threshold: float = 0.6,
@@ -187,38 +255,17 @@ def dedup_minhash(
     # Collect shingle sets ONLY for candidate docs: at scale the
     # candidate set is a vanishing fraction of the corpus, so the
     # semi-join prunes the expensive collect_set to that fraction.
-    candidate_ids = (
-        candidates.select(F.col("doc_id_a").alias("doc_id"))
-        .union(candidates.select(F.col("doc_id_b").alias("doc_id")))
-        .distinct()
-    )
     # Non-distinct shingles share the signature path's cache entry, and
     # collect_set dedupes anyway.
+    candidate_ids = _candidate_ids(candidates, "doc_id_a", "doc_id_b")
     token_sets = (
         _materialize(_doc_shingles(documents, distinct=False, hashed=True))
         .join(candidate_ids, "doc_id", "left_semi")
         .groupBy("doc_id")
         .agg(F.collect_set("token").alias("toks"))
     )
-    return (
-        candidates.join(
-            token_sets.select(F.col("doc_id").alias("doc_id_a"), F.col("toks").alias("toks_a")),
-            "doc_id_a",
-        )
-        .join(
-            token_sets.select(F.col("doc_id").alias("doc_id_b"), F.col("toks").alias("toks_b")),
-            "doc_id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("toks_a", "toks_b")).cast("double")
-                / F.size(F.array_union("toks_a", "toks_b")).cast("double"),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id_a", "doc_id_b", "jaccard")
+    return _jaccard_verified(
+        candidates, token_sets, "toks", "doc_id_a", "doc_id_b", threshold
     )
 
 
@@ -354,60 +401,19 @@ def ngram_jaccard(
         .agg(F.collect_set("token").alias("sh"))
     )
     shingles = sets.select("doc_id", F.explode("sh").alias("shingle"))
-
-    doc_freq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    rare = _materialize(
-        shingles.join(
-            doc_freq.filter(F.col("df") <= max_df).select("shingle"), "shingle"
-        )
+    rare = _materialize(_rare_shingles(shingles, max_df))
+    candidates = _materialize(
+        _shared_rare_pairs(rare, operator.lt, "doc_id_a", "doc_id_b", min_shared)
     )
-    left = rare.alias("l")
-    right = rare.alias("r")
-    candidates = (
-        left.join(
-            right,
-            (F.col("l.shingle") == F.col("r.shingle"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .groupBy(
-            F.col("l.doc_id").alias("doc_id_a"), F.col("r.doc_id").alias("doc_id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-        .select("doc_id_a", "doc_id_b")
-    )
-    candidates = _materialize(candidates)
     # Same candidate-pruned verify as dedup_minhash: only docs that
     # appear in some candidate pair ship their sets into the join
     # (candidate_ids broadcast into the semi-join; full sets never
     # shuffle corpus-wide).
-    candidate_ids = (
-        candidates.select(F.col("doc_id_a").alias("doc_id"))
-        .union(candidates.select(F.col("doc_id_b").alias("doc_id")))
-        .distinct()
+    shingle_sets = sets.join(
+        _candidate_ids(candidates, "doc_id_a", "doc_id_b"), "doc_id", "left_semi"
     )
-    shingle_sets = sets.join(candidate_ids, "doc_id", "left_semi").select(
-        "doc_id", "sh"
-    )
-    return (
-        candidates.join(
-            shingle_sets.select(F.col("doc_id").alias("doc_id_a"), F.col("sh").alias("sh_a")),
-            "doc_id_a",
-        )
-        .join(
-            shingle_sets.select(F.col("doc_id").alias("doc_id_b"), F.col("sh").alias("sh_b")),
-            "doc_id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id_a", "doc_id_b", "jaccard")
+    return _jaccard_verified(
+        candidates, shingle_sets, "sh", "doc_id_a", "doc_id_b", threshold
     )
 
 
@@ -453,47 +459,15 @@ def containment_dedup(
         .agg(F.collect_set("token").alias("sh"))
     )
     shingles = sets.select("doc_id", F.explode("sh").alias("shingle"))
-    doc_freq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    rare = _materialize(
-        shingles.join(
-            doc_freq.filter(F.col("df") <= max_df).select("shingle"), "shingle"
-        )
+    rare = _materialize(_rare_shingles(shingles, max_df))
+    candidates = _materialize(
+        _shared_rare_pairs(rare, operator.ne, "doc_small", "doc_big", min_shared)
     )
-    candidates = (
-        rare.alias("l")
-        .join(
-            rare.alias("r"),
-            (F.col("l.shingle") == F.col("r.shingle"))
-            & (F.col("l.doc_id") != F.col("r.doc_id")),
-        )
-        .groupBy(
-            F.col("l.doc_id").alias("doc_small"),
-            F.col("r.doc_id").alias("doc_big"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-        .select("doc_small", "doc_big")
+    shingle_sets = sets.join(
+        _candidate_ids(candidates, "doc_small", "doc_big"), "doc_id", "left_semi"
     )
-    candidates = _materialize(candidates)
-    candidate_ids = (
-        candidates.select(F.col("doc_small").alias("doc_id"))
-        .union(candidates.select(F.col("doc_big").alias("doc_id")))
-        .distinct()
-    )
-    shingle_sets = sets.join(candidate_ids, "doc_id", "left_semi")
     return (
-        candidates.join(
-            shingle_sets.select(
-                F.col("doc_id").alias("doc_small"), F.col("sh").alias("sh_a")
-            ),
-            "doc_small",
-        )
-        .join(
-            shingle_sets.select(
-                F.col("doc_id").alias("doc_big"), F.col("sh").alias("sh_b")
-            ),
-            "doc_big",
-        )
+        _with_sets(candidates, shingle_sets, "sh", "doc_small", "doc_big")
         .select(
             "doc_small",
             "doc_big",
@@ -723,24 +697,8 @@ def candidate_edges(
             "token", "shingle"
         )
     )
-    doc_freq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    rare = shingles.join(
-        doc_freq.filter(F.col("df") <= max_df).select("shingle"), "shingle"
-    )
-    left = rare.alias("l")
-    right = rare.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.shingle") == F.col("r.shingle"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .groupBy(
-            F.col("l.doc_id").alias("src"), F.col("r.doc_id").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-        .select("src", "dst")
+    pairs = _shared_rare_pairs(
+        _rare_shingles(shingles, max_df), operator.lt, "src", "dst", min_shared
     )
     return pairs.union(pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
@@ -1019,6 +977,42 @@ def decontaminate_ngram(
     )
 
 
+def _plant_twins(
+    documents: DataFrame, n_planted: int, min_tokens: int
+) -> tuple[DataFrame, DataFrame]:
+    """(seeds, augmented): the first ``n_planted`` documents with ≥
+    ``min_tokens`` tokens, and the corpus with a drop-last-token twin of
+    each seed unioned in. A twin's id is -(seed+1): the NEGATIVE id
+    space is disjoint from any non-negative corpus id regardless of
+    corpus size — a fixed positive offset would collide once real ids
+    reach it (ADVICE r6)."""
+    toks = F.split("text", " ")
+    seeds = documents.filter(
+        (F.col("doc_id") < n_planted) & (F.size(toks) >= min_tokens)
+    )
+    twins = seeds.select(
+        (-(F.col("doc_id") + 1)).alias("doc_id"),
+        F.array_join(F.slice(toks, 1, F.size(toks) - 1), " ").alias("text"),
+        "lang",
+        "source",
+        "n_chars",
+    )
+    augmented = documents.select(
+        "doc_id", "text", "lang", "source", "n_chars"
+    ).unionByName(twins)
+    return seeds, augmented
+
+
+def _twin_pairs(pairs: DataFrame, n_planted: int) -> DataFrame:
+    """The (doc_id_a, doc_id_b) pairs that are a planted (twin, seed)
+    pair — the twin's negative id always sorts first."""
+    return pairs.filter(
+        (F.col("doc_id_a") == -(F.col("doc_id_b") + 1))
+        & (F.col("doc_id_b") < n_planted)
+        & (F.col("doc_id_b") >= 0)
+    )
+
+
 def dedup_minhash_check(
     documents: DataFrame,
     n_planted: int = 20,
@@ -1047,27 +1041,11 @@ def dedup_minhash_check(
     (ADVICE r6). In pair output the twin is always ``doc_id_a``
     (pairs are emitted with doc_id_a < doc_id_b).
     """
-    toks = F.split("text", " ")
-    seeds = documents.filter(
-        (F.col("doc_id") < n_planted) & (F.size(toks) >= min_tokens)
-    )
-    twins = seeds.select(
-        (-(F.col("doc_id") + 1)).alias("doc_id"),
-        F.array_join(F.slice(toks, 1, F.size(toks) - 1), " ").alias("text"),
-        "lang",
-        "source",
-        "n_chars",
-    )
-    augmented = documents.select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    ).unionByName(twins)
+    seeds, augmented = _plant_twins(documents, n_planted, min_tokens)
 
-    pairs = dedup_minhash(augmented, threshold=threshold)
-    found = pairs.filter(
-        (F.col("doc_id_a") == -(F.col("doc_id_b") + 1))
-        & (F.col("doc_id_b") < n_planted)
-        & (F.col("doc_id_b") >= 0)
-    ).agg(F.count_distinct("doc_id_b").alias("n_found"))
+    found = _twin_pairs(dedup_minhash(augmented, threshold=threshold), n_planted).agg(
+        F.count_distinct("doc_id_b").alias("n_found")
+    )
     planted = seeds.agg(F.count(F.lit(1)).alias("n_planted"))
     return planted.crossJoin(found).select(
         "n_planted",
@@ -1104,20 +1082,7 @@ def dedup_simhash_check(
     (twin = -(seed+1)), disjoint from any non-negative corpus id —
     see ``dedup_minhash_check``.
     """
-    toks = F.split("text", " ")
-    seeds = documents.filter(
-        (F.col("doc_id") < n_planted) & (F.size(toks) >= min_tokens)
-    )
-    twins = seeds.select(
-        (-(F.col("doc_id") + 1)).alias("doc_id"),
-        F.array_join(F.slice(toks, 1, F.size(toks) - 1), " ").alias("text"),
-        "lang",
-        "source",
-        "n_chars",
-    )
-    augmented = documents.select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    ).unionByName(twins)
+    seeds, augmented = _plant_twins(documents, n_planted, min_tokens)
 
     fps = _materialize(simhash_fingerprints(augmented))
     truth = (
@@ -1134,10 +1099,8 @@ def dedup_simhash_check(
             ).alias("true_hamming"),
         )
     )
-    found = dedup_simhash(augmented, max_hamming=max_hamming, fps=fps).filter(
-        (F.col("doc_id_a") == -(F.col("doc_id_b") + 1))
-        & (F.col("doc_id_b") < n_planted)
-        & (F.col("doc_id_b") >= 0)
+    found = _twin_pairs(
+        dedup_simhash(augmented, max_hamming=max_hamming, fps=fps), n_planted
     )
     joined = truth.join(
         found.select(
@@ -1201,27 +1164,11 @@ def ngram_jaccard_check(
     twin is always ``doc_id_a`` in pair output (pairs are emitted
     with doc_id_a < doc_id_b).
     """
-    toks = F.split("text", " ")
-    seeds = documents.filter(
-        (F.col("doc_id") < n_planted) & (F.size(toks) >= min_tokens)
-    )
-    twins = seeds.select(
-        (-(F.col("doc_id") + 1)).alias("doc_id"),
-        F.array_join(F.slice(toks, 1, F.size(toks) - 1), " ").alias("text"),
-        "lang",
-        "source",
-        "n_chars",
-    )
-    augmented = documents.select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    ).unionByName(twins)
+    seeds, augmented = _plant_twins(documents, n_planted, min_tokens)
 
-    pairs = ngram_jaccard(augmented, threshold=threshold)
-    hits = pairs.filter(
-        (F.col("doc_id_a") == -(F.col("doc_id_b") + 1))
-        & (F.col("doc_id_b") < n_planted)
-        & (F.col("doc_id_b") >= 0)
-    ).select(F.col("doc_id_b").alias("seed_id"), F.lit(True).alias("hit"))
+    hits = _twin_pairs(ngram_jaccard(augmented, threshold=threshold), n_planted).select(
+        F.col("doc_id_b").alias("seed_id"), F.lit(True).alias("hit")
+    )
     return (
         seeds.select(F.col("doc_id").alias("seed_id"))
         .join(hits, "seed_id", "left")

@@ -28,9 +28,15 @@ the same deterministic split the CDC/MOR gates carve.
 from __future__ import annotations
 
 import math
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType, IntegerType, LongType, StringType,
+    StructField, StructType,
+)
 from pyspark.sql.window import Window
 
 from big_data_trend_analysis_spark.functions.ranks import range_cumsum
@@ -297,17 +303,25 @@ def autocorr_daily(events: DataFrame, max_lag: int = 3) -> DataFrame:
     Emits one row per lag: (lag, n_days, acf).
     """
 
+    return _calendar_acf(events, [], max_lag)
+
+
+def _calendar_acf(events: DataFrame, keys: list[str], max_lag: int) -> DataFrame:
+    """(*keys, lag, n_days, acf): the calendar-aware ACF of each
+    ``keys`` group's daily-count series (one global series for no
+    keys), paired and mean-centred within the group."""
     # daily feeds the moments agg, the numerator stack AND the
     # denominator fold — materialized so the corpus scans once.
     daily = materialize_tiny(
-        events.groupBy(F.date_trunc("DAY", "ts").alias("day")).agg(
+        events.groupBy(*keys, F.date_trunc("DAY", "ts").alias("day")).agg(
             F.count(F.lit(1)).alias("n")
         )
     )
-    stats = daily.agg(
+    stats = daily.groupBy(*keys).agg(
         F.sum("n").alias("tot_n"), F.count(F.lit(1)).alias("n_days")
     )
-    dev = daily.crossJoin(F.broadcast(stats)).select(
+    dev = daily.join(F.broadcast(stats), keys or None).select(
+        *keys,
         "day",
         "n_days",
         F.round(
@@ -323,13 +337,14 @@ def autocorr_daily(events: DataFrame, max_lag: int = 3) -> DataFrame:
     # ``max_lag`` output rows even when a lag has no aligned pair
     # (acf NULL).
     gap = F.datediff(F.col("c.day"), F.col("p.day"))
+    same_series = [F.col(f"c.{k}") == F.col(f"p.{k}") for k in keys]
     nums = (
         dev.alias("c")
         .join(
             F.broadcast(dev.alias("p")),
-            (gap >= 1) & (gap <= max_lag),
+            reduce(operator.and_, [*same_series, gap >= 1, gap <= max_lag]),
         )
-        .groupBy(gap.alias("lag"))
+        .groupBy(*[F.col(f"c.{k}").alias(k) for k in keys], gap.alias("lag"))
         .agg(
             F.sum(
                 F.round(F.col("c.d0") * F.col("p.d0"), 6).cast(_TERM_DEC)
@@ -337,18 +352,20 @@ def autocorr_daily(events: DataFrame, max_lag: int = 3) -> DataFrame:
         )
     )
     spine = stats.select(
+        *keys,
         F.explode(F.sequence(F.lit(1), F.lit(max_lag))).alias("lag"),
         "n_days",
     )
-    den = dev.agg(
+    den = dev.groupBy(*keys).agg(
         F.sum(
             F.round(F.col("d0") * F.col("d0"), 6).cast(_TERM_DEC)
         ).alias("den_dec")
     )
     return (
-        spine.join(nums, "lag", "left")
-        .crossJoin(F.broadcast(den))
+        spine.join(nums, [*keys, "lag"], "left")
+        .join(F.broadcast(den), keys or None)
         .select(
+            *keys,
             "lag",
             "n_days",
             # constant series ⇒ Σd² = 0 ⇒ ACF undefined: NULL on both
@@ -428,6 +445,60 @@ def seasonal_adjust_dow(events: DataFrame) -> DataFrame:
     ).crossJoin(F.broadcast(strength))
 
 
+def _avgrank2():
+    """Doubled average rank of a distinct value, 2·cum_before + n_v + 1:
+    exact in integers where the average rank steps by ½; cum_before is
+    the inclusive cumsum ``cum_n_v`` minus the value's own tie count."""
+    return (2 * (F.col("cum_n_v") - F.col("n_v")) + F.col("n_v") + 1).alias(
+        "avgrank2"
+    )
+
+
+def _tie_sum():
+    """Tie correction Σ(t³−t) over the distinct-value tie counts
+    ``n_v``, folded exactly in DECIMAL(12,0)³."""
+    n_v = F.col("n_v")
+    return F.sum(
+        n_v.cast("decimal(12,0)")
+        * n_v.cast("decimal(12,0)")
+        * n_v.cast("decimal(12,0)")
+        - n_v.cast("decimal(38,0)")
+    ).alias("tie_sum")
+
+
+def _rank_sum2(count: str):
+    """Σ count·avgrank2, folded in DECIMAL(38,0) (a BIGINT product
+    overflows silently past ~3e9 rows)."""
+    return F.sum(
+        (
+            F.col(count).cast("decimal(19,0)")
+            * F.col("avgrank2").cast("decimal(19,0)")
+        ).cast("decimal(38,0)")
+    )
+
+
+def _group_rank_sums(events: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Global average ranks of the non-NULL ``value`` and the per-type
+    doubled rank sums: (value, n_v, avgrank2) and (event_type, n_g,
+    rank_sum2). ONE (value, type) hash aggregation, then the
+    range-partitioned cumsum over the distinct-value relation — never
+    per-row ranks, no unpartitioned window."""
+    per_vt = (
+        events.filter(F.col("value").isNotNull())
+        .groupBy("value", "event_type")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    per_value = per_vt.groupBy("value").agg(F.sum("c").alias("n_v"))
+    cum = range_cumsum(per_value, "value", ["n_v"])
+    ranked = cum.select("value", "n_v", _avgrank2())
+    groups = (
+        per_vt.join(ranked, "value")
+        .groupBy("event_type")
+        .agg(F.sum("c").alias("n_g"), _rank_sum2("c").alias("rank_sum2"))
+    )
+    return ranked, groups
+
+
 def mann_whitney_u(events: DataFrame, z_crit: float = 1.96) -> DataFrame:
     """Mann–Whitney U rank-sum test of ``value``, baseline vs current.
 
@@ -466,31 +537,12 @@ def mann_whitney_u(events: DataFrame, z_crit: float = 1.96) -> DataFrame:
         "value",
         ["n_v"],
     )
-    ranked = cum.select(
-        "c_base",
-        "c_cur",
-        "n_v",
-        # doubled avgrank keeps the ½ steps in exact integers;
-        # cum_before = inclusive cumsum − own tie count
-        (
-            2 * (F.col("cum_n_v") - F.col("n_v")) + F.col("n_v") + 1
-        ).alias("avgrank2"),
-    )
+    ranked = cum.select("c_base", "c_cur", "n_v", _avgrank2())
     totals = ranked.agg(
         F.sum("c_base").alias("n_base"),
         F.sum("c_cur").alias("n_cur"),
-        F.sum(
-            (
-                F.col("c_base").cast("decimal(19,0)")
-                * F.col("avgrank2").cast("decimal(19,0)")
-            ).cast("decimal(38,0)")
-        ).alias("r2_base"),
-        F.sum(
-            F.col("n_v").cast("decimal(12,0)")
-            * F.col("n_v").cast("decimal(12,0)")
-            * F.col("n_v").cast("decimal(12,0)")
-            - F.col("n_v").cast("decimal(38,0)")
-        ).alias("tie_sum"),
+        _rank_sum2("c_base").alias("r2_base"),
+        _tie_sum(),
     )
     n1 = F.col("n_base").cast("double")
     n2 = F.col("n_cur").cast("double")
@@ -595,6 +647,64 @@ def _phi_upper_tail(z):
     return phi_upper_tail(z)
 
 
+def _welch_sides(df: DataFrame, keys: list[str], value: str) -> DataFrame:
+    """(*keys, n, mean, var) of the 2-dp measure ``value`` per group:
+    Σx folds in decimal(18,2) and Σx² in decimal(38,4) — both EXACT,
+    order-independent — and the variance comes from the moment
+    identity (Σx² − (Σx)²/n)/(n−1) on doubles cast from those exact
+    decimals, rounded 6 dp like the mean."""
+    x = F.col(value).cast("decimal(18,2)")
+    moments = df.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(x).cast("double").alias("sx"),
+        F.sum((x * x).cast("decimal(38,4)")).cast("double").alias("sxx"),
+    )
+    mean = F.round(F.col("sx") / F.col("n"), 6)
+    # nullif guard: a 1-row group has no sample variance — NULL on both
+    # engines instead of a Spark-ANSI /0 error vs a DuckDB inf.
+    var = F.round(
+        (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n"))
+        / F.nullif((F.col("n") - 1).cast("double"), F.lit(0.0)),
+        6,
+    )
+    return moments.select(*keys, "n", mean.alias("mean"), var.alias("var"))
+
+
+def _bh_step_up(tested: DataFrame, tie_cols: list[str], q_fdr: float) -> DataFrame:
+    """``tested`` plus (m_tests, p_rank, p_adj, reject): the
+    Benjamini–Hochberg step-up over its ``p_value`` column. p ranks
+    ascending (ties by ``tie_cols``), p_adj(i) = min_{j≥i} p(j)·m/j
+    capped at 1 — the running minimum is a window from the large-rank
+    side."""
+    m = tested.agg(F.count("p_value").alias("m_tests"))
+    w_rank = Window.orderBy(
+        F.col("p_value").asc(), *[F.col(c).asc() for c in tie_cols]
+    )
+    w_min = Window.orderBy(F.col("p_rank").desc()).rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    return (
+        tested.crossJoin(F.broadcast(m))
+        .select(
+            "*",
+            F.row_number().over(w_rank).alias("p_rank"),
+        )
+        .select(
+            "*",
+            F.round(
+                F.least(
+                    F.lit(1.0),
+                    F.min(
+                        F.col("p_value") * F.col("m_tests") / F.col("p_rank")
+                    ).over(w_min),
+                ),
+                6,
+            ).alias("p_adj"),
+        )
+        .withColumn("reject", F.col("p_adj") <= q_fdr)
+    )
+
+
 def benjamini_hochberg(
     events: DataFrame, q_fdr: float = 0.10
 ) -> DataFrame:
@@ -618,28 +728,7 @@ def benjamini_hochberg(
     p_adj, reject).
     """
 
-    sliced = _slices(events)
-    moments = sliced.groupBy("event_type", "is_base").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sx"),
-        F.sum(
-            (
-                F.col("value").cast("decimal(18,2)")
-                * F.col("value").cast("decimal(18,2)")
-            ).cast("decimal(38,4)")
-        )
-        .cast("double")
-        .alias("sxx"),
-    )
-    mean = F.round(F.col("sx") / F.col("n"), 6)
-    var = F.round(
-        (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n"))
-        / F.nullif((F.col("n") - 1).cast("double"), F.lit(0.0)),
-        6,
-    )
-    sides = moments.select(
-        "event_type", "is_base", "n", mean.alias("mean"), var.alias("var")
-    )
+    sides = _welch_sides(_slices(events), ["event_type", "is_base"], "value")
     a = sides.filter(F.col("is_base")).select(
         "event_type",
         F.col("n").alias("n_base"),
@@ -670,42 +759,24 @@ def benjamini_hochberg(
             F.round(_phi_upper_tail(z), 6).alias("p_value"),
         )
     )
-    m = tested.agg(
-        F.count("p_value").alias("m_tests")
+    ranked = _bh_step_up(
+        tested.filter(F.col("p_value").isNotNull()), ["event_type"], q_fdr
+    ).select(
+        "event_type",
+        "n_base",
+        "n_cur",
+        "z_score",
+        "p_value",
+        "p_rank",
+        "m_tests",
+        "p_adj",
+        "reject",
     )
-    w_rank = Window.orderBy(F.col("p_value").asc(), F.col("event_type").asc())
-    w_min = Window.orderBy(
-        F.col("p_rank").desc()
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    ranked = (
-        tested.filter(F.col("p_value").isNotNull())
-        .crossJoin(F.broadcast(m))
-        .select(
-            "event_type",
-            "n_base",
-            "n_cur",
-            "z_score",
-            "p_value",
-            F.row_number().over(w_rank).alias("p_rank"),
-            "m_tests",
-        )
-        .select(
-            "*",
-            F.round(
-                F.least(
-                    F.lit(1.0),
-                    F.min(
-                        F.col("p_value") * F.col("m_tests") / F.col("p_rank")
-                    ).over(w_min),
-                ),
-                6,
-            ).alias("p_adj"),
-        )
-        .withColumn("reject", F.col("p_adj") <= q_fdr)
-    )
+    # The m-count is over every tested type, so a degenerate row reads
+    # 0 when no type has a p-value.
     degenerate = (
         tested.filter(F.col("p_value").isNull())
-        .crossJoin(F.broadcast(m))
+        .crossJoin(F.broadcast(tested.agg(F.count("p_value").alias("m_tests"))))
         .select(
             "event_type",
             "n_base",
@@ -749,40 +820,14 @@ def ab_test_welch(
     """
     from big_data_trend_analysis_spark.functions.stats import t_crit_975
 
-    # moments feeds BOTH cohort branches of the crossJoin — materialized
+    # sides feeds BOTH cohort branches of the crossJoin — materialized
     # so the corpus collapses in one aggregation, not once per branch.
-    moments = materialize_tiny(
-        lineitem.filter(F.col("l_returnflag").isin("R", "N"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sx"),
-            F.sum(
-                (
-                    F.col("l_extendedprice").cast("decimal(18,2)")
-                    * F.col("l_extendedprice").cast("decimal(18,2)")
-                ).cast("decimal(38,4)")
-            )
-            .cast("double")
-            .alias("sxx"),
+    sides = materialize_tiny(
+        _welch_sides(
+            lineitem.filter(F.col("l_returnflag").isin("R", "N")),
+            ["l_returnflag"],
+            "l_extendedprice",
         )
-    )
-    mean = F.round(F.col("sx") / F.col("n"), 6)
-    # nullif guards: a 1-row cohort has no sample variance, and two
-    # constant cohorts make the standard error 0 — NULL t on both
-    # engines instead of a Spark-ANSI /0 error vs a DuckDB inf.
-    var = F.round(
-        (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n"))
-        / F.nullif((F.col("n") - 1).cast("double"), F.lit(0.0)),
-        6,
-    )
-    sides = moments.select(
-        "l_returnflag",
-        "n",
-        mean.alias("mean"),
-        var.alias("var"),
     )
     a = sides.filter(F.col("l_returnflag") == "R").select(
         F.col("n").alias("n_a"),
@@ -796,6 +841,8 @@ def ab_test_welch(
     )
     va_n = F.col("var_a") / F.col("n_a")
     vb_n = F.col("var_b") / F.col("n_b")
+    # nullif: two constant cohorts make the standard error 0 — NULL t
+    # on both engines instead of a Spark-ANSI /0 error vs a DuckDB inf.
     t = F.round(
         (F.col("mean_a") - F.col("mean_b"))
         / F.nullif(F.sqrt(va_n + vb_n), F.lit(0.0)),
@@ -848,42 +895,10 @@ def kruskal_wallis(events: DataFrame) -> DataFrame:
     Emits one row per group with the verdict repeated:
     (event_type, n_g, rank_sum2, h_stat, df_used, chi2_crit, reject).
     """
-    per_vt = (
-        events.filter(F.col("value").isNotNull())
-        .groupBy("value", "event_type")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    per_value = per_vt.groupBy("value").agg(F.sum("c").alias("n_v"))
-    cum = range_cumsum(per_value, "value", ["n_v"])
-    # doubled avgrank keeps the ½ steps exact (the mann_whitney trick)
-    ranked = cum.select(
-        "value",
-        "n_v",
-        (2 * (F.col("cum_n_v") - F.col("n_v")) + F.col("n_v") + 1).alias(
-            "avgrank2"
-        ),
-    )
-    groups = (
-        per_vt.join(ranked, "value")
-        .groupBy("event_type")
-        .agg(
-            F.sum("c").alias("n_g"),
-            F.sum(
-                (
-                    F.col("c").cast("decimal(19,0)")
-                    * F.col("avgrank2").cast("decimal(19,0)")
-                ).cast("decimal(38,0)")
-            ).alias("rank_sum2"),
-        )
-    )
+    ranked, groups = _group_rank_sums(events)
     totals = ranked.agg(
         F.sum("n_v").alias("n_tot"),
-        F.sum(
-            F.col("n_v").cast("decimal(12,0)")
-            * F.col("n_v").cast("decimal(12,0)")
-            * F.col("n_v").cast("decimal(12,0)")
-            - F.col("n_v").cast("decimal(38,0)")
-        ).alias("tie_sum"),
+        _tie_sum(),
         F.count(F.lit(1)).alias("n_distinct"),
     )
     n = F.col("n_tot").cast("double")
@@ -1686,19 +1701,20 @@ def pacf_daily(events: DataFrame, max_lag: int = 7) -> DataFrame:
     construction. The recursion core is shared with ``pacf_by_type``
     (``_durbin_levinson_acf``).
     """
+    return _durbin_levinson(autocorr_daily(events, max_lag=max_lag), [])
+
+
+def _durbin_levinson(acf_rel: DataFrame, keys: list[StructField]) -> DataFrame:
+    """(*keys, lag, n_days, acf, pacf): one applyInPandas group per
+    ``keys`` series of the ACF relation (one group for no keys) runs
+    ``_durbin_levinson_acf`` over its lag-ordered rows."""
     import pandas as pd
 
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    acf_rel = autocorr_daily(events, max_lag=max_lag)
+    names = [f.name for f in keys]
+    columns = [*names, "lag", "n_days", "acf", "pacf"]
     schema = StructType(
         [
+            *keys,
             StructField("lag", IntegerType()),
             StructField("n_days", LongType()),
             StructField("acf", DoubleType()),
@@ -1715,6 +1731,7 @@ def pacf_daily(events: DataFrame, max_lag: int = 7) -> DataFrame:
         )
         rows = [
             (
+                *(getattr(t, k) for k in names),
                 int(t.lag),
                 int(t.n_days),
                 None if (isinstance(t.acf, float) and math.isnan(t.acf))
@@ -1723,13 +1740,9 @@ def pacf_daily(events: DataFrame, max_lag: int = 7) -> DataFrame:
             )
             for t in pdf.itertuples()
         ]
-        return pd.DataFrame(rows, columns=["lag", "n_days", "acf", "pacf"])
+        return pd.DataFrame(rows, columns=columns)
 
-    return (
-        acf_rel.withColumn("_g", F.lit(1))
-        .groupBy("_g")
-        .applyInPandas(_dl, schema)
-    )
+    return acf_rel.groupBy(*names).applyInPandas(_dl, schema)
 
 
 def pacf_by_type(events: DataFrame, max_lag: int = 7) -> DataFrame:
@@ -1753,107 +1766,10 @@ def pacf_by_type(events: DataFrame, max_lag: int = 7) -> DataFrame:
 
     Emits per (event_type, lag): (event_type, lag, n_days, acf, pacf).
     """
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    return _durbin_levinson(
+        _calendar_acf(events, ["event_type"], max_lag),
+        [StructField("event_type", StringType())],
     )
-
-
-    daily = materialize_tiny(
-        events.groupBy(
-            "event_type", F.date_trunc("DAY", "ts").alias("day")
-        ).agg(F.count(F.lit(1)).alias("n"))
-    )
-    stats = daily.groupBy("event_type").agg(
-        F.sum("n").alias("tot_n"), F.count(F.lit(1)).alias("n_days")
-    )
-    dev = daily.join(F.broadcast(stats), "event_type").select(
-        "event_type",
-        "day",
-        "n_days",
-        F.round(
-            F.col("n") - F.col("tot_n").cast("double") / F.col("n_days"), 6
-        ).alias("d0"),
-    )
-    gap = F.datediff(F.col("c.day"), F.col("p.day"))
-    nums = (
-        dev.alias("c")
-        .join(
-            F.broadcast(dev.alias("p")),
-            (F.col("c.event_type") == F.col("p.event_type"))
-            & (gap >= 1)
-            & (gap <= max_lag),
-        )
-        .groupBy(F.col("c.event_type").alias("event_type"), gap.alias("lag"))
-        .agg(
-            F.sum(
-                F.round(F.col("c.d0") * F.col("p.d0"), 6).cast(_TERM_DEC)
-            ).alias("num_dec")
-        )
-    )
-    spine = stats.select(
-        "event_type",
-        F.explode(F.sequence(F.lit(1), F.lit(max_lag))).alias("lag"),
-        "n_days",
-    )
-    den = dev.groupBy("event_type").agg(
-        F.sum(
-            F.round(F.col("d0") * F.col("d0"), 6).cast(_TERM_DEC)
-        ).alias("den_dec")
-    )
-    acf_rel = (
-        spine.join(nums, ["event_type", "lag"], "left")
-        .join(F.broadcast(den), "event_type")
-        .select(
-            "event_type",
-            "lag",
-            "n_days",
-            F.round(
-                F.col("num_dec").cast("double")
-                / F.nullif(F.col("den_dec").cast("double"), F.lit(0.0)),
-                6,
-            ).alias("acf"),
-        )
-    )
-    schema = StructType(
-        [
-            StructField("event_type", StringType()),
-            StructField("lag", IntegerType()),
-            StructField("n_days", LongType()),
-            StructField("acf", DoubleType()),
-            StructField("pacf", DoubleType()),
-        ]
-    )
-
-    def _dl(pdf: pd.DataFrame) -> pd.DataFrame:
-        import math
-
-        pdf = pdf.sort_values("lag").reset_index(drop=True)
-        pacf_out = _durbin_levinson_acf(
-            [(int(t.lag), t.acf) for t in pdf.itertuples()]
-        )
-        rows = [
-            (
-                t.event_type,
-                int(t.lag),
-                int(t.n_days),
-                None if (isinstance(t.acf, float) and math.isnan(t.acf))
-                else t.acf,
-                pacf_out.get(int(t.lag)),
-            )
-            for t in pdf.itertuples()
-        ]
-        return pd.DataFrame(
-            rows, columns=["event_type", "lag", "n_days", "acf", "pacf"]
-        )
-
-    return acf_rel.groupBy("event_type").applyInPandas(_dl, schema)
 
 
 #: Φ⁻¹(0.80) — the 80%-power normal quantile in the sample-size
@@ -2046,43 +1962,11 @@ def dunn_posthoc(events: DataFrame, q_fdr: float = 0.05) -> DataFrame:
     Emits one row per pair: (type_a, type_b, n_a, n_b, rbar_a,
     rbar_b, z_score, p_value, p_rank, m_tests, p_adj, reject).
     """
-    from big_data_trend_analysis_spark.functions.ranks import range_cumsum
-
-    per_vt = (
-        events.filter(F.col("value").isNotNull())
-        .groupBy("value", "event_type")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    per_value = per_vt.groupBy("value").agg(F.sum("c").alias("n_v"))
-    cum = range_cumsum(per_value, "value", ["n_v"])
-    ranked = cum.select(
-        "value",
-        "n_v",
-        (2 * (F.col("cum_n_v") - F.col("n_v")) + F.col("n_v") + 1).alias(
-            "avgrank2"
-        ),
-    )
-    groups = materialize_tiny(
-        per_vt.join(ranked, "value")
-        .groupBy("event_type")
-        .agg(
-            F.sum("c").alias("n_g"),
-            F.sum(
-                (
-                    F.col("c").cast("decimal(19,0)")
-                    * F.col("avgrank2").cast("decimal(19,0)")
-                ).cast("decimal(38,0)")
-            ).alias("rank_sum2"),
-        )
-    )
+    ranked, groups = _group_rank_sums(events)
+    groups = materialize_tiny(groups)
     totals = ranked.agg(
         F.sum("n_v").alias("n_tot"),
-        F.sum(
-            F.col("n_v").cast("decimal(12,0)")
-            * F.col("n_v").cast("decimal(12,0)")
-            * F.col("n_v").cast("decimal(12,0)")
-            - F.col("n_v").cast("decimal(38,0)")
-        ).alias("tie_sum"),
+        _tie_sum(),
     )
     a = groups.select(
         F.col("event_type").alias("type_a"),
@@ -2128,33 +2012,7 @@ def dunn_posthoc(events: DataFrame, q_fdr: float = 0.05) -> DataFrame:
             F.round(_phi_upper_tail(z), 6).alias("p_value"),
         )
     )
-    m = pairs.agg(F.count("p_value").alias("m_tests"))
-    w_rank = Window.orderBy(
-        F.col("p_value").asc(), F.col("type_a").asc(), F.col("type_b").asc()
-    )
-    w_min = Window.orderBy(F.col("p_rank").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return (
-        pairs.crossJoin(F.broadcast(m))
-        .select(
-            "*",
-            F.row_number().over(w_rank).alias("p_rank"),
-        )
-        .select(
-            "*",
-            F.round(
-                F.least(
-                    F.lit(1.0),
-                    F.min(
-                        F.col("p_value") * F.col("m_tests") / F.col("p_rank")
-                    ).over(w_min),
-                ),
-                6,
-            ).alias("p_adj"),
-        )
-        .withColumn("reject", F.col("p_adj") <= q_fdr)
-    )
+    return _bh_step_up(pairs, ["type_a", "type_b"], q_fdr)
 
 
 def friedman_test(events: DataFrame) -> DataFrame:

@@ -202,6 +202,25 @@ def sim_search(
     )
 
 
+def _unit_rows(vecs: pd.Series) -> np.ndarray:
+    """An Arrow batch of vectors as a matrix of unit rows."""
+    mat = np.stack(vecs.to_numpy()).astype(float)
+    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+
+
+def _nearest_cells_udf(cmat: np.ndarray, nprobe: int):
+    """pandas UDF: each vector's ``nprobe`` most cosine-similar cells of
+    the codebook ``cmat``, nearest first (one Arrow-batched matmul)."""
+
+    @F.pandas_udf(ArrayType(IntegerType()))
+    def nearest_cells(vecs: pd.Series) -> pd.Series:
+        sims = _unit_rows(vecs) @ cmat.T  # (batch, n_centroids)
+        order = np.argsort(-sims, axis=1, kind="stable")
+        return pd.Series(list(order[:, :nprobe].astype("int32")))
+
+    return nearest_cells
+
+
 def ann_ivf(
     embeddings: DataFrame,
     n_centroids: int = 8,
@@ -220,16 +239,9 @@ def ann_ivf(
     (multi-probe: recovers most of the recall lost at cell boundaries
     for one extra cell's worth of work).
     """
-    cmat = train_ivf_centroids(embeddings, n_centroids=n_centroids)
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def nearest_cells(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy()).astype(float)
-        mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        sims = mat @ cmat.T  # (batch, n_centroids)
-        order = np.argsort(-sims, axis=1, kind="stable")
-        return pd.Series(list(order[:, :nprobe].astype("int32")))
-
+    nearest_cells = _nearest_cells_udf(
+        train_ivf_centroids(embeddings, n_centroids=n_centroids), nprobe
+    )
     corpus = embeddings.select(
         "vec_id",
         as_double("embedding").alias("vec"),
@@ -495,6 +507,56 @@ def embed_neardup(
     )
 
 
+def _plant_twins(
+    embeddings: DataFrame, n_planted: int, noise: float
+) -> tuple[DataFrame, DataFrame]:
+    """(seeds, augmented): the first ``n_planted`` vectors, and the
+    corpus with an ε-perturbed twin of each seed unioned in. Element-
+    wise alternating ±``noise`` relative perturbation ⇒ cos ≈
+    1 − noise²/2, a JVM-side transform — plan-stable (no randomness)
+    and dimension-agnostic. A twin's id is -(seed+1): the NEGATIVE id
+    space is disjoint from any non-negative corpus id at any corpus
+    size."""
+    base = embeddings.select("vec_id", "embedding")
+    seeds = base.filter(F.col("vec_id") < n_planted)
+    twin_vec = F.transform(
+        "embedding",
+        lambda x, i: (
+            x
+            * (
+                F.lit(1.0)
+                + F.lit(noise)
+                * F.when(i % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
+            )
+        ).cast("float"),
+    )
+    augmented = base.unionByName(
+        seeds.select(
+            (-(F.col("vec_id") + 1)).alias("vec_id"), twin_vec.alias("embedding")
+        )
+    )
+    return seeds, augmented
+
+
+def _twin_recovery(pairs: DataFrame, seeds: DataFrame, n_planted: int) -> DataFrame:
+    """1 row (n_planted, n_recovered, all_found) over a (vec_id_a,
+    vec_id_b) pair relation: a planted pair is recovered when it is
+    output as (twin, seed) — the twin's negative id always sorts
+    first."""
+    recovered = pairs.filter(
+        (F.col("vec_id_a") == -(F.col("vec_id_b") + 1))
+        & (F.col("vec_id_b") < n_planted)
+        & (F.col("vec_id_b") >= 0)
+    )
+    n_rec = recovered.agg(F.count_distinct("vec_id_b").alias("n_recovered"))
+    n_pl = seeds.agg(F.count(F.lit(1)).alias("n_planted"))
+    return n_pl.crossJoin(n_rec).select(
+        "n_planted",
+        "n_recovered",
+        (F.col("n_recovered") == F.col("n_planted")).alias("all_found"),
+    )
+
+
 def embed_neardup_check(
     embeddings: DataFrame,
     n_planted: int = 20,
@@ -529,46 +591,15 @@ def embed_neardup_check(
     ≈ 1 − 2e-11, so the all-found boolean also gates the tuner: knobs
     mis-sized toward too-few bands or too-many bits flip it false.
     """
-    base = embeddings.select("vec_id", "embedding")
     bands, bits_per_band = tune_lsh_knobs(embeddings, threshold=threshold)
-    seeds = base.filter(F.col("vec_id") < n_planted)
-    # Alternating ±noise relative perturbation, JVM-side transform —
-    # plan-stable (no randomness) and dimension-agnostic.
-    twin_vec = F.transform(
-        "embedding",
-        lambda x, i: (
-            x
-            * (
-                F.lit(1.0)
-                + F.lit(noise)
-                * F.when(i % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
-            )
-        ).cast("float"),
-    )
-    planted = seeds.select(
-        (-(F.col("vec_id") + 1)).alias("vec_id"), twin_vec.alias("embedding")
-    )
-    augmented = base.unionByName(planted)
+    seeds, augmented = _plant_twins(embeddings, n_planted, noise)
     pairs = embed_neardup(
         augmented,
         threshold=threshold,
         bands=bands,
         bits_per_band=bits_per_band,
     )
-    recovered = pairs.filter(
-        (F.col("vec_id_a") == -(F.col("vec_id_b") + 1))
-        & (F.col("vec_id_b") < n_planted)
-        & (F.col("vec_id_b") >= 0)
-    )
-    n_rec = recovered.agg(
-        F.count_distinct("vec_id_b").alias("n_recovered")
-    )
-    n_pl = seeds.agg(F.count(F.lit(1)).alias("n_planted"))
-    return n_pl.crossJoin(n_rec).select(
-        "n_planted",
-        "n_recovered",
-        (F.col("n_recovered") == F.col("n_planted")).alias("all_found"),
-    )
+    return _twin_recovery(pairs, seeds, n_planted)
 
 
 def embed_quantize(embeddings: DataFrame) -> DataFrame:
@@ -710,6 +741,66 @@ def train_pq_codebooks(
     return books
 
 
+def _unit(v) -> np.ndarray:
+    """One vector as a unit numpy vector."""
+    v = np.asarray(v, dtype=float)
+    return v / max(np.linalg.norm(v), 1e-12)
+
+
+def _pq_encode(
+    x: np.ndarray, books: np.ndarray, sub: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(codes, err) of the rows of ``x``: the nearest codeword of each
+    ``sub``-dim subspace, and the summed squared distance to them."""
+    codes = np.zeros((len(x), len(books)), dtype="int32")
+    err = np.zeros(len(x))
+    for s, book in enumerate(books):
+        xs = x[:, s * sub : (s + 1) * sub]
+        d2 = ((xs[:, None, :] - book[None, :, :]) ** 2).sum(axis=2)
+        codes[:, s] = np.argmin(d2, axis=1).astype("int32")
+        err += d2[np.arange(len(x)), codes[:, s]]
+    return codes, err
+
+
+def _pq_lut(books: np.ndarray, v: np.ndarray, sub: int) -> list[list[float]]:
+    """A probe's ADC lookup table: the dot product of each subspace of
+    ``v`` with every codeword of that subspace."""
+    return [(book @ v[s * sub : (s + 1) * sub]).tolist() for s, book in enumerate(books)]
+
+
+def _adc_found(cand: DataFrame, top_k: int) -> DataFrame:
+    """1 row ``n_found``: the probes whose planted twin ranks in the
+    ADC top-``top_k`` of their candidate rows (probe_id, lut, vec_id,
+    codes). The score is pure JVM,
+    ``aggregate(zip_with(codes, lut, (c, l) -> l[c]))``."""
+    adc = cand.withColumn(
+        "score",
+        F.round(
+            F.aggregate(
+                F.zip_with("codes", "lut", lambda c, l: l[c]),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ),
+            6,
+        ),
+    )
+    # Ties break toward LOWER vec_ids: if a fixture regime change (e.g.
+    # clustered embeddings) collapses twin and background vectors to
+    # identical PQ codes, their ADC scores tie exactly — and the twin
+    # (negative vec_id, always the lowest) must still rank inside
+    # top-k. A tied twin IS a correct retrieval; without this the
+    # boolean would flip on fixture distribution, not on an engine bug.
+    w = Window.partitionBy("probe_id").orderBy(
+        F.col("score").desc(), F.col("vec_id").asc()
+    )
+    return (
+        adc.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= top_k)
+        .filter(F.col("vec_id") == -(F.col("probe_id") + 1))
+        .agg(F.count_distinct("probe_id").alias("n_found"))
+    )
+
+
 def embed_pq_check(
     embeddings: DataFrame,
     m: int = PQ_SUBSPACES,
@@ -789,35 +880,11 @@ def embed_pq_check(
     )
     books = train_pq_codebooks(embeddings, m=m, k=k, sample_mat=sample_mat)
 
-    # Same deterministic twin construction as embed_neardup_check.
-    base = embeddings.select("vec_id", "embedding")
-    seeds = base.filter(F.col("vec_id") < n_planted)
-    twin_vec = F.transform(
-        "embedding",
-        lambda x, i: (
-            x
-            * (
-                F.lit(1.0)
-                + F.lit(noise)
-                * F.when(i % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
-            )
-        ).cast("float"),
-    )
-    augmented = base.unionByName(
-        seeds.select((-(F.col("vec_id") + 1)).alias("vec_id"), twin_vec.alias("embedding"))
-    )
+    seeds, augmented = _plant_twins(embeddings, n_planted, noise)
 
     @F.pandas_udf("struct<codes: array<int>, err: double>")
     def encode(vecs: pd.Series) -> pd.DataFrame:
-        x = np.stack(vecs.to_numpy()).astype(float)
-        x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-        codes = np.zeros((len(x), m), dtype="int32")
-        err = np.zeros(len(x))
-        for s in range(m):
-            xs = x[:, s * sub : (s + 1) * sub]
-            d2 = ((xs[:, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
-            codes[:, s] = np.argmin(d2, axis=1).astype("int32")
-            err += d2[np.arange(len(x)), codes[:, s]]
+        codes, err = _pq_encode(_unit_rows(vecs), books, sub)
         return pd.DataFrame({"codes": list(codes), "err": err})
 
     encoded = materialize(
@@ -834,47 +901,18 @@ def embed_pq_check(
     # Per-probe ADC lookup tables from the bounded probe rows already
     # pulled above (O(n_planted) driver rows — corpus-size-independent,
     # like the codebook training itself).
-    probe_rows = [r for r in pulled if r.vec_id < n_planted]
-    luts = []
-    for r in probe_rows:
-        v = np.asarray(r.v, dtype=float)
-        v = v / max(np.linalg.norm(v), 1e-12)
-        lut = [
-            (books[s] @ v[s * sub : (s + 1) * sub]).tolist() for s in range(m)
-        ]
-        luts.append((r.vec_id, lut))
+    luts = [
+        (r.vec_id, _pq_lut(books, _unit(r.v), sub))
+        for r in pulled
+        if r.vec_id < n_planted
+    ]
     spark = embeddings.sparkSession
     probes = spark.createDataFrame(luts, "probe_id long, lut array<array<double>>")
-
-    adc = (
-        encoded.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .withColumn(
-            "score",
-            F.round(
-                F.aggregate(
-                    F.zip_with("codes", "lut", lambda c, l: l[c]),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ),
-        )
-    )
-    # Ties break toward LOWER vec_ids: if a fixture regime change (e.g.
-    # clustered embeddings) collapses twin and background vectors to
-    # identical PQ codes, their ADC scores tie exactly — and the twin
-    # (negative vec_id, always the lowest) must still rank inside
-    # top-k. A tied twin IS a correct retrieval; without this the
-    # boolean would flip on fixture distribution, not on an engine bug.
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    found = (
-        adc.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= top_k)
-        .filter(F.col("vec_id") == -(F.col("probe_id") + 1))
-        .agg(F.count_distinct("probe_id").alias("n_found"))
+    found = _adc_found(
+        encoded.crossJoin(F.broadcast(probes)).filter(
+            F.col("vec_id") != F.col("probe_id")
+        ),
+        top_k,
     )
     n_pl = seeds.agg(F.count(F.lit(1)).alias("n_planted"))
     return stats.crossJoin(n_pl).crossJoin(found).select(
@@ -929,35 +967,13 @@ def ann_ivfpq_check(
     cmat = train_ivf_centroids(embeddings, n_centroids=n_centroids)
     books = train_pq_codebooks(embeddings, m=m, k=k)
 
-    base = embeddings.select("vec_id", "embedding")
-    seeds = base.filter(F.col("vec_id") < n_planted)
-    twin_vec = F.transform(
-        "embedding",
-        lambda x, i: (
-            x
-            * (
-                F.lit(1.0)
-                + F.lit(noise)
-                * F.when(i % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
-            )
-        ).cast("float"),
-    )
-    augmented = base.unionByName(
-        seeds.select(
-            (-(F.col("vec_id") + 1)).alias("vec_id"), twin_vec.alias("embedding")
-        )
-    )
+    seeds, augmented = _plant_twins(embeddings, n_planted, noise)
 
     @F.pandas_udf("struct<cell: int, codes: array<int>>")
     def encode(vecs: pd.Series) -> pd.DataFrame:
-        x = np.stack(vecs.to_numpy()).astype(float)
-        x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+        x = _unit_rows(vecs)
         cell = np.argmax(x @ cmat.T, axis=1).astype("int32")
-        codes = np.zeros((len(x), m), dtype="int32")
-        for s in range(m):
-            xs = x[:, s * sub : (s + 1) * sub]
-            d2 = ((xs[:, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
-            codes[:, s] = np.argmin(d2, axis=1).astype("int32")
+        codes, _ = _pq_encode(x, books, sub)
         return pd.DataFrame({"cell": cell, "codes": list(codes)})
 
     encoded = materialize(
@@ -979,39 +995,19 @@ def ann_ivfpq_check(
     )
     routed = []
     for r in probe_rows:
-        v = np.asarray(r.v, dtype=float)
-        v = v / max(np.linalg.norm(v), 1e-12)
-        cells = np.argsort(-(cmat @ v), kind="stable")[:nprobe]
-        lut = [(books[s] @ v[s * sub : (s + 1) * sub]).tolist() for s in range(m)]
-        for c in cells:
+        v = _unit(r.v)
+        lut = _pq_lut(books, v, sub)
+        for c in np.argsort(-(cmat @ v), kind="stable")[:nprobe]:
             routed.append((int(r.vec_id), int(c), lut))
     spark = embeddings.sparkSession
     probes = spark.createDataFrame(
         routed, "probe_id long, probe_cell int, lut array<array<double>>"
     )
-
-    cand = encoded.join(
-        F.broadcast(probes), encoded.cell == probes.probe_cell
-    ).filter(F.col("vec_id") != F.col("probe_id"))
-    adc = cand.withColumn(
-        "score",
-        F.round(
-            F.aggregate(
-                F.zip_with("codes", "lut", lambda c, l: l[c]),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
+    found = _adc_found(
+        encoded.join(F.broadcast(probes), encoded.cell == probes.probe_cell).filter(
+            F.col("vec_id") != F.col("probe_id")
         ),
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    found = (
-        adc.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= top_k)
-        .filter(F.col("vec_id") == -(F.col("probe_id") + 1))
-        .agg(F.count_distinct("probe_id").alias("n_found"))
+        top_k,
     )
     n_pl = seeds.agg(F.count(F.lit(1)).alias("n_planted"))
     return n_pl.crossJoin(found).select(
@@ -1104,16 +1100,9 @@ def semdedup(
 
     Returns (vec_id_a, vec_id_b, sim) with vec_id_a < vec_id_b.
     """
-    cmat = train_ivf_centroids(embeddings, n_centroids=n_centroids)
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def nearest_cells(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy()).astype(float)
-        mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        sims = mat @ cmat.T
-        order = np.argsort(-sims, axis=1, kind="stable")
-        return pd.Series(list(order[:, :nprobe].astype("int32")))
-
+    nearest_cells = _nearest_cells_udf(
+        train_ivf_centroids(embeddings, n_centroids=n_centroids), nprobe
+    )
     assigned = embeddings.select(
         "vec_id",
         as_double("embedding").alias("vec"),
@@ -1157,34 +1146,9 @@ def semdedup_check(
     by top-2 multi-assignment). The oracle demands n_recovered =
     n_planted and all_found TRUE.
     """
-    base = embeddings.select("vec_id", "embedding")
-    seeds = base.filter(F.col("vec_id") < n_planted)
-    twin_vec = F.transform(
-        "embedding",
-        lambda x, i: (
-            x
-            * (
-                F.lit(1.0)
-                + F.lit(noise)
-                * F.when(i % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
-            )
-        ).cast("float"),
-    )
-    planted = seeds.select(
-        (-(F.col("vec_id") + 1)).alias("vec_id"), twin_vec.alias("embedding")
-    )
-    pairs = semdedup(base.unionByName(planted), threshold=threshold)
-    recovered = pairs.filter(
-        (F.col("vec_id_a") == -(F.col("vec_id_b") + 1))
-        & (F.col("vec_id_b") < n_planted)
-        & (F.col("vec_id_b") >= 0)
-    )
-    n_rec = recovered.agg(F.count_distinct("vec_id_b").alias("n_recovered"))
-    n_pl = seeds.agg(F.count(F.lit(1)).alias("n_planted"))
-    return n_pl.crossJoin(n_rec).select(
-        "n_planted",
-        "n_recovered",
-        (F.col("n_recovered") == F.col("n_planted")).alias("all_found"),
+    seeds, augmented = _plant_twins(embeddings, n_planted, noise)
+    return _twin_recovery(
+        semdedup(augmented, threshold=threshold), seeds, n_planted
     )
 
 

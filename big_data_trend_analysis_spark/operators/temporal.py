@@ -19,6 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DateType, DoubleType, IntegerType, LongType,
+    StringType, StructField, StructType,
+)
 from pyspark.sql.window import Window
 
 from big_data_trend_analysis_spark.functions.numeric import exact_sum
@@ -614,6 +618,16 @@ HOLT_ALPHA = "0.5"
 HOLT_BETA = "0.3"
 
 
+#: Leading fields of the Holt family's per-(event_type, day) output.
+_HOLT_FIELDS = [
+    StructField("event_type", StringType()),
+    StructField("day", DateType()),
+    StructField("y", DoubleType()),
+    StructField("level", DoubleType()),
+    StructField("trend", DoubleType()),
+]
+
+
 def holt_linear_forecast(events: DataFrame) -> DataFrame:
     """Holt double-exponential smoothing of each type's daily counts.
 
@@ -643,23 +657,11 @@ def holt_linear_forecast(events: DataFrame) -> DataFrame:
     """
     import pandas as pd
 
-    from pyspark.sql.types import (
-        DateType,
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     daily = _daily_counts(events)
 
     schema = StructType(
         [
-            StructField("event_type", StringType()),
-            StructField("day", DateType()),
-            StructField("y", DoubleType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
+            *_HOLT_FIELDS,
             StructField("one_step_ahead", DoubleType()),
         ]
     )
@@ -751,23 +753,11 @@ def holt_winters_dow(events: DataFrame, period: int = 7) -> DataFrame:
     """
     import pandas as pd
 
-    from pyspark.sql.types import (
-        DateType,
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     daily = _daily_counts(events)
 
     schema = StructType(
         [
-            StructField("event_type", StringType()),
-            StructField("day", DateType()),
-            StructField("y", DoubleType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
+            *_HOLT_FIELDS,
             StructField("seasonal", DoubleType()),
             StructField("one_step_ahead", DoubleType()),
         ]
@@ -882,15 +872,6 @@ def croston_intermittent(
     forecast).
     """
     import pandas as pd
-
-    from pyspark.sql.types import (
-        DateType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
     demand = (
         events.filter(F.col("value") >= demand_threshold)
@@ -1226,14 +1207,6 @@ def markov_steady_state(events: DataFrame, iters: int = 15) -> DataFrame:
 
     import pandas as pd
 
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     trans = event_transitions(events)
     schema = StructType(
         [
@@ -1303,16 +1276,6 @@ def theta_method_forecast(events: DataFrame) -> DataFrame:
     theta_y, level, fc_next).
     """
     import pandas as pd
-
-    from pyspark.sql.types import (
-        DateType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
     daily = _daily_counts(events)
     w_t = Window.partitionBy("event_type").orderBy("day")

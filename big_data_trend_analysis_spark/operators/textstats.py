@@ -143,6 +143,35 @@ def quality_filter(documents: DataFrame, min_quality: float = 0.55) -> DataFrame
     return profiled.filter(F.col("quality") >= min_quality)
 
 
+def _pack(counts: DataFrame, token_budget: int, n_buckets: int) -> DataFrame:
+    """(doc_id, bucket, n_toks, local_seq, seq_id) from per-document
+    token counts (doc_id, n_toks): documents hash into ``n_buckets``
+    streams by doc_id, and each starts in sequence
+    floor(exclusive running token sum / ``token_budget``) of its
+    bucket."""
+    toks = counts.select(
+        "doc_id",
+        "n_toks",
+        F.pmod(F.col("doc_id"), F.lit(n_buckets)).alias("bucket"),
+    )
+    w = Window.partitionBy("bucket").orderBy("doc_id")
+    cum = toks.withColumn(
+        "cum_before",
+        F.coalesce(
+            F.sum("n_toks").over(w.rowsBetween(Window.unboundedPreceding, -1)),
+            F.lit(0),
+        ),
+    )
+    return cum.select(
+        "doc_id",
+        "bucket",
+        "n_toks",
+        F.floor(F.col("cum_before") / F.lit(token_budget)).alias("local_seq"),
+        (F.col("bucket") * F.lit(1_000_000)
+         + F.floor(F.col("cum_before") / F.lit(token_budget))).alias("seq_id"),
+    )
+
+
 def pack_sequences(
     documents: DataFrame,
     token_budget: int = 512,
@@ -164,26 +193,10 @@ def pack_sequences(
     driver. Sequence ids are (bucket, local_seq), globally unique and
     deterministic.
     """
-    toks = documents.select(
-        "doc_id",
-        n_tokens("text").alias("n_toks"),
-        F.pmod(F.col("doc_id"), F.lit(n_buckets)).alias("bucket"),
-    )
-    w = Window.partitionBy("bucket").orderBy("doc_id")
-    cum = toks.withColumn(
-        "cum_before",
-        F.coalesce(
-            F.sum("n_toks").over(w.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    )
-    return cum.select(
-        "doc_id",
-        "bucket",
-        "n_toks",
-        F.floor(F.col("cum_before") / F.lit(token_budget)).alias("local_seq"),
-        (F.col("bucket") * F.lit(1_000_000)
-         + F.floor(F.col("cum_before") / F.lit(token_budget))).alias("seq_id"),
+    return _pack(
+        documents.select("doc_id", n_tokens("text").alias("n_toks")),
+        token_budget,
+        n_buckets,
     )
 
 
@@ -1024,28 +1037,8 @@ def pack_sequences_bpe(
         doc_words.join(encoded.select("w", "tpw"), "w")
         .groupBy("doc_id")
         .agg(F.sum(F.col("tpw").cast("long")).alias("n_toks"))
-        .select(
-            "doc_id",
-            "n_toks",
-            F.pmod(F.col("doc_id"), F.lit(n_buckets)).alias("bucket"),
-        )
     )
-    w = Window.partitionBy("bucket").orderBy("doc_id")
-    cum = counts.withColumn(
-        "cum_before",
-        F.coalesce(
-            F.sum("n_toks").over(w.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    )
-    return cum.select(
-        "doc_id",
-        "bucket",
-        "n_toks",
-        F.floor(F.col("cum_before") / F.lit(token_budget)).alias("local_seq"),
-        (F.col("bucket") * F.lit(1_000_000)
-         + F.floor(F.col("cum_before") / F.lit(token_budget))).alias("seq_id"),
-    )
+    return _pack(counts, token_budget, n_buckets)
 
 
 def group_entropy(documents: DataFrame) -> DataFrame:

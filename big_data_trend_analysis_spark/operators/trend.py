@@ -11,8 +11,8 @@ topics, keyword frequency"), re-expressed distributed:
 ``streaming_decay_trend`` is the flagship (SURVEY §7.1): the
 reference's entire semantic pipeline (scan → JSON parse → conditional
 score → decay weight → windowed agg → order) as one deterministic batch
-query; ``streaming/decay_trend.py`` re-triggers the same plan as a
-Structured Streaming job.
+query; ``streaming/jobs.decay_trend_stream`` runs the same aggregation
+as a Structured Streaming job.
 """
 
 from __future__ import annotations
@@ -95,6 +95,15 @@ def streaming_decay_trend(
     it is oracle-covered too. Decimal-summed → deterministic under any
     partitioning.
     """
+    return _decay_trend(events, anchor, window_width).orderBy(
+        "window_start", "event_type"
+    )
+
+
+def _decay_trend(events: DataFrame, anchor: str, window_width: str) -> DataFrame:
+    """The flagship's windowed aggregation, unordered: the batch query
+    orders it, and ``streaming/jobs.decay_trend_stream`` runs it over a
+    watermarked stream."""
     parsed = events.withColumn(
         "props_k",
         F.from_json("props", "struct<k:int>").getField("k"),
@@ -123,7 +132,6 @@ def streaming_decay_trend(
             "decayed_k",
             "n_events",
         )
-        .orderBy("window_start", "event_type")
     )
 
 

@@ -159,30 +159,11 @@ def window_distribution(events: DataFrame) -> DataFrame:
     )
 
 
-def gapfill_locf(events: DataFrame, width: str = "10 minutes") -> DataFrame:
-    """Gap-filled per-type bucket series with last-observation-carried-forward.
-
-    The ``time_bucket_gapfill`` pattern (TimescaleDB) the reference's
-    Grafana dashboards implicitly depend on: a trend chart needs a row
-    for EVERY bucket, not just buckets with events — missing counts
-    become 0 and the running measure carries the last observed value
-    forward. Per (event_type, bucket):
-
-    - the bucket SPINE is generated with ``sequence(lo, hi, width)``
-      exploded per type — a tiny broadcast (types × 1-row bounds), no
-      shuffle of the fact table beyond the one aggregation;
-    - actual buckets left-join onto the spine (equi-join on
-      type+bucket);
-    - ``n_events`` fills with 0; ``sum_value_locf`` fills by
-      ``last(…, ignorenulls=True)`` over the ordered per-type window —
-      one additional shuffle on event_type, sized to |buckets|, not
-      |events|.
-
-    At 100 TB the spine is still |types × buckets| rows (thousands),
-    so gap-filling costs the same as the rollup it decorates. The
-    oracle recomputes the spine with ``generate_series`` and LOCF with
-    ``last_value(… IGNORE NULLS)`` — exact equality.
-    """
+def _gapfill_spine(events: DataFrame, width: str) -> DataFrame:
+    """(event_type, bucket, n_events, sum_value) for EVERY ``width``
+    bucket between the first and last observed one, per type: the
+    actual rollup left-joined onto a ``sequence(lo, hi, width)`` spine
+    (NULL measures in a gap)."""
     # The bucket relation is referenced three times (bounds, the type
     # spine, the actuals join). Per-branch column pruning makes each
     # branch's aggregation exchange DIFFERENT, so Spark's ReuseExchange
@@ -209,7 +190,34 @@ def gapfill_locf(events: DataFrame, width: str = "10 minutes") -> DataFrame:
             ).alias("bucket"),
         )
     )
-    joined = spine.join(daily, ["event_type", "bucket"], "left")
+    return spine.join(daily, ["event_type", "bucket"], "left")
+
+
+def gapfill_locf(events: DataFrame, width: str = "10 minutes") -> DataFrame:
+    """Gap-filled per-type bucket series with last-observation-carried-forward.
+
+    The ``time_bucket_gapfill`` pattern (TimescaleDB) the reference's
+    Grafana dashboards implicitly depend on: a trend chart needs a row
+    for EVERY bucket, not just buckets with events — missing counts
+    become 0 and the running measure carries the last observed value
+    forward. Per (event_type, bucket):
+
+    - the bucket SPINE is generated with ``sequence(lo, hi, width)``
+      exploded per type — a tiny broadcast (types × 1-row bounds), no
+      shuffle of the fact table beyond the one aggregation;
+    - actual buckets left-join onto the spine (equi-join on
+      type+bucket);
+    - ``n_events`` fills with 0; ``sum_value_locf`` fills by
+      ``last(…, ignorenulls=True)`` over the ordered per-type window —
+      one additional shuffle on event_type, sized to |buckets|, not
+      |events|.
+
+    At 100 TB the spine is still |types × buckets| rows (thousands),
+    so gap-filling costs the same as the rollup it decorates. The
+    oracle recomputes the spine with ``generate_series`` and LOCF with
+    ``last_value(… IGNORE NULLS)`` — exact equality.
+    """
+    joined = _gapfill_spine(events, width)
     w = (
         Window.partitionBy("event_type")
         .orderBy("bucket")
@@ -376,29 +384,7 @@ def gapfill_linear(events: DataFrame, width: str = "10 minutes") -> DataFrame:
     of epoch seconds, so both engines interpolate bit-identically
     after the 6-dp round.
     """
-    daily = materialize(
-        events.groupBy(F.window("ts", width).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            exact_sum("value").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("bucket"), "event_type", "n_events", "sum_value"
-        )
-    )
-    bounds = daily.agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))
-    spine = (
-        daily.select("event_type")
-        .distinct()
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            "event_type",
-            F.explode(
-                F.sequence("lo", "hi", F.expr(f"interval {width}"))
-            ).alias("bucket"),
-        )
-    )
-    joined = spine.join(daily, ["event_type", "bucket"], "left")
+    joined = _gapfill_spine(events, width)
     wp = (
         Window.partitionBy("event_type")
         .orderBy("bucket")

@@ -449,9 +449,7 @@ def _run_stream_join_drain(
     from big_data_trend_analysis_spark.streaming.sources import stream_events
 
     return drain_available_now(
-        purchases_after_signup(
-            stream_events(spark, sf_dir), streaming=True, join_type=join_type
-        )
+        purchases_after_signup(stream_events(spark, sf_dir), join_type=join_type)
     ).table
 
 
@@ -2614,42 +2612,18 @@ def _stateful_decay_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stateful_decay_live_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship stateful drain on the Spark 4 state stack (VERDICT r6 #3).
 
-    Same SPLIT-stream multi-batch drain, ``applyInPandasWithState``
-    recurrence and token-recurrence oracle as ``stateful_decay_live``,
-    but on the **RocksDB state store provider** — disk-backed keyed
-    state that scales past executor heap, the 100 TB posture for
-    billions of live keys (the HDFS-backed default keeps every key
-    on-heap).
+    ``stateful_decay_live`` — the same SPLIT-stream multi-batch drain,
+    ``applyInPandasWithState`` recurrence and token-recurrence oracle —
+    on the **RocksDB state store provider**: disk-backed keyed state
+    that scales past executor heap, the 100 TB posture for billions of
+    live keys (the HDFS-backed default keeps every key on-heap). The
+    provider is set on the query's own child session.
     """
-    from pyspark.sql import functions as F
-
-    from big_data_trend_analysis_spark.streaming.sources import (
-        stream_documents_batched,
-    )
-    from big_data_trend_analysis_spark.streaming.stateful import (
-        decayed_token_scores,
-        tokens_from_text_stream,
-    )
-
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    updates = drain_available_now(
-        decayed_token_scores(
-            tokens_from_text_stream(stream_documents_batched(spark, sf_dir))
-        ),
-        "update",
-    ).table
-    return (
-        updates.groupBy("token")
-        .agg(
-            F.round(F.max_by("decayed_score", "total_count"), 6).alias(
-                "decayed_score"
-            ),
-            F.max("total_count").alias("total_count"),
-        )
-    )
+    return _stateful_decay_live(spark, sf_dir)
 
 
 def _running_counts_live(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -118,7 +118,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     schema, nanos = _resolved_schema(spark, path)
-    df = spark.read.schema(schema).parquet(path)
+    return _nanos_to_micros(spark.read.schema(schema).parquet(path), nanos)
+
+
+def _nanos_to_micros(df: DataFrame, nanos: tuple[str, ...]) -> DataFrame:
+    """``df`` with each long-nanosecond column of ``nanos`` (read as
+    long under a ``_resolved_schema``) restored to a microsecond
+    TIMESTAMP."""
     for col in nanos:
         df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
     return df

@@ -20,9 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from big_data_trend_analysis_spark.functions.decay import DEFAULT_ANCHOR, decay_weight
-from big_data_trend_analysis_spark.functions.numeric import rounded_sum
-from big_data_trend_analysis_spark.functions.scoring import event_type_score
+from big_data_trend_analysis_spark.functions.decay import DEFAULT_ANCHOR
+from big_data_trend_analysis_spark.operators.trend import _decay_trend
+from big_data_trend_analysis_spark.operators.windows import window_session
+from big_data_trend_analysis_spark.streaming.stateful import tokens_from_text_stream
 
 
 def decay_trend_stream(
@@ -33,58 +34,31 @@ def decay_trend_stream(
 ) -> DataFrame:
     """Watermarked streaming version of the flagship decay trend.
 
-    Same expressions as ``operators/trend.streaming_decay_trend`` (the
-    oracle-checked batch twin), plus an event-time watermark bounding
-    window state: windows older than the watermark are finalized and
-    evicted — the property that lets this run forever at 100 TB/day.
+    The aggregation of ``operators/trend.streaming_decay_trend`` (the
+    oracle-checked batch query) over the input watermarked on ``ts``:
+    windows older than the watermark are finalized and evicted — the
+    property that lets this run forever at 100 TB/day.
     """
-    watermarked = events.withWatermark("ts", watermark)
-    parsed = watermarked.withColumn(
-        "props_k", F.from_json("props", "struct<k:int>").getField("k")
-    )
-    scored = parsed.select(
-        "ts",
-        "event_type",
-        event_type_score("event_type").alias("score"),
-        decay_weight("ts", anchor).alias("weight"),
-        "props_k",
-    )
-    return (
-        scored.groupBy(F.window("ts", window_width).alias("w"), "event_type")
-        .agg(
-            rounded_sum(F.col("weight") * F.col("score")).alias("decayed_score"),
-            rounded_sum(F.col("weight") * F.col("props_k").cast("double")).alias(
-                "decayed_k"
-            ),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "decayed_score",
-            "decayed_k",
-            "n_events",
-        )
-    )
+    return _decay_trend(events.withWatermark("ts", watermark), anchor, window_width)
 
 
 def purchases_after_signup(
     events: DataFrame,
     within: str = "INTERVAL 2 HOURS",
     watermark: str = "4 hours",
-    streaming: bool = True,
     join_type: str = "inner",
 ) -> DataFrame:
     """Stream-stream join: purchases within 2 h after the user's signup.
 
     Both sides carry watermarks and the join condition bounds event-time
     distance, so Spark can size the join state and evict expired rows —
-    the requirements for an unbounded stream-stream join. With
-    ``streaming=False`` the same expression runs in batch (the parity
-    twin; tested equal). ``join_type="left_outer"`` adds the unmatched
-    side: a purchase with no in-window signup emits with null ``s_ts``
-    once the watermark proves no match can still arrive — the join mode
-    conversion-gap analyses need (who bought WITHOUT a recent signup).
+    the requirements for an unbounded stream-stream join. On a batch
+    input the same expression is the batch join (Spark drops a
+    watermark from a batch plan; tested equal to the stream).
+    ``join_type="left_outer"`` adds the unmatched side: a purchase with
+    no in-window signup emits with null ``s_ts`` once the watermark
+    proves no match can still arrive — the join mode conversion-gap
+    analyses need (who bought WITHOUT a recent signup).
     """
     purchases = events.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("p_user"),
@@ -95,11 +69,8 @@ def purchases_after_signup(
         F.col("user_id").alias("s_user"),
         F.col("ts").alias("s_ts"),
     )
-    if streaming:
-        purchases = purchases.withWatermark("p_ts", watermark)
-        signups = signups.withWatermark("s_ts", watermark)
-    joined = purchases.join(
-        signups,
+    joined = purchases.withWatermark("p_ts", watermark).join(
+        signups.withWatermark("s_ts", watermark),
         F.expr(
             f"p_user = s_user AND p_ts >= s_ts AND p_ts <= s_ts + {within}"
         ),
@@ -240,21 +211,12 @@ def session_counts_stream(
     mergeable window per (user, open session) in the state store,
     EXTENDS/MERGES it as events arrive within ``gap``, and finalizes it
     once the watermark passes session_end + gap — bounded state, exact
-    sessionization over an unbounded stream. The batch twin is
+    sessionization over an unbounded stream. It is
     ``operators/windows.window_session`` (oracle-checked
-    gaps-and-islands); streaming and batch agree because session
-    merging is order-insensitive.
+    gaps-and-islands) over the watermarked input; streaming and batch
+    agree because session merging is order-insensitive.
     """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-        )
-    )
+    return window_session(events.withWatermark("ts", watermark), gap)
 
 
 def running_keyword_counts(texts: DataFrame, text_col: str = "text") -> DataFrame:
@@ -268,7 +230,7 @@ def running_keyword_counts(texts: DataFrame, text_col: str = "text") -> DataFram
     Use with outputMode("update")/("complete") sinks.
     """
     return (
-        texts.select(F.explode(F.split(F.col(text_col), " ")).alias("token"))
+        tokens_from_text_stream(texts, text_col)
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -286,38 +248,16 @@ def trending_topk_counts(
     over an updating aggregate — state holds counts, the dashboard
     ranks), which is exactly how a streaming leaderboard serves.
 
-    State-retention caveat (ADVICE r9): complete mode forbids
-    watermarks, so every (window, type) cell ever seen stays in the
-    state store — state grows with ELAPSED windows, unbounded over a
-    long-running job. Fine for a gate drain or a bounded backfill;
-    the production serve shape is ``trending_topk_counts_watermarked``
-    below, whose update-mode watermark expires closed windows.
+    State-retention caveat (ADVICE r9): complete mode keeps every
+    (window, type) cell ever seen in the state store — state grows
+    with ELAPSED windows, unbounded over a long-running job. Fine for
+    a gate drain or a bounded backfill; the production serve shape
+    runs this over ``events.withWatermark("ts", delay)`` in update
+    mode, where the state store expires windows older than the
+    watermark and the serve side upserts cells by (window_start,
+    event_type).
     """
     return events.groupBy(
         F.window("ts", window_width).getField("start").alias("window_start"),
         "event_type",
     ).agg(F.count(F.lit(1)).alias("n_events"))
-
-
-def trending_topk_counts_watermarked(
-    events: DataFrame,
-    window_width: str = "1 day",
-    watermark_delay: str = "1 day",
-) -> DataFrame:
-    """``trending_topk_counts`` with BOUNDED state — the long-running
-    production variant (ADVICE r9): a ``withWatermark`` on the event
-    time lets update-mode sinks receive per-batch cell deltas while
-    the state store EXPIRES windows older than
-    max(event time) − ``watermark_delay``, so state holds only the
-    open trailing windows instead of every window since job start.
-    The serve side upserts cells by (window_start, event_type) and
-    ranks at read time exactly as in the complete-mode shape.
-    """
-    return (
-        events.withWatermark("ts", watermark_delay)
-        .groupBy(
-            F.window("ts", window_width).getField("start").alias("window_start"),
-            "event_type",
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )

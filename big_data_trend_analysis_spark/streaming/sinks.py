@@ -141,24 +141,6 @@ def kafka_sink_options(bootstrap_servers: str, topic: str) -> dict[str, str]:
     return {"kafka.bootstrap.servers": bootstrap_servers, "topic": topic}
 
 
-def kafka_json_writer(
-    bootstrap_servers: str,
-    topic: str,
-) -> WriteFn:
-    """Kafka producer sink (reference K2: JSON-serialized rows → topic).
-
-    JSON serialization happens executor-side (``serialize_for_kafka``),
-    one producer per partition. Requires the spark-sql-kafka connector
-    jar.
-    """
-    options = kafka_sink_options(bootstrap_servers, topic)
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        serialize_for_kafka(batch_df).write.format("kafka").options(**options).save()
-
-    return write
-
-
 def parquet_append_writer(path: str) -> WriteFn:
     """Test/lakehouse sink: append the batch to a parquet directory.
 

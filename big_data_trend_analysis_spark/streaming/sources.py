@@ -22,6 +22,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from big_data_trend_analysis_spark.sources.tables import _nanos_to_micros, _resolved_schema
+
 #: Tweet message schema (FIXTURES.md A.1). The reference declares
 #: ``entities: array<struct<>>`` which silently nulls every entity
 #: (SURVEY §1.2 schema bug); we declare array<string>, matching what
@@ -127,56 +129,22 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``readStream`` on the same parquet the batch path reads — the
     standard pattern for replay/backfill on a real deployment (the
-    100 TB analog streams a date-partitioned directory). Handles both
-    timestamp storages the driver has generated (TIMESTAMP(NANOS) and
-    naive TIMESTAMP(MICROS)) exactly like ``sources/tables.py``.
+    100 TB analog streams a date-partitioned directory). It reads with
+    the catalog's cached schema of the file
+    (``sources/tables._resolved_schema``), so both timestamp storages
+    the driver has generated come out as ``load_table`` gives them: that
+    schema declares a TIMESTAMP(NANOS) column long, which the file
+    source hands over as nanoseconds (converted to microseconds here),
+    and a naive TIMESTAMP(MICROS) column as the LTZ TIMESTAMP it
+    declares. No conf of the caller's session is set.
     """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    # The driver has generated events.ts as TIMESTAMP(NANOS) in some
-    # rounds and naive TIMESTAMP(MICROS) in others. Probe the footer
-    # (metadata only, no data read) and pick the matching read path so
-    # event times are correct either way.
-    ts_type = next(
-        f.type
-        for f in pq.read_schema(os.path.join(sf_dir, "events.parquet"))
-        if f.name == "ts"
-    )
-    nanos = pa.types.is_timestamp(ts_type) and ts_type.unit == "ns"
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # ts arrives as long nanoseconds (nanosAsLong), converted below.
-        ts_ddl = "ts long"
-    else:
-        # Explicit TimestampType schema: naive micros read as LTZ (UTC
-        # session), same as sources/tables.load_table's batch read.
-        ts_ddl = "ts timestamp"
-    ddl = f"event_id long, {ts_ddl}, user_id long, event_type string, value double, props string"
+    schema, nanos = _resolved_schema(spark, os.path.join(sf_dir, "events.parquet"))
     raw = (
-        spark.readStream.schema(ddl)
+        spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(os.path.join(sf_dir))
     )
-    if nanos:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw
-
-
-def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-based streaming source over the documents table.
-
-    The replay twin of ``sources/tables.load_table(..., "documents")``
-    — feeds the cumulative-state streaming jobs (running token counts)
-    the same rows the batch oracle reads. No timestamp column, so no
-    nanos handling needed.
-    """
-    ddl = "doc_id long, text string, lang string, source string, n_chars long"
-    return (
-        spark.readStream.schema(ddl)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(os.path.join(sf_dir))
-    )
+    return _nanos_to_micros(raw, nanos)
 
 
 #: Micro-batch count for the split documents stream. Kept small and

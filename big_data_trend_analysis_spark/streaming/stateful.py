@@ -47,6 +47,31 @@ STATE_SCHEMA = StructType(
 )
 
 
+def _advance(
+    state: GroupState, batches: Iterable[pd.DataFrame], decay: float
+) -> tuple[float, int]:
+    """Fold one micro-batch into a key's state: score ← score·decay +
+    batch_count, total ← total + batch_count. Returns the new state."""
+    batch_count = sum(len(pdf) for pdf in batches)
+    score, total = state.get if state.exists else (0.0, 0)
+    score = score * decay + batch_count
+    total = total + batch_count
+    state.update((score, total))
+    return score, total
+
+
+def _score_row(key: tuple, score: float, total: int, **extra: list) -> pd.DataFrame:
+    """One output row (token, decayed_score, total_count, *extra)."""
+    return pd.DataFrame(
+        {
+            "token": [key[0]],
+            "decayed_score": [float(score)],
+            "total_count": [int(total)],
+            **extra,
+        }
+    )
+
+
 def decayed_token_scores(
     tokens: DataFrame,
     decay: float = 0.9,
@@ -64,18 +89,7 @@ def decayed_token_scores(
     def update(
         key: tuple, batches: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        batch_count = sum(len(pdf) for pdf in batches)
-        score, total = state.get if state.exists else (0.0, 0)
-        score = score * decay + batch_count
-        total = total + batch_count
-        state.update((score, total))
-        yield pd.DataFrame(
-            {
-                "token": [key[0]],
-                "decayed_score": [float(score)],
-                "total_count": [int(total)],
-            }
-        )
+        yield _score_row(key, *_advance(state, batches, decay))
 
     return (
         tokens.groupBy(token_col)
@@ -128,29 +142,11 @@ def expiring_token_scores(
         if state.hasTimedOut:
             score, total = state.get
             state.remove()
-            yield pd.DataFrame(
-                {
-                    "token": [key[0]],
-                    "decayed_score": [float(score)],
-                    "total_count": [int(total)],
-                    "expired": [True],
-                }
-            )
+            yield _score_row(key, score, total, expired=[True])
         else:
-            batch_count = sum(len(pdf) for pdf in batches)
-            score, total = state.get if state.exists else (0.0, 0)
-            score = score * decay + batch_count
-            total = total + batch_count
-            state.update((score, total))
+            score, total = _advance(state, batches, decay)
             state.setTimeoutDuration(ttl_ms)
-            yield pd.DataFrame(
-                {
-                    "token": [key[0]],
-                    "decayed_score": [float(score)],
-                    "total_count": [int(total)],
-                    "expired": [False],
-                }
-            )
+            yield _score_row(key, score, total, expired=[False])
 
     return tokens.groupBy(token_col).applyInPandasWithState(
         update,

@@ -130,21 +130,20 @@ def test_incremental_dedup_exact_beats_near(spark):
     assert out[11] == ("keep", None)
 
 
-def test_trending_topk_watermarked_is_stateful_with_watermark(spark, tmp_path):
-    """The production variant carries an event-time watermark (state
-    expiry) and drains in update mode — the complete-mode shape's
+def test_trending_topk_watermarked_is_stateful_with_watermark(spark, sf_dir, tmp_path):
+    """The production serve shape — ``trending_topk_counts`` over a
+    watermarked input — carries an event-time watermark (state expiry)
+    and drains in update mode: the complete-mode shape's
     unbounded-state caveat does not apply."""
     import uuid
 
-    from big_data_trend_analysis_spark.streaming.jobs import (
-        trending_topk_counts_watermarked,
-    )
+    from big_data_trend_analysis_spark.streaming.jobs import trending_topk_counts
     from big_data_trend_analysis_spark.streaming.sources import (
         stream_events_batched,
     )
 
-    stream = trending_topk_counts_watermarked(
-        stream_events_batched(spark, "/root/testdata/sf0.001")
+    stream = trending_topk_counts(
+        stream_events_batched(spark, sf_dir).withWatermark("ts", "1 day")
     )
     assert stream.isStreaming
     plan = stream._jdf.queryExecution().analyzed().toString()

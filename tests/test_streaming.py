@@ -163,7 +163,7 @@ def test_windowed_cms_stream_probe_matches_exact(spark, sf_dir):
 
 def test_stream_stream_join_parity(spark, sf_dir, tmp_path):
     """Watermarked stream-stream join must equal the batch join."""
-    stream_out = purchases_after_signup(stream_events(spark, sf_dir), streaming=True)
+    stream_out = purchases_after_signup(stream_events(spark, sf_dir))
     query = (
         stream_out.writeStream.format("memory")
         .queryName("ss_join")
@@ -177,9 +177,7 @@ def test_stream_stream_join_parity(spark, sf_dir, tmp_path):
     batch = sorted(
         map(
             tuple,
-            purchases_after_signup(
-                load_table(spark, sf_dir, "events"), streaming=False
-            ).collect(),
+            purchases_after_signup(load_table(spark, sf_dir, "events")).collect(),
         )
     )
     assert streamed == batch
@@ -473,6 +471,45 @@ def test_events_readers_handle_both_timestamp_storages(spark, sf_dir, tmp_path):
             (r.event_id, r.ts) for r in spark.table(name).collect()
         )
         assert streamed == batches[unit], unit
+
+
+def test_stream_events_keeps_the_callers_nanos_conf(spark, tmp_path):
+    """``stream_events`` over a TIMESTAMP(NANOS) file reads with the
+    catalog's cached schema: a session whose
+    ``spark.sql.legacy.parquet.nanosAsLong`` is false keeps it false
+    after the drain, and the streamed event times equal
+    ``load_table``'s."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = [
+        dt.datetime(2024, 1, 1, 0, 0, 0, 123456),
+        dt.datetime(2024, 3, 9, 23, 59, 59, 999999),
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(ts, pa.timestamp("ns")),
+                "user_id": pa.array([10, 20], pa.int64()),
+                "event_type": pa.array(["click", "view"]),
+                "value": pa.array([1.5, 2.5], pa.float64()),
+                "props": pa.array(["{}", "{}"]),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    session = spark.newSession()
+    session.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    drained = drain_available_now(stream_events(session, str(tmp_path))).table
+    streamed = sorted((r.event_id, r.ts) for r in drained.collect())
+
+    assert session.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false"
+    batch = load_table(session, str(tmp_path), "events")
+    assert streamed == sorted((r.event_id, r.ts) for r in batch.collect())
+    assert [t for _, t in streamed] == ts
 
 
 def test_checkpoint_restart_recovers_state_and_position(spark, sf_dir, tmp_path):
@@ -785,9 +822,7 @@ def test_stream_stream_left_outer_join_parity(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src))
     )
-    out = purchases_after_signup(
-        augmented_stream, streaming=True, join_type="left_outer"
-    )
+    out = purchases_after_signup(augmented_stream, join_type="left_outer")
     query = (
         out.writeStream.format("memory")
         .queryName("ss_outer")
@@ -809,9 +844,7 @@ def test_stream_stream_left_outer_join_parity(spark, sf_dir, tmp_path):
     batch = sorted(
         map(
             tuple,
-            purchases_after_signup(
-                events, streaming=False, join_type="left_outer"
-            ).collect(),
+            purchases_after_signup(events, join_type="left_outer").collect(),
         ),
         key=str,
     )
