@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from big_data_trend_analysis_spark import scope
+
 WriteFn = Callable[[DataFrame, int], None]
 
 
@@ -227,27 +229,40 @@ def foreach_batch_with_errors(
     ``processing_errors`` table writer) and the stream keeps running —
     reference semantics (edw_stream.py:124-136). Empty batches are
     skipped (reference F1 empty-batch guard).
+
+    The batch is held once (``scope.materialize``, in a scope of its
+    own) and the empty-batch guard and the write both read the held
+    batch, so its plan runs once. Each action on an unheld batch re-runs
+    its plan; for a stateful query that is the state stage, whose
+    progress then counts ``numRowsUpdated``, ``numRowsTotal`` and
+    ``commitTimeMs`` once per run. The scope is released when the batch
+    is done, also when the writer raises.
     """
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        try:
-            write(batch_df, batch_id)
-        except Exception as exc:  # noqa: BLE001 - side-channel by design
-            if on_error is None:
-                raise
-            error_row = batch_df.sparkSession.createDataFrame(
-                [
-                    (
-                        batch_id,
-                        f"{exc}\n{traceback.format_exc(limit=3)}",
-                        datetime.datetime.now(datetime.timezone.utc),
+        with scope.opened() as made:
+            try:
+                held = scope.materialize(batch_df)
+                if held.isEmpty():
+                    return
+                try:
+                    write(held, batch_id)
+                except Exception as exc:  # noqa: BLE001 - side-channel by design
+                    if on_error is None:
+                        raise
+                    error_row = held.sparkSession.createDataFrame(
+                        [
+                            (
+                                batch_id,
+                                f"{exc}\n{traceback.format_exc(limit=3)}",
+                                datetime.datetime.now(datetime.timezone.utc),
+                            )
+                        ],
+                        "batch_id long, error string, error_time timestamp",
                     )
-                ],
-                "batch_id long, error string, error_time timestamp",
-            )
-            on_error(error_row, batch_id)
+                    on_error(error_row, batch_id)
+            finally:
+                made.release()
 
     return handle
 
